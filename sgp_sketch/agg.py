@@ -413,7 +413,11 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
                         if tg is not None:
                             tg = tg[mask]
                     if vc not in stats_cache:
-                        if single:
+                        if single and flat.size == 0:
+                            # no tokens → no state, as in the grouped and
+                            # numeric branches
+                            stats_cache[vc] = {}
+                        elif single:
                             uniq, ucounts = _unique_counts(flat)
                             h = hash64(uniq.astype(np.uint64, copy=False))
                             stats_cache[vc] = {present[0]: (

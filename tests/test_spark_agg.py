@@ -492,3 +492,21 @@ def test_quantiles_per_key_zero_values(spark):
         exact = dd.DD(alpha=0.01).update(sub["v"].to_numpy())
         assert got[k] == exact.quantiles([0.5])[0], k
     assert got["z"] == 0.0
+
+
+@pytest.mark.parametrize("kind", ["hll", "theta", "cms", "bloom", "mg",
+                                  "cs", "kll"])
+def test_group_without_tokens_emits_no_state(spark, kind):
+    """A group whose rows are all empty or null token arrays gets no
+    state row, whether or not it shares its Arrow batch with another
+    group (a lone group used to get an n_items=0 row for hash kinds)."""
+    alone = spark.createDataFrame(
+        [("a", []), ("a", None), ("a", [])],
+        "source string, tokens array<long>").repartition(1)
+    assert agg.sketch_agg(alone, kind, "tokens").collect() == []
+    mixed = spark.createDataFrame(
+        [("a", []), ("a", None), ("b", [1, 2, 2])],
+        "source string, tokens array<long>").repartition(1)
+    got = {r["source"]: r["n_items"]
+           for r in agg.sketch_agg(mixed, kind, "tokens").collect()}
+    assert got == {"b": 3}
