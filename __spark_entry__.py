@@ -2107,8 +2107,8 @@ def q_checkpoint_resume_replay(spark, sf_dir):
     (n_items lineage metric — EXACT, the oracle recomputes it as
     SUM(len(string_split))) plus two invariant flags the oracle pins to
     1: resumed-state byte-equality and exactly-one-skipped-slice. This
-    upgrades the S4/M4 resumability component (checkpoint.py:161
-    slice_complete, :236 build_checkpointed) from pytest-only to
+    upgrades the S4/M4 resumability component (checkpoint.slice_complete,
+    checkpoint.build_checkpointed) from pytest-only to
     driver-adjudicated. Memoized per sf_dir (pure recompute)."""
     import shutil
 

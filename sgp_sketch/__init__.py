@@ -13,7 +13,7 @@ sketch-shard routing.
 
 Layout:
     kernels/   pure-numpy sketch kernels (no pyspark import)
-    agg.py     Spark aggregation layer (mapInPandas / applyInPandas / tree merge)
+    agg.py     Spark aggregation layer (mapInArrow partials / applyInPandas tree merge)
     routing.py shard routers: hash, salted, LDG, Fennel
     queries.py user-facing query API over the sketch tables
     datagen.py deterministic synthetic `tokens` table generator

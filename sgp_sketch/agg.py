@@ -4,7 +4,7 @@ merge to one blob per group.
 Execution shape (the partial+final split Spark applies to built-in
 aggregates, made explicit for our binary states — SURVEY.md §2.4):
 
-  read → [mapInPandas] one partial state per (partition × group)   (map-side
+  read → [mapInArrow] one partial state per (partition × group)    (map-side
          combine: the analog of the reference's per-partition counters,
          `/root/reference/src/main/java/ca/uwaterloo/cs/sgp/streaming/EdgeCutSGP.java:28-31`)
        → [applyInPandas rounds] binary-tree merge over part_id buckets,
@@ -20,8 +20,8 @@ Grouping-cardinality tradeoff: the partial model shines for low-cardinality
 group keys (sources, days). For high-cardinality keys the partial count is
 #partitions × #groups; sparse blob encoding (HLL sparse mode, CMS/Bloom COO)
 keeps small per-group states at KBs, but beyond ~10^5 groups per partition
-prefer the raw-shuffle groupBy path — at that point each group's data is
-small enough that shuffling it raw is the cheaper plan.
+prefer the raw-row key shuffle of `sketch_agg_bykey` — at that point each
+group's data is small enough that shuffling it raw is the cheaper plan.
 
 All kernels run vectorized numpy over Arrow batches; no per-row Python in the
 scan path (BASELINE.json input_hint).
@@ -39,27 +39,6 @@ from .kernels.hashing import hash64
 PARTIAL_SCHEMA_TAIL = ("sketch_type string, state binary, n_items long, "
                        "part_id long")
 
-_NUMERIC_KINDS = {"kll", "tdigest", "dd", "moments"}
-
-
-def _extract_values(col, numeric: bool) -> np.ndarray:
-    """Series of scalars or of token arrays → one flat numpy array.
-
-    Integer token arrays keep their native width (int32 for datagen tables)
-    — the batch prep sorts this array, and halving the element size halves
-    the dominant memory traffic of the scan path."""
-    vals = col.to_numpy()
-    if vals.dtype == object:  # array<int> column: Arrow gives object ndarray
-        nonempty = [v for v in vals if v is not None and len(v)]
-        if not nonempty:
-            return np.empty(0, dtype=np.float64 if numeric else np.int64)
-        flat = np.concatenate(nonempty)
-    else:
-        flat = vals[~np.isnan(vals)] if vals.dtype.kind == "f" else vals
-    if numeric:
-        return flat.astype(np.float64)
-    return flat if flat.dtype.kind in "iu" else flat.astype(np.int64)
-
 
 def _unique_counts(flat: np.ndarray):
     """np.unique(return_counts) with a bincount fast path for dense bounded
@@ -75,92 +54,6 @@ def _unique_counts(flat: np.ndarray):
                 uniq = np.flatnonzero(counts)
                 return uniq.astype(flat.dtype, copy=False), counts[uniq]
     return np.unique(flat, return_counts=True)
-
-
-def _prep_tokens(flat: np.ndarray):
-    """Shared batch prep for the hash-sketch kinds: one dedupe pass and one
-    hash pass over the *unique* values, reused by every sketch built
-    from the same column. Equivalent to per-item updates because HLL/Bloom
-    are idempotent and CMS takes (hash, count) deltas."""
-    uniq, counts = _unique_counts(flat)
-    return uniq, counts, hash64(uniq.astype(np.uint64, copy=False))
-
-
-def _update(state, kind: str, flat: np.ndarray, prep=None):
-    if kind in _NUMERIC_KINDS:
-        state.update(flat)
-        return state
-    if kind in ("hll", "cms", "bloom", "theta", "mg", "cs"):
-        uniq, counts, h = prep if prep is not None else _prep_tokens(flat)
-        if kind == "mg":
-            state.update(uniq, counts)
-        elif kind in ("cms", "cs"):
-            state.update_hashes(h, counts=counts)
-        elif kind == "bloom":
-            state.update_hashes(h, assume_unique=True, n_raw=flat.size)
-        else:  # hll / theta: idempotent, deduped hash batch
-            state.update_hashes(h, assume_unique=True)
-        return state
-    state.update(flat.astype(np.int64).view(np.uint64)
-                 if flat.dtype == np.int64 else flat)
-    return state
-
-
-def build_partials(df, kind: str, value_col: str, group_cols=("source",),
-                   params: dict | None = None):
-    """One partial sketch per (input partition × group) via mapInPandas.
-
-    Returns DataFrame: group_cols..., sketch_type, state, n_items, part_id.
-    """
-    from pyspark import TaskContext
-
-    params = params or {}
-    group_cols = list(group_cols)
-    numeric = kind in _NUMERIC_KINDS
-    in_schema = df.schema
-    group_fields = ", ".join(
-        f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-    out_schema = (group_fields + ", " if group_fields else "") + PARTIAL_SCHEMA_TAIL
-
-    needed = group_cols + [value_col]
-
-    def acc(iterator):
-        import pandas as pd
-
-        states: dict[tuple, object] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in iterator:
-            if group_cols:
-                # dropna=False: null group keys get their own sketch slot
-                # (matching the Arrow path) instead of silently dropping
-                # every row whose key is null
-                grouped = pdf.groupby(group_cols, sort=False, dropna=False)
-            else:
-                grouped = [((), pdf)]
-            for gkey, sub in grouped:
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = tuple(None if pd.isna(k) else k for k in gkey)
-                flat = _extract_values(sub[value_col], numeric)
-                if flat.size == 0:
-                    continue
-                st = states.get(gkey)
-                if st is None:
-                    st = registry.make(kind, **params)
-                    states[gkey] = st
-                    counts[gkey] = 0
-                _update(st, kind, flat)
-                counts[gkey] += flat.size
-        if not states:
-            return
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for gkey, st in states.items():
-            rows.append((*gkey, kind, st.to_bytes(), counts[gkey], pid))
-        yield pd.DataFrame(rows, columns=group_cols + [
-            "sketch_type", "state", "n_items", "part_id"])
-
-    return df.select(*needed).mapInPandas(acc, out_schema), out_schema
 
 
 def _merge_fn(group_cols):
@@ -204,16 +97,21 @@ def tree_merge(partials, out_schema: str, group_cols=("source",),
     return df
 
 
+def single_spec(kind: str, value_col: str,
+                params: dict | None = None) -> dict:
+    """The one-entry `specs` dict for a single-kind build; the spec is
+    named after its kind."""
+    return {kind: {"kind": kind, "value_col": value_col,
+                   "params": params or {}}}
+
+
 def sketch_agg(df, kind: str, value_col: str, group_cols=("source",),
                params: dict | None = None, fanin: int = 64):
     """End-to-end: partials → tree merge → one blob row per group.
 
-    Delegates to the Arrow scan path (build_partials_multi) with a single
-    spec; the legacy pandas build_partials stays for callers needing it."""
-    merged = multi_sketch_agg(
-        df, {kind: {"kind": kind, "value_col": value_col,
-                    "params": params or {}}},
-        group_cols, fanin=fanin)
+    `multi_sketch_agg` with a single spec."""
+    merged = multi_sketch_agg(df, single_spec(kind, value_col, params),
+                              group_cols, fanin=fanin)
     return merged.drop("sketch")
 
 
@@ -247,14 +145,16 @@ def sketch_agg_bykey(df, kind: str, value_col: str, key_cols=("key",),
     the partition's raw data, same as any built-in hash aggregate."""
     rep = (df.repartition(num_partitions, *key_cols) if num_partitions
            else df.repartition(*key_cols))
-    # the pandas accumulator beats the Arrow packed-sort path here
-    # (measured 2x on 300k keys x 337 tokens, warm): with MANY SMALL
-    # groups a hash groupby + per-group vector ops wins over sorting
-    # every token by (group, token) per batch — the Arrow path's packed
-    # np.unique is tuned for few groups x many tokens, the opposite shape
-    partials, _schema = build_partials(rep, kind, value_col,
-                                       list(key_cols), params)
-    return partials.drop("part_id")
+    # the same one-spec Arrow build as sketch_agg, minus the merge. On a
+    # 4-core box (local[4], warm, medians of 3 alternating runs) it beat
+    # the pandas groupby accumulator it replaced on every per-key shape
+    # measured, many small groups included: theta per doc over 8k docs'
+    # token lists 0.80 s vs 1.04 s; theta and DD per user over 400k rows
+    # / 20k keys 3.6 s vs 6.1 s and 5.0 s vs 8.6 s; theta over 221k keys
+    # (~1.8 rows each) 7.0 s vs 11.6 s
+    partials, _schema = build_partials_multi(
+        rep, single_spec(kind, value_col, params), key_cols)
+    return partials.drop("sketch", "part_id")
 
 
 def _batch_columns(batch, group_cols):

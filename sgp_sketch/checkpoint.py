@@ -8,12 +8,24 @@ file slice**, because in Spark the atomic durability boundary is the job
 commit (output committer), not the task. A build over S slices = S jobs; a
 crash between jobs loses at most one slice's work.
 
-Layout under `ckpt_dir/`:
-    slices/<slice_id>/           parquet: group_cols…, sketch_type, state,
-                                 n_items, part_id  (one blob row per group)
-    slices/<slice_id>.lineage.json   {slice_id, files, n_rows, n_items,
-                                 state_sha256 per group, seconds, engine conf}
-    metrics.jsonl                one line per built slice (appended)
+Single-kind builds (`build_checkpointed`, `build_slice`, `finalize`) are
+the `_multi` builds with one spec named after the kind, so both write the
+same layout under `ckpt_dir/`:
+    slices/<slice_id>/           parquet: group_cols…, sketch (spec name),
+                                 sketch_type, state, n_items — one blob
+                                 row per (group × spec)
+    slices/<slice_id>.lineage.json   {version, slice_id, index, files,
+                                 specs {name: {kind, value_col, params}},
+                                 group_cols, groups [{group, sketch,
+                                 n_items, state_sha256}], n_items, seconds}
+    manifest.json                {version, input_path, specs, group_cols,
+                                 n_slices, built, skipped, slice_ids}
+    metrics.jsonl                one line per built slice (appended):
+                                 {slice_id, sketches, n_items, seconds,
+                                 n_files}
+
+A lineage whose version, files, specs or group_cols differ from the
+current build is not reused: that slice is rebuilt.
 
 Associativity of the kernels is what makes slice-wise builds equal to a
 single-pass build — asserted byte-exactly for HLL/CMS/Bloom in tests.
@@ -27,7 +39,7 @@ import time
 
 from . import agg
 
-_LINEAGE_VERSION = 1
+_LINEAGE_VERSION = 2
 
 
 def _fs_path(spark, path: str):
@@ -161,9 +173,9 @@ def _lineage_path(ckpt_dir: str, sid: str) -> str:
 def slice_complete(spark, ckpt_dir: str, sl: dict,
                    expect: dict | None = None) -> bool:
     """True iff the slice's checkpoint exists AND was built under the same
-    configuration. `expect` maps lineage keys (sketch_type, params,
-    group_cols) to required values — without it a resumed build with a
-    changed sketch kind/params would silently reuse stale blobs."""
+    configuration. `expect` maps lineage keys (specs, group_cols) to
+    required values — without it a resumed build with a changed sketch
+    kind/params would silently reuse stale blobs."""
     lp = _lineage_path(ckpt_dir, sl["slice_id"])
     if not _fs_exists(spark, lp):
         return False
@@ -185,7 +197,39 @@ def slice_complete(spark, ckpt_dir: str, sl: dict,
 def build_slice(spark, sl: dict, kind: str, value_col: str, group_cols,
                 params: dict | None, ckpt_dir: str, prepare=None,
                 base_path: str | None = None) -> dict:
-    """Build + persist one slice's per-group blobs; returns its lineage.
+    """`build_slice_multi` with a single spec named after `kind`."""
+    return build_slice_multi(spark, sl, agg.single_spec(kind, value_col,
+                                                        params),
+                             group_cols, ckpt_dir, prepare=prepare,
+                             base_path=base_path)
+
+
+def build_checkpointed(spark, input_path: str, kind: str, value_col: str,
+                       group_cols=("source",), params: dict | None = None,
+                       ckpt_dir: str = "./ckpt", files_per_slice: int = 8,
+                       prepare=None) -> dict:
+    """`build_checkpointed_multi` with a single spec named after `kind`;
+    call `finalize` for the merged per-group blob DataFrame."""
+    return build_checkpointed_multi(
+        spark, input_path, agg.single_spec(kind, value_col, params),
+        group_cols, ckpt_dir=ckpt_dir, files_per_slice=files_per_slice,
+        prepare=prepare)
+
+
+def _spec_record(specs: dict) -> dict:
+    """`specs` as lineage and manifest record them: {name: {kind,
+    value_col, params}}, params defaulting to {}."""
+    return {n: {"kind": s["kind"], "value_col": s["value_col"],
+                "params": s.get("params") or {}}
+            for n, s in specs.items()}
+
+
+def build_slice_multi(spark, sl: dict, specs: dict, group_cols,
+                      ckpt_dir: str, prepare=None,
+                      base_path: str | None = None) -> dict:
+    """Build + persist one slice's blobs, ALL sketches in one scan
+    (multi_sketch_agg); returns its lineage. Checkpoint granularity costs
+    one read per slice, not one per (slice × sketch).
 
     `base_path` (the table root) lets Spark recover hive-partition columns
     (e.g. source=...) when reading individual data files of a partitioned
@@ -197,99 +241,10 @@ def build_slice(spark, sl: dict, kind: str, value_col: str, group_cols,
     df = reader.parquet(*sl["files"])
     if prepare is not None:
         df = prepare(df)
-    blobs = agg.sketch_agg(df, kind, value_col, group_cols, params)
-    sdir = _slice_dir(ckpt_dir, sl["slice_id"])
-    blobs.write.mode("overwrite").parquet(sdir)
-    # lineage from what was actually written (read-back keeps it honest)
-    written = spark.read.parquet(sdir).collect()
-    groups = []
-    for r in written:
-        d = r.asDict()
-        groups.append({
-            "group": {c: d[c] for c in group_cols},
-            "n_items": int(d["n_items"]),
-            "state_sha256": hashlib.sha256(bytes(d["state"])).hexdigest(),
-        })
-    lineage = {
-        "version": _LINEAGE_VERSION,
-        "slice_id": sl["slice_id"],
-        "index": sl["index"],
-        "files": sl["files"],
-        "sketch_type": kind,
-        "params": params or {},
-        "group_cols": list(group_cols),
-        "groups": sorted(groups, key=lambda g: json.dumps(g["group"],
-                                                          sort_keys=True)),
-        "n_items": sum(g["n_items"] for g in groups),
-        "seconds": round(time.perf_counter() - t0, 3),
-    }
-    _fs_write_text(spark, _lineage_path(ckpt_dir, sl["slice_id"]),
-                   json.dumps(lineage, indent=1))
-    _append_jsonl(spark, _join(ckpt_dir, "metrics.jsonl"),
-                  {"slice_id": sl["slice_id"], "kind": kind,
-                   "n_items": lineage["n_items"],
-                   "seconds": lineage["seconds"],
-                   "n_files": len(sl["files"])})
-    return lineage
-
-
-def build_checkpointed(spark, input_path: str, kind: str, value_col: str,
-                       group_cols=("source",), params: dict | None = None,
-                       ckpt_dir: str = "./ckpt", files_per_slice: int = 8,
-                       prepare=None) -> dict:
-    """Resumable build: skip slices whose lineage matches, build the rest.
-
-    `prepare` (optional) maps the raw slice DataFrame to the sketch input
-    (e.g. documents → tokens). Returns a summary dict; call `finalize` for
-    the merged per-group blob DataFrame.
-    """
-    _fs_mkdirs(spark, _join(ckpt_dir, "slices"))
-    files = list_input_files(spark, input_path)
-    if not files:
-        raise FileNotFoundError(f"no parquet data files under {input_path}")
-    # basePath (hive-partition recovery) is only legal for directory inputs
-    fs, p = _fs_path(spark, input_path)
-    base = input_path if not fs.isFile(p) else None
-    slices = plan_slices(files, files_per_slice)
-    expect = {"sketch_type": kind, "params": params or {},
-              "group_cols": list(group_cols)}
-    skipped, built = [], []
-    for sl in slices:
-        if slice_complete(spark, ckpt_dir, sl, expect=expect):
-            skipped.append(sl["slice_id"])
-            continue
-        build_slice(spark, sl, kind, value_col, group_cols, params,
-                    ckpt_dir, prepare=prepare, base_path=base)
-        built.append(sl["slice_id"])
-    manifest = {
-        "version": _LINEAGE_VERSION,
-        "input_path": input_path,
-        "kind": kind, "value_col": value_col,
-        "group_cols": list(group_cols), "params": params or {},
-        "n_slices": len(slices), "built": built, "skipped": skipped,
-        "slice_ids": [s["slice_id"] for s in slices],
-    }
-    _fs_write_text(spark, _join(ckpt_dir, "manifest.json"),
-                   json.dumps(manifest, indent=1))
-    return manifest
-
-
-def build_slice_multi(spark, sl: dict, specs: dict, group_cols,
-                      ckpt_dir: str, prepare=None,
-                      base_path: str | None = None) -> dict:
-    """One slice, ALL sketches in one scan (multi_sketch_agg): the
-    production shape — checkpoint granularity costs one read per slice, not
-    one per (slice × sketch)."""
-    t0 = time.perf_counter()
-    reader = spark.read
-    if base_path:
-        reader = reader.option("basePath", base_path)
-    df = reader.parquet(*sl["files"])
-    if prepare is not None:
-        df = prepare(df)
     blobs = agg.multi_sketch_agg(df, specs, group_cols)
     sdir = _slice_dir(ckpt_dir, sl["slice_id"])
     blobs.write.mode("overwrite").parquet(sdir)
+    # lineage from what was actually written (read-back keeps it honest)
     written = spark.read.parquet(sdir).collect()
     groups = []
     for r in written:
@@ -304,10 +259,7 @@ def build_slice_multi(spark, sl: dict, specs: dict, group_cols,
         "version": _LINEAGE_VERSION,
         "slice_id": sl["slice_id"], "index": sl["index"],
         "files": sl["files"],
-        "sketch_type": "multi",
-        "params": {n: s.get("params") or {} for n, s in specs.items()},
-        "specs": {n: {"kind": s["kind"], "value_col": s["value_col"]}
-                  for n, s in specs.items()},
+        "specs": _spec_record(specs),
         "group_cols": list(group_cols),
         "groups": sorted(groups, key=lambda g: (
             g["sketch"], json.dumps(g["group"], sort_keys=True))),
@@ -317,7 +269,7 @@ def build_slice_multi(spark, sl: dict, specs: dict, group_cols,
     _fs_write_text(spark, _lineage_path(ckpt_dir, sl["slice_id"]),
                    json.dumps(lineage, indent=1))
     _append_jsonl(spark, _join(ckpt_dir, "metrics.jsonl"),
-                  {"slice_id": sl["slice_id"], "kind": "multi",
+                  {"slice_id": sl["slice_id"], "sketches": list(specs),
                    "n_items": lineage["n_items"],
                    "seconds": lineage["seconds"],
                    "n_files": len(sl["files"])})
@@ -327,19 +279,21 @@ def build_slice_multi(spark, sl: dict, specs: dict, group_cols,
 def build_checkpointed_multi(spark, input_path: str, specs: dict,
                              group_cols=("source",), ckpt_dir: str = "./ckpt",
                              files_per_slice: int = 8, prepare=None) -> dict:
-    """Resumable one-scan-per-slice build of the full sketch suite."""
+    """Resumable one-scan-per-slice build: skip slices whose lineage
+    matches, build the rest.
+
+    `prepare` (optional) maps the raw slice DataFrame to the sketch input
+    (e.g. documents → tokens). Returns the manifest; call `finalize_multi`
+    for the merged per-(group × sketch) blob DataFrame."""
     _fs_mkdirs(spark, _join(ckpt_dir, "slices"))
     files = list_input_files(spark, input_path)
     if not files:
         raise FileNotFoundError(f"no parquet data files under {input_path}")
+    # basePath (hive-partition recovery) is only legal for directory inputs
     fs, p = _fs_path(spark, input_path)
     base = input_path if not fs.isFile(p) else None
     slices = plan_slices(files, files_per_slice)
-    expect = {"sketch_type": "multi",
-              "params": {n: s.get("params") or {} for n, s in specs.items()},
-              "specs": {n: {"kind": s["kind"], "value_col": s["value_col"]}
-                        for n, s in specs.items()},
-              "group_cols": list(group_cols)}
+    expect = {"specs": _spec_record(specs), "group_cols": list(group_cols)}
     skipped, built = [], []
     for sl in slices:
         if slice_complete(spark, ckpt_dir, sl, expect=expect):
@@ -350,11 +304,8 @@ def build_checkpointed_multi(spark, input_path: str, specs: dict,
         built.append(sl["slice_id"])
     manifest = {
         "version": _LINEAGE_VERSION,
-        "input_path": input_path, "kind": "multi",
-        "specs": {n: {"kind": s["kind"], "value_col": s["value_col"],
-                      "params": s.get("params") or {}}
-                  for n, s in specs.items()},
-        "group_cols": list(group_cols),
+        "input_path": input_path,
+        **expect,
         "n_slices": len(slices), "built": built, "skipped": skipped,
         "slice_ids": [s["slice_id"] for s in slices],
     }
@@ -364,16 +315,18 @@ def build_checkpointed_multi(spark, input_path: str, specs: dict,
 
 
 def finalize_multi(spark, ckpt_dir: str, group_cols=("source",)):
-    """Merged blobs per (group × sketch) from a multi-spec checkpoint."""
-    return finalize(spark, ckpt_dir,
-                    group_cols=tuple(group_cols) + ("sketch",))
-
-
-def finalize(spark, ckpt_dir: str, group_cols=("source",)):
-    """Merge all slice blobs → one blob row per group (tree of slice states;
-    each slice is itself a tree-merged state, so depth stays O(log))."""
+    """Merge all slice blobs → one blob row per (group × sketch) (tree of
+    slice states; each slice is itself a tree-merged state, so depth stays
+    O(log))."""
     manifest = json.loads(_fs_read_text(spark, _join(ckpt_dir,
                                                      "manifest.json")))
     dirs = [_slice_dir(ckpt_dir, sid) for sid in manifest["slice_ids"]]
     blobs = spark.read.parquet(*dirs)
-    return agg.merge_across(blobs, group_cols=tuple(group_cols))
+    return agg.merge_across(blobs,
+                            group_cols=tuple(group_cols) + ("sketch",))
+
+
+def finalize(spark, ckpt_dir: str, group_cols=("source",)):
+    """`finalize_multi` without the `sketch` column: one blob row per
+    group of a single-kind checkpoint."""
+    return finalize_multi(spark, ckpt_dir, group_cols).drop("sketch")

@@ -9,7 +9,7 @@ n_tok quantiles (t-digest / KLL), token membership (Bloom).
 
 Finalization (blob → number) touches one row per group — tiny — so scalar
 pandas UDFs over the blob column are fine there; the full-data scan path
-stays in agg.build_partials (vectorized numpy only).
+stays in agg.build_partials_multi (vectorized numpy over Arrow batches).
 """
 
 from __future__ import annotations

@@ -159,18 +159,25 @@ def test_incremental_sketch_update_matches_full_rebuild(spark, tmp_path):
         "bloom": {"kind": "bloom", "value_col": "tokens",
                   "params": {"n_blocks": 64}},
     }
-    state1 = agg.multi_sketch_agg(
-        catalog.load_snapshot(spark, path, version=1), specs)
-    inc = catalog.incremental_sketch_update(
-        spark, path, state1, specs, from_version=1)
-    full = agg.multi_sketch_agg(
-        catalog.load_snapshot(spark, path, version=2), specs)
 
     def keyed(df):
         return {(r.source, r.sketch): (bytes(r.state), r.n_items)
                 for r in df.collect()}
 
-    ki, kf = keyed(inc), keyed(full)
+    # cms's default conservative update is order-dependent: the full
+    # rebuild matches the incremental merge only when no scan partition
+    # holds two of a source's files. Ask for at least 8 scan splits, so
+    # each of these small files is scanned alone whatever the core count
+    try:
+        spark.conf.set("spark.sql.files.minPartitionNum", "8")
+        state1 = agg.multi_sketch_agg(
+            catalog.load_snapshot(spark, path, version=1), specs)
+        ki = keyed(catalog.incremental_sketch_update(
+            spark, path, state1, specs, from_version=1))
+        kf = keyed(agg.multi_sketch_agg(
+            catalog.load_snapshot(spark, path, version=2), specs))
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
     assert set(ki) == set(kf) and len(ki) == 9  # 3 sources x 3 sketches
     for k in kf:
         assert ki[k][1] == kf[k][1], k        # same item counts

@@ -81,11 +81,34 @@ def test_lineage_contents(spark, multi_file_input, tmp_path):
     sid = m["slice_ids"][0]
     with open(os.path.join(ckpt, "slices", f"{sid}.lineage.json")) as fh:
         lin = json.load(fh)
-    assert lin["sketch_type"] == "kll"
+    assert [s["kind"] for s in lin["specs"].values()] == ["kll"]
     assert lin["files"]
     assert lin["n_items"] > 0
     assert all(len(g["state_sha256"]) == 64 for g in lin["groups"])
     assert os.path.exists(os.path.join(ckpt, "metrics.jsonl"))
+
+
+def test_version_1_lineage_is_rebuilt(spark, multi_file_input, tmp_path):
+    """A slice whose lineage carries an older format version is rebuilt on
+    resume, never read under the current format; the rest are skipped."""
+    ckpt = str(tmp_path / "ckpt")
+    m1 = checkpoint.build_checkpointed(
+        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+        ckpt_dir=ckpt, files_per_slice=2)
+    victim = m1["slice_ids"][0]
+    path = os.path.join(ckpt, "slices", f"{victim}.lineage.json")
+    with open(path) as fh:
+        lin = json.load(fh)
+    lin["version"] = 1
+    with open(path, "w") as fh:
+        json.dump(lin, fh)
+    m2 = checkpoint.build_checkpointed(
+        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+        ckpt_dir=ckpt, files_per_slice=2)
+    assert m2["built"] == [victim]
+    assert sorted(m2["skipped"]) == sorted(m1["slice_ids"][1:])
+    with open(path) as fh:
+        assert json.load(fh)["version"] == checkpoint._LINEAGE_VERSION
 
 
 def test_ckpt_dir_uri_scheme(spark, multi_file_input, tmp_path):

@@ -66,7 +66,7 @@ EXEMPT = {
     "cosine_pairs",           # the exact all-pairs GEMM IS the vectorized
     "cosine_pairs_blocked",   # Python path (one BLAS call per partition /
                               # block pair) — see dedup.exact_cosine_pairs
-    "per_key_distinct",       # per-key sketch STATE build (mapInPandas is
+    "per_key_distinct",       # per-key sketch STATE build (mapInArrow is
                               # the operator) + estimate UDF; the oracle
                               # matches because theta is exact below k
     "per_key_quantile",       # same per-key plan with DDSketch; the oracle

@@ -119,7 +119,8 @@ def test_kernel_throughput_floor():
     below this deliberately loose floor (noisy-VM safe)."""
     import time
 
-    from sgp_sketch.agg import _prep_tokens
+    from sgp_sketch.agg import _unique_counts
+    from sgp_sketch.kernels.hashing import hash64
 
     rng = np.random.default_rng(2)
     flat = ((rng.zipf(1.2, 2_000_000) - 1) % (1 << 20)).astype(np.int32)
@@ -127,7 +128,8 @@ def test_kernel_throughput_floor():
     cms = registry.make("cms", depth=4, width=1 << 14)
     blm = registry.make("bloom", n_blocks=1 << 12)
     t0 = time.perf_counter()
-    uniq, counts, h = _prep_tokens(flat)
+    uniq, counts = _unique_counts(flat)
+    h = hash64(uniq.astype(np.uint64, copy=False))
     cms.update_hashes(h, counts=counts)
     hll.update_hashes(h, assume_unique=True)
     blm.update_hashes(h, assume_unique=True, n_raw=flat.size)

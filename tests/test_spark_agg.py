@@ -455,6 +455,34 @@ def test_sketch_agg_bykey_exact_below_k_and_partition_invariant(
         exact = len({t for row in sub["tokens"] for t in row})
         assert got[doc_id] == exact, doc_id
 
+    # edge inputs: a null key (its own row), null and empty token arrays,
+    # a key with no tokens at all (no row), and int64 scalar tokens with
+    # a null; one partition puts every key in one batch, three leave
+    # some keys alone in theirs
+    lists = [("a", [1, 2, 2]), ("a", None), ("a", []), (None, [3, 4]),
+             (None, [4, 5]), ("e", []), ("e", None), ("b", [7])]
+    scalars = [("a", 5), ("a", 5), ("a", -3), ("a", None), ("b", 1 << 40),
+               (None, 9), (None, -(1 << 62)), ("e", None)]
+    for rows, schema in ((lists, "k string, v array<long>"),
+                         (scalars, "k string, v long")):
+        pdf = pd.DataFrame(rows, columns=["k", "v"])
+        exact = {}
+        for k, sub in pdf.groupby("k", dropna=False):
+            vals = [t for v in sub["v"] if v is not None
+                    for t in (v if isinstance(v, list) else [v])
+                    if not pd.isna(t)]
+            if vals:
+                exact[None if pd.isna(k) else k] = (len(set(vals)),
+                                                    len(vals))
+        sdf = spark.createDataFrame(rows, schema)
+        for nparts in (1, 3):
+            got = {r["k"]: (round(registry.from_bytes(
+                bytes(r["state"])).estimate()), r["n_items"])
+                for r in agg.sketch_agg_bykey(
+                    sdf, "theta", "v", ("k",),
+                    num_partitions=nparts).collect()}
+            assert got == exact, (schema, nparts)
+
 
 def test_sketch_agg_bykey_moments_exact_per_key(spark, tokens_sdf,
                                                 tokens_pdf):
@@ -468,6 +496,28 @@ def test_sketch_agg_bykey_moments_exact_per_key(spark, tokens_sdf,
         xs = [int(x) for x in sub["n_tok"].tolist()]
         assert sk.n == len(xs)
         assert sk.s[3] == sum(x ** 4 for x in xs)
+
+    # edge inputs: a null key, null and NaN values (dropped), and a key
+    # with no finite value at all (no row)
+    rows = [("a", 1.0), ("a", None), ("a", float("nan")), ("a", 3.0),
+            (None, 2.0), (None, 5.0), ("e", None), ("e", float("nan"))]
+    pdf = pd.DataFrame(rows, columns=["k", "v"])
+    sdf = spark.createDataFrame(rows, "k string, v double")
+    for nparts in (1, 3):
+        got = {r["k"]: (registry.from_bytes(bytes(r["state"])), r["n_items"])
+               for r in agg.sketch_agg_bykey(
+                   sdf, "moments", "v", ("k",),
+                   num_partitions=nparts).collect()}
+        exact = {None if pd.isna(k) else k: [int(x) for x in sub["v"]
+                                             .dropna()]
+                 for k, sub in pdf.groupby("k", dropna=False)}
+        exact = {k: xs for k, xs in exact.items() if xs}
+        assert set(got) == set(exact), nparts
+        for k, xs in exact.items():
+            sk, n_items = got[k]
+            assert sk.n == n_items == len(xs), (k, nparts)
+            for p in range(1, 5):
+                assert sk.s[p - 1] == sum(x ** p for x in xs), (k, p)
 
 
 def test_quantiles_per_key_zero_values(spark):
@@ -499,7 +549,7 @@ def test_quantiles_per_key_zero_values(spark):
 def test_group_without_tokens_emits_no_state(spark, kind):
     """A group whose rows are all empty or null token arrays gets no
     state row, whether or not it shares its Arrow batch with another
-    group (a lone group used to get an n_items=0 row for hash kinds)."""
+    group."""
     alone = spark.createDataFrame(
         [("a", []), ("a", None), ("a", [])],
         "source string, tokens array<long>").repartition(1)
