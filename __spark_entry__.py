@@ -1659,7 +1659,7 @@ def q_hll_register_replay(spark, sf_dir):
     (queries.hll_register_table) and re-derived by the oracle from raw
     event_ids via the exact splitmix64 + clz convention of
     kernels/hll.py:_codes_from_hashes. Adjudicates update, canonical
-    max-per-idx, partial merge AND the merge_across global path —
+    max-per-idx, partial merge AND the tree_merge global path —
     byte-level state equality, not an error-bound bracket."""
     from functools import reduce
 
@@ -1677,7 +1677,7 @@ def q_hll_register_replay(spark, sf_dir):
     for p in (6, 12):
         leg = blobs.filter(F.col("sketch") == f"p{p}").drop("sketch")
         per = Q.hll_register_table(leg, ("grp",))
-        gl = (Q.hll_register_table(agg.merge_across(leg, group_cols=()), ())
+        gl = (Q.hll_register_table(agg.tree_merge(leg, group_cols=()), ())
               .withColumn("grp", F.lit("__all__")))
         for df in (per, gl):
             outs.append(df.withColumn("p", F.lit(p))
@@ -1711,7 +1711,7 @@ def q_theta_kmv_replay(spark, sf_dir):
     for k in (16, 4096):
         leg = blobs.filter(F.col("sketch") == f"k{k}").drop("sketch")
         per = Q.theta_summary_table(leg, ("grp",))
-        gl = (Q.theta_summary_table(agg.merge_across(leg, group_cols=()),
+        gl = (Q.theta_summary_table(agg.tree_merge(leg, group_cols=()),
                                     ())
               .withColumn("grp", F.lit("__all__")))
         for df in (per, gl):

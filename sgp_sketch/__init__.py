@@ -12,13 +12,19 @@ the reference's streaming edge-assignment algorithms (hash / LDG / Fennel,
 sketch-shard routing.
 
 Layout:
-    kernels/   pure-numpy sketch kernels (no pyspark import)
-    agg.py     Spark aggregation layer (mapInArrow partials / applyInPandas tree merge)
-    routing.py shard routers: hash, salted, LDG, Fennel
-    queries.py user-facing query API over the sketch tables
-    datagen.py deterministic synthetic `tokens` table generator
-    checkpoint.py  per-partition lineage + resumable builds
-    operators/ training-data pipeline ops (dedup, similarity, text, multimodal)
+    kernels/      pure-numpy sketch kernels (no pyspark import)
+    agg.py        Spark aggregation layer: the one sketch build (a
+                  mapInArrow scan) and the one blob merge (tree_merge)
+    matrix.py     Frequent Directions over embedding columns (agg build)
+    queries.py    user-facing query API over the sketch tables
+    streaming.py  Structured Streaming builds over the same blobs
+    checkpoint.py per-slice lineage + resumable builds
+    catalog.py    table resolution and incremental blob updates
+    routing.py    shard routers: hash, salted, LDG, Fennel
+    datagen.py    deterministic synthetic `tokens` table generator
+    dedup.py, text.py, bpe.py, temporal.py, stats.py, graph.py,
+    multimodal.py, pipeline.py
+                  training-data pipeline operators
 """
 
 __version__ = "0.1.0"

@@ -4,12 +4,19 @@ merge to one blob per group.
 Execution shape (the partial+final split Spark applies to built-in
 aggregates, made explicit for our binary states — SURVEY.md §2.4):
 
-  read → [mapInArrow] one partial state per (partition × group)    (map-side
-         combine: the analog of the reference's per-partition counters,
-         `/root/reference/src/main/java/ca/uwaterloo/cs/sgp/streaming/EdgeCutSGP.java:28-31`)
-       → [applyInPandas rounds] binary-tree merge over part_id buckets,
-         O(log_fanin P) shuffle rounds of KB-sized blobs
-       → one row per (group, sketch_type).
+  read → [mapInArrow] one partial state per (partition × group × spec)
+         (map-side combine: the analog of the reference's per-partition
+         counters, `/root/reference/src/main/java/ca/uwaterloo/cs/sgp/streaming/EdgeCutSGP.java:28-31`)
+       → [applyInPandas rounds] `tree_merge`: FANIN-ary tree over part_id
+         buckets, O(log_FANIN P) shuffle rounds of KB-sized blobs
+       → one row per (group, sketch).
+
+`build_partials_multi` is the only sketch builder: hash kinds (hll, cms,
+bloom, theta, mg, cs) over token lists or integer columns, numeric kinds
+(kll, tdigest, dd, moments) over scalar columns, and Frequent Directions
+over fixed-length vector columns. `tree_merge` is the only blob merge: it
+finishes a build, and it re-aggregates existing blob tables to a coarser
+grouping (per-source → global, streamed batches, checkpoint slices).
 
 Why not groupBy(group).applyInPandas over raw rows: that shuffles ALL input
 bytes to as many tasks as there are groups (8 sources ⇒ 8 tasks for 100 TB).
@@ -38,6 +45,28 @@ from .kernels.hashing import hash64
 
 PARTIAL_SCHEMA_TAIL = ("sketch_type string, state binary, n_items long, "
                        "part_id long")
+
+# blobs merged by one task in one tree-merge round
+FANIN = 64
+
+
+def _schema_prefix(schema, cols) -> str:
+    """DDL fields ("a string, b int, ") for `cols` of a Spark schema —
+    the group-column head of a grouped UDF's output schema."""
+    return "".join(f"{c} {schema[c].dataType.simpleString()}, "
+                   for c in cols)
+
+
+def _group_arrays(schema, cols, values: dict) -> list:
+    """Arrow arrays for the group columns of an output batch, typed as
+    the Spark schema declares them: inference would give int64 for an
+    int32 group column, and Spark's Arrow reader then fails on the width
+    mismatch ("Cannot call getInt") only when a query groups by it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return [pa.array(values[c], type=to_arrow_type(schema[c].dataType))
+            for c in cols]
 
 
 def _unique_counts(flat: np.ndarray):
@@ -69,32 +98,50 @@ def _merge_fn(group_cols):
     return merge
 
 
-def tree_merge(partials, out_schema: str, group_cols=("source",),
-               n_parts: int | None = None, fanin: int = 64):
-    """Binary-tree (fanin-ary) merge rounds over part_id buckets.
+def _merge_rounds(df, keys, merge, schema: str,
+                  n_parts: int | None = None):
+    """Tree-merge rounds of `merge` (a grouped-map function) over part_id
+    buckets of `df`, keyed by `keys` + part_id. `n_parts` (the partial
+    count upper bound = input partition count) sets the round count
+    driver-side, without a counting job; omitted, the merge is one round.
+    Intermediate rounds shrink the bucket count by FANIN each; the last
+    round always collapses to part_id=0, so the result is exactly one row
+    per key even if `n_parts` under-estimated the true partition count."""
+    from pyspark.sql import functions as F
 
-    O(log_fanin P) rounds; every round shuffles only blob rows. `n_parts`
-    (the partial count upper bound = input partition count) lets us compute
-    the round count driver-side without launching a counting job.
-    """
+    rounds = (1 if n_parts is None
+              else max(1, math.ceil(math.log(max(n_parts, 2), FANIN))))
+    for _ in range(rounds - 1):
+        df = df.withColumn("part_id",
+                           (F.col("part_id") / F.lit(FANIN)).cast("long"))
+        df = df.groupBy(*keys, "part_id").applyInPandas(merge, schema)
+    df = df.withColumn("part_id", F.lit(0).cast("long"))
+    return df.groupBy(*keys, "part_id").applyInPandas(merge, schema)
+
+
+def tree_merge(partials, out_schema: str | None = None,
+               group_cols=("source",), n_parts: int | None = None):
+    """Merge blob rows (group_cols…, sketch_type, state, n_items[,
+    part_id]) to one row per (group_cols × sketch_type); drops part_id.
+
+    The one blob merge: it ends every build, and it re-aggregates existing
+    blob tables to a coarser grouping (e.g. per-source → global).
+    Associativity of the kernels is exactly what makes that legal — the
+    same invariant the reference's `reduceByKey(_ ++ _)` relies on
+    (`/root/reference/scripts/analytics/snap2adj.scala:16`). `out_schema`
+    defaults to the group columns' types in `partials` plus
+    PARTIAL_SCHEMA_TAIL; see `_merge_rounds` for `n_parts`."""
     from pyspark.sql import functions as F
 
     group_cols = list(group_cols)
-    df = partials
-    if n_parts is None:
-        n_parts = 4096
-    rounds = max(1, math.ceil(math.log(max(n_parts, 2), fanin)))
-    # intermediate rounds shrink the blob count by `fanin` each; the last
-    # round always collapses to part_id=0, so the result is exactly one row
-    # per group even if `n_parts` under-estimated the true partition count
-    for _ in range(rounds - 1):
-        df = df.withColumn("part_id", (F.col("part_id") / F.lit(fanin)).cast("long"))
-        df = df.groupBy(*group_cols, "sketch_type", "part_id").applyInPandas(
-            _merge_fn(group_cols), out_schema)
-    df = df.withColumn("part_id", F.lit(0).cast("long"))
-    df = df.groupBy(*group_cols, "sketch_type", "part_id").applyInPandas(
-        _merge_fn(group_cols), out_schema)
-    return df
+    if out_schema is None:
+        out_schema = _schema_prefix(partials.schema, group_cols) + \
+            PARTIAL_SCHEMA_TAIL
+    if "part_id" not in partials.columns:
+        partials = partials.withColumn("part_id", F.lit(0).cast("long"))
+    return _merge_rounds(partials, group_cols + ["sketch_type"],
+                         _merge_fn(group_cols), out_schema,
+                         n_parts).drop("part_id")
 
 
 def single_spec(kind: str, value_col: str,
@@ -106,12 +153,12 @@ def single_spec(kind: str, value_col: str,
 
 
 def sketch_agg(df, kind: str, value_col: str, group_cols=("source",),
-               params: dict | None = None, fanin: int = 64):
+               params: dict | None = None):
     """End-to-end: partials → tree merge → one blob row per group.
 
     `multi_sketch_agg` with a single spec."""
     merged = multi_sketch_agg(df, single_spec(kind, value_col, params),
-                              group_cols, fanin=fanin)
+                              group_cols)
     return merged.drop("sketch")
 
 
@@ -242,6 +289,19 @@ def _grouped_token_stats(flat, token_gids, codes_present):
     return out
 
 
+def _vector_rows(flat, lens, d: int):
+    """Rows of a flattened list column that are d-vectors of finite
+    values → ((n_kept, d) float64 matrix, keep-mask over input rows).
+    Null, ragged and non-finite rows carry no usable direction and drop;
+    the mask filters row-aligned group codes consistently."""
+    keep = lens == d
+    starts = (np.cumsum(lens) - lens)[keep]
+    m = flat[starts[:, None] + np.arange(d)].astype(np.float64)
+    finite = np.isfinite(m).all(axis=1)
+    keep[keep] = finite
+    return m[finite], keep
+
+
 def build_partials_multi(df, specs: dict, group_cols=("source",)):
     """One scan, many sketches: per (partition × group × spec) partial state.
 
@@ -252,15 +312,14 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
     the scan dominates, so N sketches for the price of one. Token arrays
     stay in Arrow's flat values buffer (zero-copy into numpy: no per-row
     object allocation), and one packed-key sort per batch serves every hash
-    sketch of a column across all groups.
+    sketch of a column across all groups. An fd spec reads its list column
+    as an (n, params["d"]) matrix; its n_items counts vectors.
     """
     from pyspark import TaskContext
 
     group_cols = list(group_cols)
     in_schema = df.schema
-    group_fields = ", ".join(
-        f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-    out_schema = ((group_fields + ", ") if group_fields else "") + \
+    out_schema = _schema_prefix(in_schema, group_cols) + \
         "sketch string, " + PARTIAL_SCHEMA_TAIL
     value_cols = sorted({s["value_col"] for s in specs.values()})
     needed = group_cols + value_cols
@@ -295,15 +354,14 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
                     # the per-token group-id expansion entirely — half the
                     # memory traffic of the scan hot loop
                     tg = None if single else np.repeat(codes, lens)
-                    col_cache[vc] = ("list", flat, tg)
+                    col_cache[vc] = (flat, tg, lens)
                 else:
-                    col_cache[vc] = ("scalar",
-                                     col.to_numpy(zero_copy_only=False),
-                                     None if single else codes)
+                    col_cache[vc] = (col.to_numpy(zero_copy_only=False),
+                                     None if single else codes, None)
             stats_cache = {}
             for name, spec in specs.items():
                 vc, kind = spec["value_col"], spec["kind"]
-                shape, flat, tg = col_cache[vc]
+                flat, tg, lens = col_cache[vc]
                 if kind in hash_kinds:
                     if flat.dtype.kind == "f":
                         # nullable integer scalar columns arrive as float
@@ -340,24 +398,28 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
                         else:  # hll / theta
                             st.update_hashes(h, assume_unique=True)
                         counts[(gkey, name)] += n_raw
-                else:  # numeric quantile kinds
-                    vals = flat.astype(np.float64)
+                else:  # numeric kinds: one value (fd: one vector) per row
+                    if kind == "fd":
+                        vals, keep = _vector_rows(flat, lens,
+                                                  spec["params"]["d"])
+                        gids = None if single else codes[keep]
+                    else:
+                        vals, gids = flat.astype(np.float64), tg
                     for g in present:
-                        sel = vals if single else vals[tg == g]
-                        if sel.dtype.kind == "f":
+                        sel = vals if single else vals[gids == g]
+                        if sel.ndim == 1:
                             sel = sel[~np.isnan(sel)]
-                        if sel.size == 0:
+                        if sel.shape[0] == 0:
                             continue
                         gkey = mapping[g]
                         state_for(gkey, name).update(sel)
-                        counts[(gkey, name)] += sel.size
+                        counts[(gkey, name)] += sel.shape[0]
 
         if not states:
             return
         pid = TaskContext.get().partitionId()
         cols: dict[str, list] = {c: [] for c in group_cols}
-        cols.update(sketch=[], sketch_type=[], state=[], n_items=[],
-                    part_id=[])
+        cols.update(sketch=[], sketch_type=[], state=[], n_items=[])
         for (gkey, name), st in states.items():
             for c, v in zip(group_cols, gkey):
                 cols[c].append(v)
@@ -365,55 +427,26 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
             cols["sketch_type"].append(specs[name]["kind"])
             cols["state"].append(st.to_bytes())
             cols["n_items"].append(counts[(gkey, name)])
-            cols["part_id"].append(pid)
-        try:
-            from pyspark.sql.pandas.types import to_arrow_type
-            gtypes = {c: to_arrow_type(in_schema[c].dataType)
-                      for c in group_cols}
-        except Exception:
-            gtypes = {}
-        arrays, names = [], []
-        for c in group_cols:
-            arrays.append(pa.array(cols[c], type=gtypes.get(c)))
-            names.append(c)
-        arrays += [pa.array(cols["sketch"], pa.string()),
-                   pa.array(cols["sketch_type"], pa.string()),
-                   pa.array(cols["state"], pa.binary()),
-                   pa.array(cols["n_items"], pa.int64()),
-                   pa.array(cols["part_id"], pa.int64())]
-        names += ["sketch", "sketch_type", "state", "n_items", "part_id"]
+        arrays = _group_arrays(in_schema, group_cols, cols) + [
+            pa.array(cols["sketch"], pa.string()),
+            pa.array(cols["sketch_type"], pa.string()),
+            pa.array(cols["state"], pa.binary()),
+            pa.array(cols["n_items"], pa.int64()),
+            pa.array([pid] * len(states), pa.int64())]
+        names = group_cols + ["sketch", "sketch_type", "state", "n_items",
+                              "part_id"]
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.select(*needed).mapInArrow(acc, out_schema), out_schema
 
 
-def multi_sketch_agg(df, specs: dict, group_cols=("source",), fanin: int = 64,
+def multi_sketch_agg(df, specs: dict, group_cols=("source",),
                      n_parts: int | None = None):
     """End-to-end single-scan multi-sketch build: partials → tree merge →
-    one blob row per (group × spec)."""
+    one blob row per (group × spec). `n_parts` defaults to the default
+    parallelism: one merge round up to FANIN partitions."""
     if n_parts is None:
         n_parts = df.sparkSession.sparkContext.defaultParallelism
-    partials, schema = build_partials_multi(df, specs, group_cols)
-    merged = tree_merge(partials, schema, list(group_cols) + ["sketch"],
-                        n_parts=n_parts, fanin=fanin)
-    return merged.drop("part_id")
-
-
-def merge_across(blobs_df, out_schema: str | None = None, group_cols=()):
-    """Re-aggregate existing blobs to a coarser grouping (e.g. per-source →
-    global). Associativity of the kernels is exactly what makes this legal —
-    the same invariant the reference's `reduceByKey(_ ++ _)` relies on
-    (`/root/reference/scripts/analytics/snap2adj.scala:16`)."""
-    from pyspark.sql import functions as F
-
-    group_cols = list(group_cols)
-    if out_schema is None:
-        in_schema = blobs_df.schema
-        group_fields = ", ".join(
-            f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-        out_schema = (group_fields + ", " if group_fields else "") + PARTIAL_SCHEMA_TAIL
-    df = blobs_df
-    if "part_id" not in df.columns:
-        df = df.withColumn("part_id", F.lit(0))
-    return df.groupBy(*group_cols, "sketch_type").applyInPandas(
-        _merge_fn(group_cols), out_schema).drop("part_id")
+    partials, _schema = build_partials_multi(df, specs, group_cols)
+    return tree_merge(partials, group_cols=list(group_cols) + ["sketch"],
+                      n_parts=n_parts)

@@ -246,8 +246,8 @@ def incremental_sketch_update(spark, path: str, state_blobs, specs: dict,
     if prepare is not None:
         delta = prepare(delta)
     delta_blobs = agg.multi_sketch_agg(delta, specs, group_cols)
-    return agg.merge_across(state_blobs.unionByName(delta_blobs),
-                            group_cols=list(group_cols) + ["sketch"])
+    return agg.tree_merge(state_blobs.unionByName(delta_blobs),
+                          group_cols=list(group_cols) + ["sketch"])
 
 
 def merge_upsert(base, updates, key):

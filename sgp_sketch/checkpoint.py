@@ -322,8 +322,8 @@ def finalize_multi(spark, ckpt_dir: str, group_cols=("source",)):
                                                      "manifest.json")))
     dirs = [_slice_dir(ckpt_dir, sid) for sid in manifest["slice_ids"]]
     blobs = spark.read.parquet(*dirs)
-    return agg.merge_across(blobs,
-                            group_cols=tuple(group_cols) + ("sketch",))
+    return agg.tree_merge(blobs,
+                          group_cols=tuple(group_cols) + ("sketch",))
 
 
 def finalize(spark, ckpt_dir: str, group_cols=("source",)):

@@ -1,125 +1,34 @@
 """Matrix/spectral sketching over embedding columns: Frequent Directions
-built through the same partial → tree-merge discipline as the frequency
+built by the same one-scan build and tree merge as the frequency
 sketches, so a 10^12-row embedding table reduces to one (ell x d) float
 block per group without ever materializing a d x d Gram per partition in
 the shuffle (blobs are <= ell rows by construction — `to_bytes` shrinks).
 
-Spark shape: one mapInArrow scan (vector column flattened zero-copy from
-Arrow's FixedSizeList/List values buffer into an (n, d) numpy view —
-no per-row object allocation), per-partition FD states, then
-`agg.tree_merge` rounds shuffling only the KB-sized blobs. The SVDs run
-inside the scan tasks at (2*ell x d) cost each — compute proportional to
-data read, state independent of row count.
+Spark shape: `fd_agg` is a one-spec `agg.sketch_agg` call. The scan's fd
+branch (`agg.build_partials_multi`) reads the vector column zero-copy
+from Arrow's list values buffer into an (n, d) numpy matrix — no per-row
+object allocation — and `agg.tree_merge` shuffles only the KB-sized
+blobs. The SVDs run inside the scan tasks at (2*ell x d) cost each —
+compute proportional to data read, state independent of row count.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 from . import agg
 from .kernels import registry
 
 
-def _matrix_from_list_column(col, d: int):
-    """Arrow List/LargeList/FixedSizeList<float> column → ((n_kept, d)
-    float64 matrix, bool keep-mask of length n_rows). Rows with NULL or
-    wrong-length vectors are dropped (they carry no usable direction);
-    the mask lets callers filter row-aligned metadata (e.g. group codes)
-    consistently."""
-    import pyarrow as pa
-
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if pa.types.is_fixed_size_list(col.type):
-        flat = col.values.to_numpy(zero_copy_only=False)
-        m = flat.reshape(-1, col.type.list_size)
-        keep = (np.asarray(col.is_valid()) if col.null_count
-                else np.ones(m.shape[0], dtype=bool))
-        m = m[keep]
-    else:
-        off = np.asarray(col.offsets)
-        lens = off[1:] - off[:-1]
-        keep = lens == d
-        if col.null_count:
-            keep &= np.asarray(col.is_valid())
-        flat = col.values.to_numpy(zero_copy_only=False)[off[0]:off[-1]]
-        starts = (off[:-1] - off[0])[keep]
-        idx = starts[:, None] + np.arange(d)[None, :]
-        m = flat[idx]
-    if m.shape[1] != d:
-        raise ValueError(f"vector dim {m.shape[1]} != configured d={d}")
-    return np.ascontiguousarray(m, dtype=np.float64), keep
-
-
 def fd_agg(df, vec_col: str = "embedding", d: int = 64, ell: int = 16,
-           group_cols=(), fanin: int = 64):
+           group_cols=()):
     """Per-group Frequent Directions sketch of a vector column.
 
-    → DataFrame(group_cols..., sketch_type, state, n_items, part_id=0),
-    one blob row per group; `state` decodes via kernels.registry.
+    → DataFrame(group_cols..., sketch_type, state, n_items), one blob row
+    per group; `state` decodes via kernels.registry. NULL and
+    wrong-length vectors (and vectors with a NULL or non-finite element)
+    are dropped; n_items counts the vectors kept.
     """
-    from pyspark import TaskContext
-    from pyspark.sql import functions as F  # noqa: F401
-
-    group_cols = list(group_cols)
-    in_schema = df.schema
-    group_fields = ", ".join(
-        f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-    out_schema = ((group_fields + ", ") if group_fields else "") + \
-        agg.PARTIAL_SCHEMA_TAIL
-
-    def partial(batches):
-        import pandas as pd
-        import pyarrow as pa
-
-        states: dict[tuple, object] = {}
-        for batch in batches:
-            codes, mapping = agg._batch_columns(batch, group_cols)
-            m, keep = _matrix_from_list_column(batch.column(vec_col), d)
-            if m.shape[0] == 0:
-                continue
-            codes = codes[keep]  # align group codes with the kept rows
-            for g in sorted(mapping):
-                sel = m if len(mapping) == 1 else m[codes == g]
-                if sel.shape[0] == 0:
-                    continue
-                gkey = mapping[g]
-                st = states.get(gkey)
-                if st is None:
-                    st = registry.make("fd", ell=ell, d=d)
-                    states[gkey] = st
-                st.update(sel)
-        if not states:
-            return
-        pid = TaskContext.get().partitionId()
-        rows = [(*gkey, "fd", st.to_bytes(), st.n_rows, pid)
-                for gkey, st in states.items()]
-        pdf = pd.DataFrame(rows, columns=group_cols + [
-            "sketch_type", "state", "n_items", "part_id"])
-        # pin group-column Arrow types to the declared schema: from_pandas
-        # would infer int64 for an int32 group col (e.g. embeddings.label)
-        # and Spark's ArrowColumnVector accessor then dies on the width
-        # mismatch — same guard as agg.build_partials_multi
-        try:
-            from pyspark.sql.pandas.types import to_arrow_type
-            gtypes = {c: to_arrow_type(in_schema[c].dataType)
-                      for c in group_cols}
-        except Exception:
-            gtypes = {}
-        arrays = [pa.array(pdf[c], type=gtypes.get(c)) for c in group_cols]
-        arrays += [pa.array(pdf["sketch_type"], pa.string()),
-                   pa.array(pdf["state"], pa.binary()),
-                   pa.array(pdf["n_items"], pa.int64()),
-                   pa.array(pdf["part_id"], pa.int64())]
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=group_cols + ["sketch_type", "state",
-                                        "n_items", "part_id"])
-
-    n_parts = df.rdd.getNumPartitions()
-    needed = group_cols + [vec_col]
-    partials = df.select(*needed).mapInArrow(partial, out_schema)
-    return agg.tree_merge(partials, out_schema, group_cols,
-                          n_parts=n_parts, fanin=fanin)
+    return agg.sketch_agg(df, "fd", vec_col, group_cols,
+                          {"d": d, "ell": ell})
 
 
 def principal_spectrum(df, vec_col: str = "embedding", d: int = 64,
@@ -147,10 +56,7 @@ def spectrum_from_blobs(blobs, k: int = 5, group_cols=()):
     import pandas as pd
 
     group_cols = list(group_cols)
-    in_schema = blobs.schema
-    group_fields = ", ".join(
-        f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-    out_schema = ((group_fields + ", ") if group_fields else "") + \
+    out_schema = agg._schema_prefix(blobs.schema, group_cols) + \
         "rank int, sing_value double, gram_error_bound double, n_rows long"
 
     def explode(it):

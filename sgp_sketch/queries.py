@@ -71,7 +71,7 @@ def distinct_tokens(df, group_cols=("source",), value_col="tokens",
                     f"include_global needs string group columns; {c!r} is "
                     f"{df.schema[c].dataType.simpleString()} — cast it or "
                     "call with include_global=False and merge separately")
-        gblob = agg.merge_across(blobs, group_cols=())
+        gblob = agg.tree_merge(blobs, group_cols=())
         gout = gblob.select(est("state").alias("est_distinct"))
         for c in group_cols:
             gout = gout.withColumn(c, F.lit("__all__"))
@@ -163,16 +163,13 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
     → DataFrame(group_cols..., token long, est_count long, rank int).
     """
     from pyspark import TaskContext
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     group_cols = list(group_cols)
     C = candidates_per_partial or max(8 * k, 256)
     in_schema = df.schema
-    group_fields = ", ".join(
-        f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-    schema = ((group_fields + ", ") if group_fields else "") + \
-        "state binary, cands array<long>, n_items long, part_id long"
+    prefix = agg._schema_prefix(in_schema, group_cols)
+    schema = prefix + ("state binary, cands array<long>, n_items long, "
+                       "part_id long")
     params = {"depth": depth, "width": width}
 
     def partial(batches):
@@ -235,23 +232,14 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
             order = np.lexsort((uniq, -tot))[:C]
             rows.append((*gkey, st.to_bytes(), uniq[order].tolist(),
                          int(st.n_items), pid))
-        pdf = pd.DataFrame(rows, columns=group_cols + [
-            "state", "cands", "n_items", "part_id"])
-        try:
-            from pyspark.sql.pandas.types import to_arrow_type
-            gtypes = {c: to_arrow_type(in_schema[c].dataType)
-                      for c in group_cols}
-        except Exception:
-            gtypes = {}
-        arrays = [pa.array(pdf[c].tolist(), type=gtypes.get(c))
-                  for c in group_cols]
-        arrays += [pa.array(pdf["state"].tolist(), pa.binary()),
-                   pa.array(pdf["cands"].tolist(), pa.list_(pa.int64())),
-                   pa.array(pdf["n_items"].tolist(), pa.int64()),
-                   pa.array(pdf["part_id"].tolist(), pa.int64())]
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=group_cols + ["state", "cands", "n_items",
-                                        "part_id"])
+        names = group_cols + ["state", "cands", "n_items", "part_id"]
+        cols = dict(zip(names, map(list, zip(*rows))))
+        arrays = agg._group_arrays(in_schema, group_cols, cols) + [
+            pa.array(cols["state"], pa.binary()),
+            pa.array(cols["cands"], pa.list_(pa.int64())),
+            pa.array(cols["n_items"], pa.int64()),
+            pa.array(cols["part_id"], pa.int64())]
+        yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     def merge(key, pdf):
         merged = registry.merge_blobs(list(pdf["state"]))
@@ -266,23 +254,13 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
                    part_id=int(pdf["part_id"].iloc[0]))
         return pd.DataFrame([row])
 
-    import math
-
-    n_parts = df.rdd.getNumPartitions()
     partials = df.select(*group_cols, value_col).mapInArrow(partial, schema)
-    fanin = 64
-    rounds = max(1, math.ceil(math.log(max(n_parts, 2), fanin)))
-    merged = partials
-    for _ in range(rounds):
-        merged = merged.withColumn(
-            "part_id", (F.col("part_id") / F.lit(fanin)).cast("long"))
-        merged = merged.groupBy(*group_cols, "part_id").applyInPandas(merge, schema)
-    # unconditional final collapse to part_id=0 (same invariant as
-    # agg.tree_merge): finalize reads ONE row per group — if the rounds
-    # estimate ever under-counted, a silent >1-row group would drop
-    # candidate data
-    merged = (merged.withColumn("part_id", F.lit(0).cast("long"))
-              .groupBy(*group_cols, "part_id").applyInPandas(merge, schema))
+    # the rounds of agg.tree_merge, sized the way multi_sketch_agg sizes
+    # them: the last round collapses to ONE row per group, which finalize
+    # reads
+    merged = agg._merge_rounds(
+        partials, group_cols, merge, schema,
+        df.sparkSession.sparkContext.defaultParallelism)
 
     # final: explode candidates, estimate with the merged CMS, rank, top-k
     def finalize(key, pdf):
@@ -295,8 +273,7 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
                      rank=r + 1) for r, i in enumerate(order)]
         return pd.DataFrame(rows)
 
-    out_schema = ((group_fields + ", ") if group_fields else "") + \
-        "token long, est_count long, rank int"
+    out_schema = prefix + "token long, est_count long, rank int"
     return merged.groupBy(*group_cols).applyInPandas(finalize, out_schema)
 
 
@@ -535,10 +512,7 @@ def mg_heavy_hitters(df, k: int = 10, counters: int = 1024,
     group_cols = list(group_cols)
     blobs = agg.sketch_agg(df, "mg", value_col, group_cols,
                            {"k": int(counters)})
-    in_schema = blobs.schema
-    group_fields = ", ".join(
-        f"{c} {in_schema[c].dataType.simpleString()}" for c in group_cols)
-    out_schema = ((group_fields + ", ") if group_fields else "") + \
+    out_schema = agg._schema_prefix(blobs.schema, group_cols) + \
         "token long, est_min long, est_max long, rank int"
 
     def explode(it):
@@ -587,7 +561,7 @@ def f2_moment(df, value_col="tokens", group_cols=("source",),
                            {"depth": depth, "width": width})
     out = blobs.select(*group_cols, f2("state").alias("est_f2"))
     if include_global:
-        gblob = agg.merge_across(blobs, group_cols=())
+        gblob = agg.tree_merge(blobs, group_cols=())
         gout = gblob.select(f2("state").alias("est_f2"))
         for c in group_cols:
             gout = gout.withColumn(c, F.lit("__all__"))

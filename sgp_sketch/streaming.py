@@ -11,7 +11,7 @@ blobs so far. Two idiomatic Spark surfaces:
 
   * `foreachBatch` (batch-first, default): readStream → per-batch
     multi_sketch_agg → append blob rows to a parquet state table. The
-    current estimate at any time = merge_across(all blob rows) — the same
+    current estimate at any time = tree_merge(all blob rows) — the same
     kernel merge the batch path uses, so stream results are byte-comparable
     to a batch build over the union of inputs.
   * `applyInPandasWithState` (custom stateful operator): per-group HLL blob
@@ -60,8 +60,8 @@ def stream_sketch_build(spark, input_path: str, state_dir: str,
         .parquet(input_path)
 
     def sink(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
+        # an empty batch builds no blob rows (it writes an empty batch
+        # directory), so it needs no emptiness check: one job per batch
         if prepare is not None:
             batch_df = prepare(batch_df)
         blobs = agg.multi_sketch_agg(batch_df, specs, group_cols)
@@ -135,8 +135,8 @@ def streamed_estimates(spark, state_dir: str, group_cols=("source",)):
     `batch_id` is recovered as a hive-partition column of the state layout
     (one directory per micro-batch — see stream_sketch_build); compacted
     snapshots are resolved through the `_compaction.json` pointer."""
-    return agg.merge_across(_live_blobs(spark, state_dir).drop("batch_id"),
-                            group_cols=tuple(group_cols) + ("sketch",))
+    return agg.tree_merge(_live_blobs(spark, state_dir).drop("batch_id"),
+                          group_cols=tuple(group_cols) + ("sketch",))
 
 
 def compact_state(spark, state_dir: str, group_cols=("source",)) -> dict:
@@ -202,8 +202,8 @@ def compact_state(spark, state_dir: str, group_cols=("source",)) -> dict:
 
     blobs = (spark.read.parquet(state_dir)
              .filter(F.col("batch_id").isin(fold)).drop("batch_id"))
-    merged = agg.merge_across(blobs, group_cols=tuple(group_cols)
-                              + ("sketch",))
+    merged = agg.tree_merge(blobs, group_cols=tuple(group_cols)
+                            + ("sketch",))
     merged.write.mode("overwrite").parquet(
         f"{state_dir}/batch_id={snap_id}")                       # step 1
     versions = _marker_versions(spark, state_dir)

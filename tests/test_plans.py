@@ -218,6 +218,27 @@ def test_per_key_build_is_one_shuffle(spark):
     assert "event_id" not in scan and "props" not in scan
 
 
+def test_heavy_hitters_plan_is_one_merge_and_runs_no_job(spark,
+                                                        tokens_sdf):
+    """heavy_hitters on a shuffled input: one merge round plus the
+    finalize (two grouped-map stages), and building the plan runs no
+    Spark job — the round count comes from the default parallelism, not
+    from counting the input's partitions."""
+    from sgp_sketch import queries
+
+    sc = spark.sparkContext
+    group = "heavy_hitters_plan"
+    sc.setJobGroup(group, "plan only")
+    try:
+        out = queries.heavy_hitters(tokens_sdf.repartition(5), k=5)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert plan.count("FlatMapGroupsInPandas") == 2, plan
+    assert jobs == [], jobs
+
+
 def test_two_hop_seeded_broadcasts_seeds(spark):
     """two_hop_seeded (the reference's per-seed traversal shape,
     PartitioningTwoHopTest.groovy:156): the 5-row seed list must

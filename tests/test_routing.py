@@ -202,7 +202,7 @@ def test_salted_routing_preserves_estimates(spark, tokens_sdf):
     assert routed.filter("salted").count() > 0  # datagen has hot keys
     # per-shard partial HLLs (shard = routing decision), then global merge
     by_shard = agg.sketch_agg(routed, "hll", "token", ("shard",), {"p": 12})
-    merged_salted = agg.merge_across(by_shard, group_cols=())
+    merged_salted = agg.tree_merge(by_shard, group_cols=())
     direct = agg.sketch_agg(
         tokens_sdf.select(F.explode("tokens").alias("token")),
         "hll", "token", (), {"p": 12})

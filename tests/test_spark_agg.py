@@ -94,12 +94,45 @@ def test_bloom_membership(spark, tokens_sdf, tokens_pdf):
     assert got_absent.mean() <= 0.05
 
 
-def test_merge_across_equals_direct_global(spark, tokens_sdf):
+def test_tree_merge_to_global_equals_direct_global(spark, tokens_sdf):
     per_source = agg.sketch_agg(tokens_sdf, "hll", "tokens", ("source",),
                                 {"p": 12})
-    via_merge = agg.merge_across(per_source, group_cols=()).toPandas()
+    via_merge = agg.tree_merge(per_source, group_cols=()).toPandas()
     direct = agg.sketch_agg(tokens_sdf, "hll", "tokens", (), {"p": 12}).toPandas()
     assert bytes(via_merge["state"].iloc[0]) == bytes(direct["state"].iloc[0])
+
+
+def test_multi_round_tree_merge(spark, tokens_sdf, tokens_pdf):
+    """More partials than FANIN: two merge rounds, still one row per
+    (source, sketch), and the byte-stable kinds equal the one-round build
+    of the same partials byte for byte."""
+    specs = {
+        "hll": {"kind": "hll", "value_col": "tokens", "params": {"p": 12}},
+        "bloom": {"kind": "bloom", "value_col": "tokens",
+                  "params": {"n_blocks": 1 << 10}},
+        "cms": {"kind": "cms", "value_col": "tokens"},
+        "moments": {"kind": "moments", "value_col": "n_tok"},
+        "kll": {"kind": "kll", "value_col": "n_tok"},
+    }
+    rep = tokens_sdf.repartition(130)
+    deep = agg.multi_sketch_agg(rep, specs, n_parts=130)
+    plan = deep._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 2, plan
+    rows = deep.collect()
+    got = {(r["source"], r["sketch"]): bytes(r["state"]) for r in rows}
+    assert len(rows) == len(got) == len(SOURCES) * len(specs)
+    flat = {(r["source"], r["sketch"]): bytes(r["state"])
+            for r in agg.multi_sketch_agg(rep, specs).collect()}
+    for key, blob in flat.items():
+        if key[1] != "kll":
+            assert got[key] == blob, key
+    for src, sub in tokens_pdf.groupby("source"):
+        vals = np.sort(sub["n_tok"].to_numpy().astype(float))
+        st = registry.from_bytes(got[(src, "kll")])
+        qs = (0.01, 0.25, 0.5, 0.75, 0.99)
+        for q, v in zip(qs, st.quantiles(qs)):
+            rank = np.searchsorted(vals, v, side="right") / len(vals)
+            assert abs(rank - q) <= 0.035, (src, q, rank)
 
 
 def test_row_invariant_tokens_unmutated(spark, tokens_sdf):

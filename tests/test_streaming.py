@@ -46,6 +46,39 @@ def test_foreachbatch_stream_equals_batch(spark, stream_input, tmp_path):
     assert len(spark.read.parquet(state_dir).collect()) == n_before
 
 
+def test_batch_emptied_by_prepare_adds_no_state(spark, tokens_sdf,
+                                                tmp_path):
+    """A micro-batch that `prepare` empties writes no blob rows: the
+    streamed state, before and after compaction, equals a batch build
+    over the rows `prepare` keeps."""
+    inp, state = str(tmp_path / "in"), str(tmp_path / "state")
+    for cond in ("source = 'web'", "source IN ('books', 'code', 'wiki')",
+                 "source NOT IN ('web', 'books', 'code', 'wiki')"):
+        tokens_sdf.filter(cond).coalesce(1).write.mode("append") \
+            .parquet(inp)
+
+    def drop_web(df):
+        return df.filter("source != 'web'")
+
+    q = streaming.stream_sketch_build(
+        spark, inp, state, SPECS, checkpoint_dir=str(tmp_path / "ck"),
+        prepare=drop_web, reader_options={"maxFilesPerTrigger": 1})
+    q.awaitTermination(120)
+    assert len([d for d in os.listdir(state)
+                if d.startswith("batch_id=")]) == 3
+
+    def blobs(df):
+        return {(r["source"], r["sketch"]): bytes(r["state"])
+                for r in df.collect()}
+
+    batch = blobs(agg.multi_sketch_agg(drop_web(spark.read.parquet(inp)),
+                                       SPECS))
+    assert len(batch) == 7
+    assert blobs(streaming.streamed_estimates(spark, state)) == batch
+    assert streaming.compact_state(spark, state)["folded"] == 2
+    assert blobs(streaming.streamed_estimates(spark, state)) == batch
+
+
 def test_stateful_running_estimate(spark, stream_input, tokens_pdf, tmp_path):
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt2")

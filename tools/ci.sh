@@ -14,6 +14,9 @@ if ! python -c "import PIL, soundfile" 2>/dev/null; then
         || echo "ci: no network / pip unavailable - codec tests stay skipped"
 fi
 python -m pytest tests/ -x -q
+# perfbench calls library internals positionally: a library change can
+# break the traced benchmark without failing a unit test
+python3 -m pytest perfbench -q
 python tools/check_contract.py --json CONTRACT_LOG_sf0.001.json /root/testdata/sf0.001
 python tools/check_contract.py --json CONTRACT_LOG_sf0.01.json /root/testdata/sf0.01
 python tools/check_contract.py --json CONTRACT_LOG_sf0.1.json /root/testdata/sf0.1
