@@ -4702,9 +4702,10 @@ def _cms_heavy_hitters_oracle_sql() -> str:
     conservative update is exactly the plain update, so merged cell
     sums equal true counts and every estimate is the exact frequency
     regardless of partitioning or update order.  The candidate stage is
-    exhaustive (per-partition top-256 over ≤ 31 distinct), so the
-    output is the exact per-source top-10 by (count DESC, signed token
-    ASC) — queries.heavy_hitters' np.lexsort((cands, -est)) tie-break.
+    exhaustive (MG with 256 counters over ≤ 31 distinct never
+    decrements), so the output is the exact per-source top-10 by (count
+    DESC, signed token ASC) — queries.heavy_hitters'
+    np.lexsort((cands, -est)) tie-break.
     Cells replay as splitmix64(h ⊕ sm64(7+j)) mod 16384 (kernels/cms.py
     _rows, seed=7), h = splitmix64(xxhash64(word))."""
     from sgp_sketch.oracle_replay import (sm64_cols, splitmix64_const,
@@ -4736,7 +4737,7 @@ def _cms_heavy_hitters_oracle_sql() -> str:
         -- two loud-guarded preconditions: (1) collision-free cells in
         -- every row (conservative ≡ plain); (2) candidate-stage
         -- exhaustiveness — ≤ 256 distinct tokens per source, else the
-        -- per-partition top-C heaps could truncate a rank-boundary tie
+        -- 256-counter MG summary could evict a rank-boundary token
         guard AS (SELECT (SELECT SUM(bad) FROM (
                       SELECT j, CASE WHEN COUNT(DISTINCT hj % 16384)
                                           <> COUNT(*)

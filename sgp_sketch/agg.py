@@ -85,40 +85,6 @@ def _unique_counts(flat: np.ndarray):
     return np.unique(flat, return_counts=True)
 
 
-def _merge_fn(group_cols):
-    def merge(key, pdf):
-        import pandas as pd
-
-        blob = registry.merge_blobs(list(pdf["state"]))
-        row = {c: pdf[c].iloc[0] for c in group_cols}
-        row.update(sketch_type=pdf["sketch_type"].iloc[0], state=blob,
-                   n_items=int(pdf["n_items"].sum()),
-                   part_id=int(pdf["part_id"].iloc[0]))
-        return pd.DataFrame([row])
-    return merge
-
-
-def _merge_rounds(df, keys, merge, schema: str,
-                  n_parts: int | None = None):
-    """Tree-merge rounds of `merge` (a grouped-map function) over part_id
-    buckets of `df`, keyed by `keys` + part_id. `n_parts` (the partial
-    count upper bound = input partition count) sets the round count
-    driver-side, without a counting job; omitted, the merge is one round.
-    Intermediate rounds shrink the bucket count by FANIN each; the last
-    round always collapses to part_id=0, so the result is exactly one row
-    per key even if `n_parts` under-estimated the true partition count."""
-    from pyspark.sql import functions as F
-
-    rounds = (1 if n_parts is None
-              else max(1, math.ceil(math.log(max(n_parts, 2), FANIN))))
-    for _ in range(rounds - 1):
-        df = df.withColumn("part_id",
-                           (F.col("part_id") / F.lit(FANIN)).cast("long"))
-        df = df.groupBy(*keys, "part_id").applyInPandas(merge, schema)
-    df = df.withColumn("part_id", F.lit(0).cast("long"))
-    return df.groupBy(*keys, "part_id").applyInPandas(merge, schema)
-
-
 def tree_merge(partials, out_schema: str | None = None,
                group_cols=("source",), n_parts: int | None = None):
     """Merge blob rows (group_cols…, sketch_type, state, n_items[,
@@ -130,18 +96,42 @@ def tree_merge(partials, out_schema: str | None = None,
     same invariant the reference's `reduceByKey(_ ++ _)` relies on
     (`/root/reference/scripts/analytics/snap2adj.scala:16`). `out_schema`
     defaults to the group columns' types in `partials` plus
-    PARTIAL_SCHEMA_TAIL; see `_merge_rounds` for `n_parts`."""
+    PARTIAL_SCHEMA_TAIL.
+
+    `n_parts` (the partial count upper bound = input partition count)
+    sets the round count while the plan is built, without a counting
+    job; omitted, the merge is one round. Intermediate rounds shrink the part_id bucket
+    count by FANIN each; the last round always collapses to part_id=0, so
+    the result is exactly one row per key even if `n_parts`
+    under-estimated the true partition count."""
     from pyspark.sql import functions as F
 
     group_cols = list(group_cols)
+    keys = group_cols + ["sketch_type", "part_id"]
     if out_schema is None:
         out_schema = _schema_prefix(partials.schema, group_cols) + \
             PARTIAL_SCHEMA_TAIL
-    if "part_id" not in partials.columns:
-        partials = partials.withColumn("part_id", F.lit(0).cast("long"))
-    return _merge_rounds(partials, group_cols + ["sketch_type"],
-                         _merge_fn(group_cols), out_schema,
-                         n_parts).drop("part_id")
+
+    def merge(key, pdf):
+        import pandas as pd
+
+        row = {c: pdf[c].iloc[0] for c in keys}
+        row.update(state=registry.merge_blobs(list(pdf["state"])),
+                   n_items=int(pdf["n_items"].sum()))
+        return pd.DataFrame([row])
+
+    df = partials
+    if "part_id" not in df.columns:
+        df = df.withColumn("part_id", F.lit(0).cast("long"))
+    rounds = (1 if n_parts is None
+              else max(1, math.ceil(math.log(max(n_parts, 2), FANIN))))
+    for _ in range(rounds - 1):
+        df = df.withColumn("part_id",
+                           (F.col("part_id") / F.lit(FANIN)).cast("long"))
+        df = df.groupBy(*keys).applyInPandas(merge, out_schema)
+    df = df.withColumn("part_id", F.lit(0).cast("long"))
+    return df.groupBy(*keys).applyInPandas(merge, out_schema) \
+        .drop("part_id")
 
 
 def single_spec(kind: str, value_col: str,

@@ -1,7 +1,8 @@
 """Misra–Gries heavy-hitter summary — numpy-vectorized, mergeable.
 
-Deterministic counter-based alternative to the CMS+heap heavy-hitter path:
-keeps at most k (item, count) pairs; any item with true frequency
+Deterministic counter-based heavy-hitter summary; `queries.heavy_hitters`
+uses its keys as the candidates a CMS ranks. It keeps at most k (item,
+count) pairs; any item with true frequency
 > n/(k+1) is guaranteed present, and every reported count is an
 UNDER-estimate by at most the tracked `dec` (global decrement total),
 which itself is bounded by n/(k+1). That one-sided error is the mirror

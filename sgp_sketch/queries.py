@@ -4,12 +4,14 @@ The reference's "queries" are partition-quality probes (1-hop/2-hop
 traversals routed to the shard owning the start vertex,
 `/root/reference/scripts/interactive/gremlin/PartitioningTwoHopTest.groovy:156-169`);
 ours are the four sketch queries the north_star names: distinct-token
-cardinality (HLL), heavy-hitter frequencies (CMS + top-K candidates),
-n_tok quantiles (t-digest / KLL), token membership (Bloom).
+cardinality (HLL), heavy-hitter frequencies (CMS counts over Misra–Gries
+candidates), n_tok quantiles (t-digest / KLL), token membership (Bloom).
 
-Finalization (blob → number) touches one row per group — tiny — so scalar
-pandas UDFs over the blob column are fine there; the full-data scan path
-stays in agg.build_partials_multi (vectorized numpy over Arrow batches).
+Every query builds its blobs through agg (one Arrow scan, one tree
+merge); this module only finalizes them. Finalization (blob → number)
+touches one row per group — tiny — so pandas UDFs over the blob column
+are fine there; the full-data scan path stays in agg.build_partials_multi
+(vectorized numpy over Arrow batches).
 """
 
 from __future__ import annotations
@@ -18,7 +20,6 @@ import numpy as np
 import pandas as pd
 
 from . import agg
-from .kernels import cms as cms_mod
 from .kernels import registry
 from .kernels.hashing import hash64
 
@@ -34,7 +35,10 @@ def _estimate_udf():
     return est
 
 
-def _quantile_udf(qs):
+def _quantiles_long(blobs, cols, qs):
+    """Blob rows → long-form (cols..., q double, value double): one row
+    per requested quantile of each row's sketch."""
+    from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
     qs = list(qs)
@@ -42,7 +46,40 @@ def _quantile_udf(qs):
     @pandas_udf("array<double>")
     def quant(state: pd.Series) -> pd.Series:
         return state.map(lambda b: registry.from_bytes(b).quantiles(qs).tolist())
-    return quant
+
+    wide = blobs.select(*cols, quant("state").alias("vals"))
+    qlit = F.array(*[F.lit(float(q)) for q in qs])
+    return wide.select(
+        *cols,
+        F.explode(F.arrays_zip(qlit.alias("q"), F.col("vals").alias("value")))
+        .alias("z")).select(*cols, "z.q", "z.value")
+
+
+def _with_global_row(blobs, group_cols, fn, name: str,
+                     include_global: bool):
+    """(group_cols..., name) with `fn` (a scalar pandas UDF over the
+    blob) per group row; with `include_global`, plus one row whose group
+    columns all read '__all__', computed from the per-group blobs merged
+    (no second scan)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
+
+    out = blobs.select(*group_cols, fn("state").alias(name))
+    if not include_global:
+        return out
+    for c in group_cols:
+        if not isinstance(blobs.schema[c].dataType, StringType):
+            # the global row injects the string '__all__' into each
+            # group column; a non-string column would fail the union
+            # (or silently coerce the whole column to string)
+            raise TypeError(
+                f"include_global needs string group columns; {c!r} is "
+                f"{blobs.schema[c].dataType.simpleString()} — cast it or "
+                "call with include_global=False and merge separately")
+    gout = agg.tree_merge(blobs, group_cols=()).select(
+        *[F.lit("__all__").alias(c) for c in group_cols],
+        fn("state").alias(name))
+    return out.unionByName(gout)
 
 
 # --------------------------------------------------------------- queries
@@ -54,29 +91,9 @@ def distinct_tokens(df, group_cols=("source",), value_col="tokens",
     → DataFrame(group_cols..., est_distinct double). The exact counterpart
     is `dropDuplicates().count()` (`/root/reference/scripts/analytics/snap2metis.scala:44`).
     """
-    from pyspark.sql import functions as F
-
     blobs = agg.sketch_agg(df, "hll", value_col, group_cols, {"p": p})
-    est = _estimate_udf()
-    out = blobs.select(*group_cols, est("state").alias("est_distinct"))
-    if include_global:
-        from pyspark.sql.types import StringType
-
-        for c in group_cols:
-            if not isinstance(df.schema[c].dataType, StringType):
-                # the global row injects the string '__all__' into each
-                # group column; a non-string column would fail the union
-                # (or silently coerce the whole column to string)
-                raise TypeError(
-                    f"include_global needs string group columns; {c!r} is "
-                    f"{df.schema[c].dataType.simpleString()} — cast it or "
-                    "call with include_global=False and merge separately")
-        gblob = agg.tree_merge(blobs, group_cols=())
-        gout = gblob.select(est("state").alias("est_distinct"))
-        for c in group_cols:
-            gout = gout.withColumn(c, F.lit("__all__"))
-        out = out.unionByName(gout.select(*group_cols, "est_distinct"))
-    return out
+    return _with_global_row(blobs, group_cols, _estimate_udf(),
+                            "est_distinct", include_global)
 
 
 def n_tok_quantiles(df, qs=(0.01, 0.25, 0.5, 0.75, 0.99), value_col="n_tok",
@@ -88,16 +105,8 @@ def n_tok_quantiles(df, qs=(0.01, 0.25, 0.5, 0.75, 0.99), value_col="n_tok",
     per requested quantile, mirroring the reference's percentile rows
     (`/root/reference/containers/analytics/scripts/log_parser.py:134-138`).
     """
-    from pyspark.sql import functions as F
-
     blobs = agg.sketch_agg(df, kind, value_col, group_cols, params or {})
-    quant = _quantile_udf(qs)
-    wide = blobs.select(*group_cols, quant("state").alias("vals"))
-    qlit = F.array(*[F.lit(float(q)) for q in qs])
-    return wide.select(
-        *group_cols,
-        F.explode(F.arrays_zip(qlit.alias("q"), F.col("vals").alias("value")))
-        .alias("z")).select(*group_cols, "z.q", "z.value")
+    return _quantiles_long(blobs, group_cols, qs)
 
 
 def distinct_per_key(df, key_cols, value_col="tokens", kind="theta",
@@ -135,146 +144,50 @@ def quantiles_per_key(df, key_cols, value_col, qs=(0.5,), kind="dd",
 
     → DataFrame(key_cols..., q double, value double), long form.
     """
-    from pyspark.sql import functions as F
-
     blobs = agg.sketch_agg_bykey(df, kind, value_col, key_cols, params,
                                  num_partitions)
-    quant = _quantile_udf(qs)
-    wide = blobs.select(*key_cols, quant("state").alias("vals"))
-    qlit = F.array(*[F.lit(float(q)) for q in qs])
-    return wide.select(
-        *key_cols,
-        F.explode(F.arrays_zip(qlit.alias("q"), F.col("vals").alias("value")))
-        .alias("z")).select(*key_cols, "z.q", "z.value")
+    return _quantiles_long(blobs, key_cols, qs)
 
 
 def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
-                  depth: int = 4, width: int = 1 << 14,
-                  candidates_per_partial: int | None = None):
-    """Top-K most frequent tokens per group: CMS for counts + per-partition
-    exact candidate heaps, merged tree-wise.
+                  depth: int = 4, width: int = 1 << 14):
+    """Top-K most frequent tokens per group: a CMS for the counts and a
+    Misra–Gries summary for the candidates, both built in the one Arrow
+    scan (`agg.multi_sketch_agg`, two specs) and merged tree-wise.
 
-    Per partial: a CMS over all values plus the locally most frequent C
-    candidates. Merge: CMS cell-sum + candidate-set union; final estimates
-    come from the merged CMS, ranked, top-K kept. Any globally-frequent token
-    is locally frequent in at least one partition slice (C >= k x oversample),
-    the standard distributed heavy-hitter argument.
+    Candidates are the merged MG's keys (C = max(8k, 256) counters); each
+    gets its count from the merged CMS (never an underestimate, at most
+    e·n/width over w.h.p.), and the top K by (count desc, token asc) are
+    kept. MG keeps every token with frequency > n/(C+1) under any merge
+    order, so a top-K token above that line is always ranked. Below it
+    the counter set depends on the partitioning: on near-uniform
+    vocabularies (≥ 1,000 tokens, none above n/(C+1)) the list can differ
+    from the exact top K and between layouts. Simulated Zipf inputs
+    (s = 0.5–1.0, 500–10,000 tokens, 4 and 16 partitions) ranked the same
+    top 10 as per-partition exact candidate heaps of C tokens would.
 
     → DataFrame(group_cols..., token long, est_count long, rank int).
     """
-    from pyspark import TaskContext
-
     group_cols = list(group_cols)
-    C = candidates_per_partial or max(8 * k, 256)
-    in_schema = df.schema
-    prefix = agg._schema_prefix(in_schema, group_cols)
-    schema = prefix + ("state binary, cands array<long>, n_items long, "
-                       "part_id long")
-    params = {"depth": depth, "width": width}
+    specs = {"cms": {"kind": "cms", "value_col": value_col,
+                     "params": {"depth": depth, "width": width}},
+             "cand": {"kind": "mg", "value_col": value_col,
+                      "params": {"k": max(8 * k, 256)}}}
+    blobs = agg.multi_sketch_agg(df, specs, group_cols)
 
-    def partial(batches):
-        """Arrow scan: zero-copy flat token buffer + shared dedupe per
-        batch (same hot loop as agg.build_partials_multi), plus exact local
-        candidate tracking for the distributed heavy-hitter argument."""
-        import pyarrow as pa
-
-        states: dict[tuple, cms_mod.CMS] = {}
-        acc_u: dict[tuple, list] = {}  # per-batch (uniq, count) arrays
-        acc_c: dict[tuple, list] = {}
-
-        def ingest(gkey, uniq, counts):
-            st = states.get(gkey)
-            if st is None:
-                st = cms_mod.CMS(**params)
-                states[gkey] = st
-                acc_u[gkey], acc_c[gkey] = [], []
-            uniq64 = uniq.astype(np.int64, copy=False)
-            st.update_hashes(hash64(uniq64.view(np.uint64)), counts=counts)
-            acc_u[gkey].append(uniq64)
-            acc_c[gkey].append(counts)
-
-        for batch in batches:
-            codes, mapping = agg._batch_columns(batch, group_cols)
-            col = batch.column(value_col)
-            flat, lens = agg._flatten_list_column(col)
-            tg = np.repeat(codes, lens) if len(mapping) > 1 else None
-            if flat.dtype.kind == "f":
-                # element-level nulls arrive as float64+NaN from Arrow:
-                # drop them (an astype would turn NaN into a garbage
-                # int64 token), same guard as agg.build_partials_multi
-                mask = ~np.isnan(flat)
-                flat = flat[mask].astype(np.int64)
-                if tg is not None:
-                    tg = tg[mask]
-            if flat.size == 0:
-                continue
-            if len(mapping) == 1:
-                uniq, counts = agg._unique_counts(flat)
-                ingest(mapping[min(mapping)], uniq, counts)
-            else:
-                for g in sorted(mapping):
-                    sel = flat[tg == g]
-                    if sel.size == 0:
-                        continue
-                    uniq, counts = agg._unique_counts(sel)
-                    ingest(mapping[g], uniq, counts)
-        if not states:
-            return
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for gkey, st in states.items():
-            # exact local counts across batches, vectorized group-sum
-            uu = np.concatenate(acc_u[gkey])
-            cc = np.concatenate(acc_c[gkey])
-            uniq, inv = np.unique(uu, return_inverse=True)
-            tot = np.zeros(uniq.size, dtype=np.int64)
-            np.add.at(tot, inv, cc)
-            order = np.lexsort((uniq, -tot))[:C]
-            rows.append((*gkey, st.to_bytes(), uniq[order].tolist(),
-                         int(st.n_items), pid))
-        names = group_cols + ["state", "cands", "n_items", "part_id"]
-        cols = dict(zip(names, map(list, zip(*rows))))
-        arrays = agg._group_arrays(in_schema, group_cols, cols) + [
-            pa.array(cols["state"], pa.binary()),
-            pa.array(cols["cands"], pa.list_(pa.int64())),
-            pa.array(cols["n_items"], pa.int64()),
-            pa.array(cols["part_id"], pa.int64())]
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    def merge(key, pdf):
-        merged = registry.merge_blobs(list(pdf["state"]))
-        st = registry.from_bytes(merged)
-        cands = np.unique(np.concatenate([np.asarray(c, dtype=np.int64)
-                                          for c in pdf["cands"]]))
-        est = st.estimate_hashes(hash64(cands.view(np.uint64)))
-        order = np.argsort(-est, kind="stable")[:C]
-        row = {c: pdf[c].iloc[0] for c in group_cols}
-        row.update(state=merged, cands=cands[order].tolist(),
-                   n_items=int(pdf["n_items"].sum()),
-                   part_id=int(pdf["part_id"].iloc[0]))
-        return pd.DataFrame([row])
-
-    partials = df.select(*group_cols, value_col).mapInArrow(partial, schema)
-    # the rounds of agg.tree_merge, sized the way multi_sketch_agg sizes
-    # them: the last round collapses to ONE row per group, which finalize
-    # reads
-    merged = agg._merge_rounds(
-        partials, group_cols, merge, schema,
-        df.sparkSession.sparkContext.defaultParallelism)
-
-    # final: explode candidates, estimate with the merged CMS, rank, top-k
     def finalize(key, pdf):
-        st = registry.from_bytes(pdf["state"].iloc[0])
-        cands = np.asarray(pdf["cands"].iloc[0], dtype=np.int64)
-        est = st.estimate_hashes(hash64(cands.view(np.uint64)))
+        st = dict(zip(pdf["sketch"], map(registry.from_bytes, pdf["state"])))
+        cands = st["cand"].keys
+        est = st["cms"].estimate_hashes(hash64(cands.view(np.uint64)))
         order = np.lexsort((cands, -est))[:k]
         row_base = {c: pdf[c].iloc[0] for c in group_cols}
         rows = [dict(row_base, token=int(cands[i]), est_count=int(est[i]),
                      rank=r + 1) for r, i in enumerate(order)]
         return pd.DataFrame(rows)
 
-    out_schema = prefix + "token long, est_count long, rank int"
-    return merged.groupBy(*group_cols).applyInPandas(finalize, out_schema)
+    out_schema = agg._schema_prefix(df.schema, group_cols) + \
+        "token long, est_count long, rank int"
+    return blobs.groupBy(*group_cols).applyInPandas(finalize, out_schema)
 
 
 def build_membership(df, value_col="tokens", group_cols=("source",),
@@ -301,10 +214,7 @@ def vocabulary_overlap(df, group_cols=("source",), value_col="tokens",
     High-cardinality group columns (days, domains) therefore scale like any
     other join, instead of an O(G²) driver loop over collected state.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
-
-    from . import agg
 
     blobs = agg.sketch_agg(df, "hll", value_col, group_cols, {"p": p})
     keyed = blobs.select(
@@ -351,10 +261,7 @@ def vocabulary_overlap_theta(df, group_cols=("source",),
     expressions per pair row. → DataFrame(group_a, group_b, est_a, est_b,
     est_union, est_inter, est_diff_ab, jaccard).
     """
-    import pandas as pd
     from pyspark.sql import functions as F
-
-    from . import agg
 
     blobs = agg.sketch_agg(df, "theta", value_col, group_cols, {"k": k})
     keyed = blobs.select(
@@ -399,8 +306,6 @@ def build_sharded_membership(df, n_shards: int = 32, value_col: str = "tokens",
     — the reference's partition-aware query routing (R6, README.md:342;
     memcached lookup replaced by storage-level pruning)."""
     from pyspark.sql import functions as F
-
-    from . import agg
 
     # cast to long BEFORE hashing: xxhash64 hashes the binary width, so an
     # int32 token and the same value as int64 route to different shards —
@@ -507,8 +412,6 @@ def mg_heavy_hitters(df, k: int = 10, counters: int = 1024,
     → DataFrame(group_cols..., token long, est_min long, est_max long,
     rank int), rank by (count desc, token asc).
     """
-    from pyspark.sql import functions as F  # noqa: F401
-
     group_cols = list(group_cols)
     blobs = agg.sketch_agg(df, "mg", value_col, group_cols,
                            {"k": int(counters)})
@@ -548,8 +451,6 @@ def f2_moment(df, value_col="tokens", group_cols=("source",),
 
     → DataFrame(group_cols..., est_f2 double).
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -559,14 +460,8 @@ def f2_moment(df, value_col="tokens", group_cols=("source",),
 
     blobs = agg.sketch_agg(df, "cs", value_col, group_cols,
                            {"depth": depth, "width": width})
-    out = blobs.select(*group_cols, f2("state").alias("est_f2"))
-    if include_global:
-        gblob = agg.tree_merge(blobs, group_cols=())
-        gout = gblob.select(f2("state").alias("est_f2"))
-        for c in group_cols:
-            gout = gout.withColumn(c, F.lit("__all__"))
-        out = out.unionByName(gout.select(*group_cols, "est_f2"))
-    return out
+    return _with_global_row(blobs, group_cols, f2, "est_f2",
+                            include_global)
 
 
 # ------------------------------------------------------- state introspection
@@ -583,7 +478,6 @@ def hll_register_table(blobs_df, group_cols=("grp",)):
     sketch-state analog of the reference's partition-assignment dump
     (`EdgeCutSGP.java:247-255` writes the raw id→partition map, not a
     summary of it)."""
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
@@ -618,7 +512,6 @@ def theta_summary_table(blobs_df, group_cols=("grp",)):
     (kernels/theta.py:_trim keeps the k smallest below the (k+1)-th), so
     an order-statistic window query re-derives them exactly
     (`theta_kmv_replay` oracle)."""
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 

@@ -31,6 +31,17 @@ from __future__ import annotations
 from . import agg
 
 
+def _file_stream(spark, input_path: str, schema, reader_options):
+    """Parquet file stream over `input_path`. The file-stream source
+    cannot infer a schema, so `schema=None` takes the one a batch read of
+    the same files (and `reader_options`) sees."""
+    opts = reader_options or {}
+    if schema is None:
+        schema = spark.read.options(**opts).parquet(input_path).schema
+    return spark.readStream.schema(schema).options(**opts) \
+        .parquet(input_path)
+
+
 def stream_sketch_build(spark, input_path: str, state_dir: str,
                         specs: dict, group_cols=("source",),
                         checkpoint_dir: str | None = None,
@@ -53,11 +64,7 @@ def stream_sketch_build(spark, input_path: str, state_dir: str,
     stream select one table out of a directory of tables — the file-stream
     source only accepts directory paths.
     """
-    opts = reader_options or {}
-    if schema is None:
-        schema = spark.read.options(**opts).parquet(input_path).schema
-    stream = spark.readStream.schema(schema).options(**opts) \
-        .parquet(input_path)
+    stream = _file_stream(spark, input_path, schema, reader_options)
 
     def sink(batch_df, batch_id: int):
         # an empty batch builds no blob rows (it writes an empty batch
@@ -256,11 +263,7 @@ def windowed_stream_agg(spark, input_path: str, window: str = "1 day",
     """
     from pyspark.sql import functions as F
 
-    opts = reader_options or {}
-    if schema is None:
-        schema = spark.read.options(**opts).parquet(input_path).schema
-    stream = spark.readStream.schema(schema).options(**opts) \
-        .parquet(input_path)
+    stream = _file_stream(spark, input_path, schema, reader_options)
     # watermarks require TIMESTAMP (with zone); parquet NTZ columns cast
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (stream.withWatermark(ts_col, watermark)
@@ -289,11 +292,7 @@ def sessionized_stream_agg(spark, input_path: str, gap: str = "30 minutes",
     """
     from pyspark.sql import functions as F
 
-    opts = reader_options or {}
-    if schema is None:
-        schema = spark.read.options(**opts).parquet(input_path).schema
-    stream = spark.readStream.schema(schema).options(**opts) \
-        .parquet(input_path)
+    stream = _file_stream(spark, input_path, schema, reader_options)
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (stream.withWatermark(ts_col, watermark)
             .groupBy(F.col(key_col),
@@ -324,11 +323,7 @@ def dedup_stream_agg(spark, input_path: str, dedup_keys=("user_id", "event_type"
     """
     from pyspark.sql import functions as F
 
-    opts = reader_options or {}
-    if schema is None:
-        schema = spark.read.options(**opts).parquet(input_path).schema
-    stream = spark.readStream.schema(schema).options(**opts) \
-        .parquet(input_path)
+    stream = _file_stream(spark, input_path, schema, reader_options)
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     keys = list(dedup_keys)
     if watermark is not None:
@@ -360,20 +355,16 @@ def stream_stream_join(spark, input_path: str, left_type: str = "click",
     """
     from pyspark.sql import functions as F
 
-    opts = reader_options or {}
-    if schema is None:
-        schema = spark.read.options(**opts).parquet(input_path).schema
+    stream = _file_stream(spark, input_path, schema, reader_options)
 
     def side(event_type, prefix):
-        s = (spark.readStream.schema(schema).options(**opts)
-             .parquet(input_path)
-             .where(F.col("event_type") == event_type)
-             .select(F.col(key_col).alias(f"{prefix}_user"),
-                     F.col(ts_col).cast("timestamp")
-                     .alias(f"{prefix}_ts"),
-                     F.col("event_id").alias(f"{prefix}_id"))
-             .withWatermark(f"{prefix}_ts", watermark))
-        return s
+        return (stream
+                .where(F.col("event_type") == event_type)
+                .select(F.col(key_col).alias(f"{prefix}_user"),
+                        F.col(ts_col).cast("timestamp")
+                        .alias(f"{prefix}_ts"),
+                        F.col("event_id").alias(f"{prefix}_id"))
+                .withWatermark(f"{prefix}_ts", watermark))
 
     lhs, rhs = side(left_type, "l"), side(right_type, "r")
     cond = ((F.col("l_user") == F.col("r_user"))
@@ -399,9 +390,7 @@ def running_distinct_stream(spark, input_path: str, p: int = 12,
 
     from .kernels import registry
 
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
+    stream = _file_stream(spark, input_path, schema, None)
 
     out_schema = f"{group_col} string, est_distinct double, n_batches int"
     state_schema = "state binary, n_batches int"
@@ -474,9 +463,7 @@ def windowed_heavy_hitters_stream(spark, input_path: str,
 
     wm_ms = _interval_ms(watermark)
 
-    if schema is None:
-        schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
+    stream = _file_stream(spark, input_path, schema, None)
 
     keyed = (stream
              .withWatermark(ts_col, watermark)

@@ -60,7 +60,7 @@ EXEMPT = {
     "minhash_near_dup",       # minhash kernel UDF feeds banded LSH; its
                               # oracle replays shingles, 64 lanes, band
                               # buckets, caps and the keq/64 estimate
-    "cms_heavy_hitters",      # CMS build (mapInArrow) + candidate heaps IS
+    "cms_heavy_hitters",      # CMS + MG candidate build (mapInArrow) IS
                               # the operator; collision-free corpus makes
                               # the estimates exact (oracle loud-guards it)
     "cosine_pairs",           # the exact all-pairs GEMM IS the vectorized

@@ -331,11 +331,46 @@ def test_distinct_tokens_global_rejects_nonstring_groups(spark):
     from sgp_sketch import queries
 
     df = spark.createDataFrame([(1, [1, 2])], "day int, tokens array<long>")
-    with pytest.raises(TypeError, match="string group columns"):
-        queries.distinct_tokens(df, group_cols=("day",), include_global=True)
-    # non-global path works fine with int group cols
-    assert queries.distinct_tokens(
-        df, group_cols=("day",), include_global=False).count() == 1
+    for query in (queries.distinct_tokens, queries.f2_moment):
+        with pytest.raises(TypeError, match="string group columns"):
+            query(df, group_cols=("day",), include_global=True)
+        # non-global path works fine with int group cols
+        assert query(df, group_cols=("day",),
+                     include_global=False).count() == 1
+
+
+def test_heavy_hitters_int32_signed_tokens_int_groups(spark):
+    """Signed int32 tokens under an int group column, with several groups
+    per batch (coalesce(2): the packed (group, token) sort) and with 130
+    partials per group: the exact top-k, each count within the CMS
+    bound."""
+    k, width = 10, 1 << 14
+    rng = np.random.default_rng(11)
+    rows = []
+    for day in range(3):
+        # 12 heavy tokens with distinct counts (no tie at rank k), the
+        # rest a light tail over [-400, 400)
+        heavy = np.repeat(np.arange(-6, 6) * 37 - day,
+                          600 - 40 * np.arange(12))
+        toks = np.concatenate([heavy, rng.integers(-400, 400, 20000)])
+        rng.shuffle(toks)
+        rows += [(day, chunk.tolist()) for chunk in np.array_split(toks, 300)]
+    df = spark.createDataFrame(rows, "day int, tokens array<int>")
+    pdf = pd.DataFrame(rows, columns=["day", "tokens"])
+    for inp in (df.coalesce(2), df.repartition(130)):
+        out = queries.heavy_hitters(inp, k=k, group_cols=("day",),
+                                    width=width).toPandas()
+        assert sorted(out.day.unique().tolist()) == [0, 1, 2]
+        for day, sub in pdf.groupby("day"):
+            flat = np.concatenate(sub.tokens.map(np.asarray).to_numpy())
+            uniq, counts = np.unique(flat, return_counts=True)
+            truth = dict(zip(uniq.tolist(), counts.tolist()))
+            exact = set(uniq[np.lexsort((uniq, -counts))[:k]].tolist())
+            got = out[out.day == day]
+            assert set(got.token.tolist()) == exact, day
+            eps_n = np.e / width * flat.size
+            for t, e in zip(got.token, got.est_count):
+                assert truth[t] <= e <= truth[t] + eps_n, (day, t, e)
 
 
 def test_cs_distributed_build_byte_equal_and_f2(spark, tokens_sdf,
