@@ -11,11 +11,14 @@ Local smoke (bounded — drain what's there, then exit):
         --glob documents.parquet --state-dir /tmp/sstate \
         --checkpoint-dir /tmp/sckpt --available-now
 
-Each micro-batch appends partial sketch blobs to an idempotent
+Each micro-batch writes its unmerged partial sketch blobs (one row per
+scan partition × group × sketch, no shuffle) to an idempotent
 `state_dir/batch_id=N` directory (replay-safe — see
 sgp_sketch/streaming.py); the current estimate at ANY time is
 `streamed_estimates(spark, state_dir)`, a merge of all blob rows, equal
-byte-for-byte to a batch build over the same inputs. Restarting the job
+byte-for-byte to a batch build over the same inputs. The state table
+grows with every batch's partition count until
+`streaming.compact_state` folds it. Restarting the job
 with the same --checkpoint-dir resumes from the recorded offsets — the
 streaming twin of jobs/build_sketches.py's slice-wise resume.
 """

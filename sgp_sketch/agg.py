@@ -7,8 +7,9 @@ aggregates, made explicit for our binary states — SURVEY.md §2.4):
   read → [mapInArrow] one partial state per (partition × group × spec)
          (map-side combine: the analog of the reference's per-partition
          counters, `/root/reference/src/main/java/ca/uwaterloo/cs/sgp/streaming/EdgeCutSGP.java:28-31`)
-       → [applyInPandas rounds] `tree_merge`: FANIN-ary tree over part_id
-         buckets, O(log_FANIN P) shuffle rounds of KB-sized blobs
+       → [repartition + mapInArrow rounds] `tree_merge`: FANIN-ary tree
+         over part_id buckets, O(log_FANIN P) shuffle rounds of KB-sized
+         blobs, each task folding its rows into one state per key
        → one row per (group, sketch).
 
 `build_partials_multi` is the only sketch builder: hash kinds (hll, cms,
@@ -85,6 +86,50 @@ def _unique_counts(flat: np.ndarray):
     return np.unique(flat, return_counts=True)
 
 
+def _merge_batches(batches, group_cols, schema):
+    """Fold blob rows (group_cols…, sketch_type, state, n_items, part_id)
+    arriving as Arrow batches to one row per distinct (group_cols…,
+    sketch_type, part_id): the tree-merge round body.
+
+    Each row is decoded and merged into its key's state as it arrives
+    (the left fold `registry.merge_blobs` runs), so a task holds one
+    state per key, never every blob. `n_items` sums per key. Output rows
+    come in one batch sorted by key, the order Spark's sort-based grouping
+    emits: kll, tdigest and mg merges depend on input order, so a later
+    merge of these rows (per-source → global, the next round) only sees
+    the same order, and gives the same bytes, if each task emits sorted.
+    `schema` is the input's Spark schema; it types the group columns."""
+    import pyarrow as pa
+
+    keys = group_cols + ["sketch_type", "part_id"]
+    acc: dict[tuple, list] = {}   # key → [state, n_items]
+    for batch in batches:
+        cols = [batch.column(c).to_pylist() for c in keys]
+        for key, blob, n in zip(zip(*cols),
+                                batch.column("state").to_pylist(),
+                                batch.column("n_items").to_pylist()):
+            st = registry.from_bytes(blob)
+            cur = acc.get(key)
+            if cur is None:
+                acc[key] = [st, n]
+            else:
+                cur[0] = cur[0].merge(st)
+                cur[1] += n
+    if not acc:
+        return
+    # ascending, nulls first, as Spark sorts
+    order = sorted(acc, key=lambda k: tuple((v is not None, v) for v in k))
+    values = {c: [k[i] for k in order] for i, c in enumerate(keys)}
+    arrays = _group_arrays(schema, group_cols, values) + [
+        pa.array(values["sketch_type"], pa.string()),
+        pa.array([acc[k][0].to_bytes() for k in order], pa.binary()),
+        pa.array([acc[k][1] for k in order], pa.int64()),
+        pa.array(values["part_id"], pa.int64())]
+    yield pa.RecordBatch.from_arrays(
+        arrays, names=group_cols + ["sketch_type", "state", "n_items",
+                                    "part_id"])
+
+
 def tree_merge(partials, out_schema: str | None = None,
                group_cols=("source",), n_parts: int | None = None):
     """Merge blob rows (group_cols…, sketch_type, state, n_items[,
@@ -96,7 +141,14 @@ def tree_merge(partials, out_schema: str | None = None,
     same invariant the reference's `reduceByKey(_ ++ _)` relies on
     (`/root/reference/scripts/analytics/snap2adj.scala:16`). `out_schema`
     defaults to the group columns' types in `partials` plus
-    PARTIAL_SCHEMA_TAIL.
+    PARTIAL_SCHEMA_TAIL; a caller's `out_schema` must declare the same
+    types.
+
+    Each round is one `repartition(*keys)` plus one `mapInArrow` of
+    `_merge_batches`: Arrow batches in, one folded state per key, rows
+    sorted by key out (that sort keeps order-dependent kinds byte-equal
+    to Spark's sort-based grouping; see `_merge_batches`). No pandas
+    frame and no per-group UDF call.
 
     `n_parts` (the partial count upper bound = input partition count)
     sets the round count while the plan is built, without a counting
@@ -108,29 +160,26 @@ def tree_merge(partials, out_schema: str | None = None,
 
     group_cols = list(group_cols)
     keys = group_cols + ["sketch_type", "part_id"]
-    if out_schema is None:
-        out_schema = _schema_prefix(partials.schema, group_cols) + \
-            PARTIAL_SCHEMA_TAIL
-
-    def merge(key, pdf):
-        import pandas as pd
-
-        row = {c: pdf[c].iloc[0] for c in keys}
-        row.update(state=registry.merge_blobs(list(pdf["state"])),
-                   n_items=int(pdf["n_items"].sum()))
-        return pd.DataFrame([row])
-
     df = partials
     if "part_id" not in df.columns:
         df = df.withColumn("part_id", F.lit(0).cast("long"))
+    schema = df.schema
+    if out_schema is None:
+        out_schema = _schema_prefix(schema, group_cols) + \
+            PARTIAL_SCHEMA_TAIL
+
+    def merge(batches):
+        return _merge_batches(batches, group_cols, schema)
+
+    def merge_round(df):
+        return df.repartition(*keys).mapInArrow(merge, out_schema)
+
     rounds = (1 if n_parts is None
               else max(1, math.ceil(math.log(max(n_parts, 2), FANIN))))
     for _ in range(rounds - 1):
-        df = df.withColumn("part_id",
-                           (F.col("part_id") / F.lit(FANIN)).cast("long"))
-        df = df.groupBy(*keys).applyInPandas(merge, out_schema)
-    df = df.withColumn("part_id", F.lit(0).cast("long"))
-    return df.groupBy(*keys).applyInPandas(merge, out_schema) \
+        df = merge_round(df.withColumn(
+            "part_id", (F.col("part_id") / F.lit(FANIN)).cast("long")))
+    return merge_round(df.withColumn("part_id", F.lit(0).cast("long"))) \
         .drop("part_id")
 
 

@@ -88,6 +88,9 @@ def _encode_bigint(x: int) -> bytes:
 def _decode_bigint(buf: bytes, off: int) -> tuple[int, int]:
     (ln,) = struct.unpack_from("<I", buf, off)
     off += 4
+    if off + ln > len(buf):
+        raise ValueError(f"truncated Moments blob: power sum needs {ln} "
+                         f"bytes at offset {off}, blob has {len(buf)}")
     return int.from_bytes(buf[off:off + ln], "little", signed=True), off + ln
 
 

@@ -6,20 +6,24 @@ from __future__ import annotations
 
 import struct
 
-from . import bloom, cms, cs, dd, fd, hll, kll, mg, moments, tdigest, theta
+from . import (bloom, cms, cs, dd, fd, hll, kll, mg, moments, serde,
+               tdigest, theta)
 
+# type byte → (kind, class, header versions its from_bytes reads). The
+# array kernels write serde's sparse payload under its own version byte.
 _TYPES = {
-    hll.TYPE_HLL: hll.HLL,
-    cms.TYPE_CMS: cms.CMS,
-    bloom.TYPE_BLOOM: bloom.Bloom,
-    kll.TYPE_KLL: kll.KLL,
-    tdigest.TYPE_TDIGEST: tdigest.TDigest,
-    theta.TYPE_THETA: theta.Theta,
-    mg.TYPE_MG: mg.MG,
-    fd.TYPE_FD: fd.FD,
-    cs.TYPE_CS: cs.CS,
-    dd.TYPE_DD: dd.DD,
-    moments.TYPE_MOMENTS: moments.Moments,
+    hll.TYPE_HLL: ("hll", hll.HLL, {hll.VERSION}),
+    cms.TYPE_CMS: ("cms", cms.CMS, {cms.VERSION, serde.SPARSE_VER}),
+    bloom.TYPE_BLOOM: ("bloom", bloom.Bloom,
+                       {bloom.VERSION, serde.SPARSE_VER}),
+    kll.TYPE_KLL: ("kll", kll.KLL, {kll.VERSION}),
+    tdigest.TYPE_TDIGEST: ("tdigest", tdigest.TDigest, {tdigest.VERSION}),
+    theta.TYPE_THETA: ("theta", theta.Theta, {theta.VERSION}),
+    mg.TYPE_MG: ("mg", mg.MG, {mg.VERSION}),
+    fd.TYPE_FD: ("fd", fd.FD, {fd.VERSION}),
+    cs.TYPE_CS: ("cs", cs.CS, {cs.VERSION, serde.SPARSE_VER}),
+    dd.TYPE_DD: ("dd", dd.DD, {dd.VERSION}),
+    moments.TYPE_MOMENTS: ("moments", moments.Moments, {moments.VERSION}),
 }
 
 _FACTORIES = {
@@ -38,15 +42,29 @@ _FACTORIES = {
 
 
 def from_bytes(buf: bytes):
-    magic, _ver, typ = struct.unpack_from("<2sBB", buf, 0)
+    """Decode a blob of any kind. A blob cut short, or with a header
+    version its kernel does not read, raises ValueError naming the kind."""
+    try:
+        magic, ver, typ = struct.unpack_from("<2sBB", buf, 0)
+    except struct.error:
+        raise ValueError(f"sketch blob too short ({len(buf)} bytes)") \
+            from None
     if magic != b"SK":
         raise ValueError("bad sketch magic")
     # look up BEFORE calling so a KeyError raised inside a kernel's
     # from_bytes is never misreported as "unknown sketch type"
-    cls = _TYPES.get(typ)
-    if cls is None:
+    entry = _TYPES.get(typ)
+    if entry is None:
         raise ValueError(f"unknown sketch type {typ}")
-    return cls.from_bytes(buf)
+    kind, cls, versions = entry
+    if ver not in versions:
+        raise ValueError(f"unsupported {kind} blob version {ver} "
+                         f"(reads {sorted(versions)})")
+    try:
+        return cls.from_bytes(buf)
+    except struct.error as e:
+        raise ValueError(f"truncated {kind} blob ({len(buf)} bytes): {e}") \
+            from None
 
 
 def make(kind: str, **params):

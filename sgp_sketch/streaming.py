@@ -10,10 +10,12 @@ micro-batch produces partial blobs; the running answer is a merge of all
 blobs so far. Two idiomatic Spark surfaces:
 
   * `foreachBatch` (batch-first, default): readStream → per-batch
-    multi_sketch_agg → append blob rows to a parquet state table. The
-    current estimate at any time = tree_merge(all blob rows) — the same
-    kernel merge the batch path uses, so stream results are byte-comparable
-    to a batch build over the union of inputs.
+    partial blobs (`build_partials_multi`, no merge, no shuffle) → one
+    parquet dir per batch in a state table. The current estimate at any
+    time = tree_merge(all blob rows) — the same kernel merge the batch
+    path uses, so stream results are byte-comparable to a batch build over
+    the union of inputs. The table holds one row per (scan partition ×
+    group × spec) of every batch until `compact_state` folds it.
   * `applyInPandasWithState` (custom stateful operator): per-group HLL blob
     carried in GroupState, updated per micro-batch, emitting a running
     estimate row. Used where a live per-key running value is wanted instead
@@ -50,6 +52,14 @@ def stream_sketch_build(spark, input_path: str, state_dir: str,
     """File-stream → per-micro-batch partial sketch blobs written to a
     parquet state table. Returns the StreamingQuery (caller awaits it).
 
+    The sink does not merge: each micro-batch writes its
+    `build_partials_multi` rows (group…, sketch, sketch_type, state,
+    n_items — one per scan partition × group × spec; `part_id` dropped so
+    batch dirs read beside compacted snapshots) and costs one scan-and-
+    write job. `streamed_estimates` and `compact_state` merge at read
+    time. The state table therefore grows with the partition count of
+    every batch until `compact_state` folds it into one snapshot.
+
     Exactly-once: foreachBatch is at-least-once (a crash between the data
     write and the streaming-checkpoint commit replays the batch), so the
     sink must be idempotent, not merely keyed. Each batch overwrites its
@@ -71,8 +81,9 @@ def stream_sketch_build(spark, input_path: str, state_dir: str,
         # directory), so it needs no emptiness check: one job per batch
         if prepare is not None:
             batch_df = prepare(batch_df)
-        blobs = agg.multi_sketch_agg(batch_df, specs, group_cols)
-        (blobs.write.mode("overwrite")
+        partials, _schema = agg.build_partials_multi(batch_df, specs,
+                                                     group_cols)
+        (partials.drop("part_id").write.mode("overwrite")
          .parquet(f"{state_dir}/batch_id={int(batch_id)}"))
 
     writer = stream.writeStream.foreachBatch(sink)

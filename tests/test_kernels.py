@@ -282,6 +282,39 @@ def test_registry_merge_blobs():
     assert abs(merged.estimate() - 4000) / 4000 < 0.05
 
 
+
+def _one_state(kind):
+    """A non-empty state of `kind` built from small deterministic input."""
+    ints = np.arange(1, 301, dtype=np.int64) % 97
+    st = registry.make(kind, **{"hll": {"p": 10}, "cms": {"width": 256},
+                                "bloom": {"n_blocks": 64},
+                                "cs": {"width": 256},
+                                "fd": {"ell": 4, "d": 3}}.get(kind, {}))
+    if kind == "fd":
+        return st.update(np.arange(30.0).reshape(10, 3))
+    if kind in ("kll", "tdigest", "dd"):
+        return st.update(ints.astype(np.float64) + 0.5)
+    if kind in ("hll", "bloom", "theta"):
+        return st.update(ints.astype(np.uint64))
+    return st.update(ints)
+
+
+@pytest.mark.parametrize("kind", ["hll", "cms", "bloom", "kll", "tdigest",
+                                  "theta", "mg", "fd", "cs", "dd",
+                                  "moments"])
+def test_damaged_or_version_skewed_blob_raises(kind):
+    """An intact blob round-trips; an unknown header version or a cut
+    blob raises ValueError, never returns a state."""
+    blob = _one_state(kind).to_bytes()
+    assert registry.from_bytes(blob).to_bytes() == blob
+    skewed = blob[:2] + bytes([99]) + blob[3:]
+    with pytest.raises(ValueError, match="version 99"):
+        registry.from_bytes(skewed)
+    for cut in (blob[:-1], blob[:8]):
+        with pytest.raises(ValueError):
+            registry.from_bytes(cut)
+
+
 # ================================================================= theta
 
 def test_theta_exact_mode_small_sets():

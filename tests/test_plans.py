@@ -220,10 +220,10 @@ def test_per_key_build_is_one_shuffle(spark):
 
 def test_heavy_hitters_plan_is_one_merge_and_runs_no_job(spark,
                                                         tokens_sdf):
-    """heavy_hitters on a shuffled input: one merge round plus the
-    finalize (two grouped-map stages), and building the plan runs no
-    Spark job — the round count comes from the default parallelism, not
-    from counting the input's partitions."""
+    """heavy_hitters on a shuffled input: one Arrow merge round plus the
+    grouped-map finalize, and building the plan runs no Spark job — the
+    round count comes from the default parallelism, not from counting
+    the input's partitions."""
     from sgp_sketch import queries
 
     sc = spark.sparkContext
@@ -235,7 +235,8 @@ def test_heavy_hitters_plan_is_one_merge_and_runs_no_job(spark,
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert plan.count("FlatMapGroupsInPandas") == 2, plan
+    assert plan.count("MapInArrow merge(") == 1, plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert jobs == [], jobs
 
 

@@ -117,7 +117,7 @@ def test_multi_round_tree_merge(spark, tokens_sdf, tokens_pdf):
     rep = tokens_sdf.repartition(130)
     deep = agg.multi_sketch_agg(rep, specs, n_parts=130)
     plan = deep._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 2, plan
+    assert plan.count("MapInArrow merge(") == 2, plan
     rows = deep.collect()
     got = {(r["source"], r["sketch"]): bytes(r["state"]) for r in rows}
     assert len(rows) == len(got) == len(SOURCES) * len(specs)

@@ -536,3 +536,54 @@ def test_streamed_moments_byte_equal_to_batch(spark, stream_input,
               tokens_pdf[tokens_pdf.source == src]["n_tok"].tolist()]
         assert sk.n == len(xs)
         assert sk.s[1] == sum(x * x for x in xs)
+
+
+def test_replayed_micro_batch_keeps_streamed_state_exact(spark, tokens_sdf,
+                                                         tmp_path):
+    """A crash between a batch's state write and its streaming commit
+    makes Spark replay that batch on restart. The replay overwrites its
+    own batch dir: the dir count and the row count stay the same, and the
+    streamed state still equals a batch build (bytes for the
+    order-independent kinds, n_items for every spec)."""
+    specs = {"hll": {"kind": "hll", "value_col": "tokens",
+                     "params": {"p": 12}},
+             "cms": {"kind": "cms", "value_col": "tokens"},
+             "mom": {"kind": "moments", "value_col": "n_tok"},
+             "kll": {"kind": "kll", "value_col": "n_tok"}}
+    inp, state = str(tmp_path / "in"), str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    tokens_sdf.repartition(6).write.parquet(inp)
+
+    def drain():
+        q = streaming.stream_sketch_build(
+            spark, inp, state, specs, checkpoint_dir=ckpt,
+            reader_options={"maxFilesPerTrigger": 2})
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return [p["batchId"] for p in q.recentProgress]
+
+    def dirs():
+        return sorted(d for d in os.listdir(state)
+                      if d.startswith("batch_id="))
+
+    assert drain() == [0, 1, 2]
+    n_dirs, n_rows = dirs(), spark.read.parquet(state).count()
+    last = max(int(d.split("=")[1]) for d in n_dirs)
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    assert drain() == [last]
+    assert dirs() == n_dirs
+    assert spark.read.parquet(state).count() == n_rows
+
+    def blobs(df):
+        return {(r["source"], r["sketch"]): (bytes(r["state"]),
+                                             r["n_items"])
+                for r in df.collect()}
+
+    streamed = blobs(streaming.streamed_estimates(spark, state))
+    batch = blobs(agg.multi_sketch_agg(spark.read.parquet(inp), specs))
+    assert set(streamed) == set(batch)
+    for key, (blob, n) in batch.items():
+        assert streamed[key][1] == n, key
+        if key[1] in ("hll", "mom"):
+            assert streamed[key][0] == blob, key

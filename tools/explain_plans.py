@@ -76,8 +76,10 @@ def main():
     section("multi_sketch_agg (the engine's full-scan path)",
             agg.multi_sketch_agg(df, specs, ("source",)),
             "One MapInArrow scan produces KB-sized partials; every Exchange\n"
-            "after it moves blobs only, never input data. The "
-            "FlatMapGroupsInPandas\nnodes are the O(log P) tree-merge rounds.")
+            "after it moves blobs only, never input data. Each O(log P)\n"
+            "tree-merge round is one Exchange plus one `MapInArrow merge`\n"
+            "that folds each key's blobs as they arrive: no Sort, no\n"
+            "pandas.")
 
     from sgp_sketch.routing import assign_shards
     section("assign_shards (R2/R3 greedy routing)",
@@ -235,11 +237,11 @@ def main():
             width=320)
     section("principal_spectrum (Frequent Directions over embeddings)",
             e.q_principal_spectrum(spark, sf),
-            "One PythonMapInArrow scan builds per-partition (ell x d) FD\n"
-            "states (SVD shrink inside the scan tasks); the tree-merge\n"
-            "rounds shuffle only KB blob rows, and the final explode is a\n"
-            "mapInPandas over |groups| rows. No d x d Gram, no vector\n"
-            "shuffle, at any row count.", width=320)
+            "One MapInArrow scan builds per-partition (ell x d) FD\n"
+            "states (SVD shrink inside the scan tasks); the Arrow\n"
+            "tree-merge rounds shuffle only KB blob rows, and the final\n"
+            "explode is a mapInPandas over |groups| rows. No d x d Gram,\n"
+            "no vector shuffle, at any row count.", width=320)
     section("bpe_encode (vectorized BPE corpus pass, round 4)",
             e.q_bpe_encode(spark, sf),
             "The corpus side is FileScan → Project(split/transform/\n"
@@ -287,7 +289,7 @@ def main():
                 ("source",)),
             "Same shape as every sketch build: pruned 2-column FileScan →\n"
             "MapInArrow partials → exchanges carry ~64-BYTE exact integer\n"
-            "states only → O(log P) tree-merge rounds. The registered\n"
+            "states only → O(log P) Arrow tree-merge rounds. The registered\n"
             "query finalizes |sources| blobs driver-side (bounded).",
             width=320)
     section("per_key_distinct (high-cardinality per-key state build)",
