@@ -458,7 +458,7 @@ def q_hll_daily_users(spark, sf_dir):
     ev = spark.table("events").select(
         F.col("ts").cast("date").cast("string").alias("d"), "user_id")
     blobs = agg.sketch_agg(ev, "hll", "user_id", ("d",), {"p": 14})
-    est = Q._estimate_udf()
+    est = Q._blob_udf("double", Q._estimate)
     return blobs.select("d", F.round(est("state"), 1).alias("est_users"))
 
 
@@ -1418,7 +1418,7 @@ def q_checkpointed_hll(spark, sf_dir):
                 ("source",), {"p": 14}, ckpt_dir=f"{work}/ckpt",
                 files_per_slice=1, prepare=doc_tokens_from)
             final = checkpoint.finalize(spark, f"{work}/ckpt")
-            est = Q._estimate_udf()
+            est = Q._blob_udf("double", Q._estimate)
             _STATEFUL_Q_CACHE[key] = (
                 final.select("source", est("state").alias("est_distinct"))
                 .collect())
@@ -1457,7 +1457,7 @@ def q_streamed_hll(spark, sf_dir):
             if not q.awaitTermination(300):
                 q.stop()  # never rmtree under a live query
                 raise RuntimeError("streaming build did not drain in 300s")
-            est = Q._estimate_udf()
+            est = Q._blob_udf("double", Q._estimate)
             final = streaming.streamed_estimates(spark, f"{work}/state")
             _STATEFUL_Q_CACHE[key] = (
                 final.select("source", est("state").alias("est_distinct"))
@@ -2332,41 +2332,26 @@ def q_theta_algebra_replay(spark, sf_dir):
     65th smallest (kernels/theta.py:merge/intersect/a_not_b exactly).
     This adjudicates the set-expression paths that theta_kmv_replay
     (single-set) and theta_bounds_check (bounds only) do not."""
-    import pandas as pd
-
     from sgp_sketch import agg
-    from sgp_sketch.kernels import registry
+    from sgp_sketch.queries import _blob_pairs
+
+    def alg(a, b):
+        i, d, u = a.intersect(b), a.a_not_b(b), a.merge(b)
+        return {"n_inter": int(i.retained.size),
+                "n_diff_ab": int(d.retained.size),
+                "n_union": int(u.retained.size),
+                "est_inter": float(i.estimate()),
+                "est_diff_ab": float(d.estimate()),
+                "est_union": float(u.estimate())}
 
     toks = _event_md5_tokens(spark, sf_dir)
     blobs = agg.sketch_agg(toks, "theta", "token", ("grp",), {"k": 64})
-    keyed = blobs.select("grp", "state")
-
-    @F.pandas_udf("struct<n_inter:long,n_diff_ab:long,n_union:long,"
-                  "est_inter:double,est_diff_ab:double,est_union:double>")
-    def alg(sa, sb):
-        rows = []
-        for ba, bb in zip(sa, sb):
-            a = registry.from_bytes(bytes(ba))
-            b = registry.from_bytes(bytes(bb))
-            i, d, u = a.intersect(b), a.a_not_b(b), a.merge(b)
-            rows.append({"n_inter": int(i.retained.size),
-                         "n_diff_ab": int(d.retained.size),
-                         "n_union": int(u.retained.size),
-                         "est_inter": float(i.estimate()),
-                         "est_diff_ab": float(d.estimate()),
-                         "est_union": float(u.estimate())})
-        return pd.DataFrame(rows, columns=["n_inter", "n_diff_ab",
-                                           "n_union", "est_inter",
-                                           "est_diff_ab", "est_union"])
-
-    a, b = keyed.alias("a"), keyed.alias("b")
-    pairs = (a.join(b, F.col("a.grp") < F.col("b.grp"))
-             .select(F.col("a.grp").alias("grp_a"),
-                     F.col("b.grp").alias("grp_b"),
-                     alg(F.col("a.state"), F.col("b.state")).alias("s")))
-    return (pairs.select("grp_a", "grp_b", "s.n_inter", "s.n_diff_ab",
-                         "s.n_union", "s.est_inter", "s.est_diff_ab",
-                         "s.est_union")
+    pairs = _blob_pairs(blobs, ("grp",),
+                        "struct<n_inter:long,n_diff_ab:long,n_union:long,"
+                        "est_inter:double,est_diff_ab:double,"
+                        "est_union:double>", alg)
+    return (pairs.select(F.col("group_a").alias("grp_a"),
+                         F.col("group_b").alias("grp_b"), "r.*")
             .orderBy("grp_a", "grp_b"))
 
 
@@ -4982,7 +4967,7 @@ def q_incremental_hll(spark, sf_dir):
             blobs = catalog.incremental_sketch_update(
                 spark, work, state1, specs, from_version=1,
                 prepare=doc_tokens_from)
-            est = Q._estimate_udf()
+            est = Q._blob_udf("double", Q._estimate)
             _STATEFUL_Q_CACHE[key] = (
                 blobs.select("source", est("state").alias("est_distinct"))
                 .collect())

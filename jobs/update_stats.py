@@ -100,7 +100,7 @@ def main(argv=None) -> int:
 
     # estimates only for the cardinality sketches — quantile/membership
     # states answer queries, not a single scalar
-    est = Q._estimate_udf()
+    est = Q._blob_udf("double", Q._estimate)
     blobs = spark.read.parquet(blob_dir)
     (blobs.filter(blobs.sketch_type.isin(["hll", "cms", "theta"]))
      .withColumn("estimate", est("state"))

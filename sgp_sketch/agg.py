@@ -356,6 +356,14 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
     """
     from pyspark import TaskContext
 
+    for name, spec in specs.items():
+        # specs arrive from outside (jobs/build_sketches.py --sketch): a
+        # bad one fails here, on the driver, not inside a task at action time
+        try:
+            registry.make(spec["kind"], **spec.get("params") or {})
+        except (TypeError, ValueError) as e:
+            raise ValueError(f"sketch spec {name!r} (kind "
+                             f"{spec['kind']!r}): {e}") from None
     group_cols = list(group_cols)
     in_schema = df.schema
     out_schema = _schema_prefix(in_schema, group_cols) + \

@@ -144,8 +144,9 @@ class Bloom:
         if magic != MAGIC or typ != TYPE_BLOOM:
             raise ValueError("not a Bloom blob")
         off = struct.calcsize("<2sBBBIQQ")
-        words = serde.unpack_flat(buf, off, ver, n_blocks * BLOCK_WORDS,
-                                  "<u8", np.uint64)
+        words, end = serde.unpack_flat(buf, off, ver, n_blocks * BLOCK_WORDS,
+                                       "<u8", np.uint64)
+        serde.check_end(buf, end, "bloom")
         return cls(n_blocks, k, seed, words=words, n_items=n_items)
 
 

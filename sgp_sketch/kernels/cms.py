@@ -160,7 +160,9 @@ class CMS:
         if magic != MAGIC or typ != TYPE_CMS:
             raise ValueError("not a CMS blob")
         off = struct.calcsize("<2sBBBIQQ")
-        flat = serde.unpack_flat(buf, off, ver, depth * width, "<i8", np.int64)
+        flat, end = serde.unpack_flat(buf, off, ver, depth * width, "<i8",
+                                      np.int64)
+        serde.check_end(buf, end, "cms")
         return cls(depth, width, seed, table=flat.reshape(depth, width),
                    n_items=n_items)
 

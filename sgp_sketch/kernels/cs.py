@@ -178,8 +178,9 @@ class CS:
         if magic != MAGIC or typ != TYPE_CS:
             raise ValueError("not a CS blob")
         off = struct.calcsize("<2sBBBIQQ")
-        flat = serde.unpack_flat(buf, off, ver, depth * width, "<i8",
-                                 np.int64)
+        flat, end = serde.unpack_flat(buf, off, ver, depth * width, "<i8",
+                                      np.int64)
+        serde.check_end(buf, end, "cs")
         return cls(depth, width, seed, table=flat.reshape(depth, width),
                    n_items=n_items)
 

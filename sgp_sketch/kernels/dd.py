@@ -50,6 +50,8 @@ import struct
 
 import numpy as np
 
+from . import serde
+
 MAGIC = b"SK"
 VERSION = 1
 TYPE_DD = 10
@@ -212,6 +214,7 @@ class DD:
             return out
 
         pk, pc, nk, nc = arr(npos), arr(npos), arr(nneg), arr(nneg)
+        serde.check_end(buf, off, "dd")
         return cls(alpha, pk, pc, nk, nc, zero=zero, n=n)
 
 

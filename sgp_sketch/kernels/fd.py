@@ -37,6 +37,8 @@ import struct
 
 import numpy as np
 
+from . import serde
+
 MAGIC = b"SK"
 VERSION = 1
 TYPE_FD = 8
@@ -151,6 +153,7 @@ class FD:
         if magic != MAGIC or typ != TYPE_FD:
             raise ValueError("not an FD blob")
         off = struct.calcsize("<2sBBIIQdQ")
+        serde.check_end(buf, off + 8 * nr * d, "fd")
         rows = np.frombuffer(buf, dtype="<f8", count=nr * d,
                              offset=off).reshape(nr, d)
         return cls(ell, d, rows.astype(np.float64), shed, n_rows)

@@ -28,6 +28,7 @@ import struct
 
 import numpy as np
 
+from . import serde
 from .hashing import hash64
 
 MAGIC = b"SK"
@@ -224,6 +225,7 @@ class HLL:
         if magic != MAGIC or typ != TYPE_HLL:
             raise ValueError("not an HLL blob")
         off = struct.calcsize("<2sBBBBI")
+        serde.check_end(buf, off + (n if mode else 4 * n), "hll")
         if mode:
             dense = np.frombuffer(buf, dtype=np.uint8, count=n, offset=off).copy()
             return cls(p, dense=dense)

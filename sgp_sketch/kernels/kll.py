@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from . import serde
+
 MAGIC = b"SK"
 VERSION = 1
 TYPE_KLL = 4
@@ -161,6 +163,7 @@ class KLL:
             levels.append(np.frombuffer(buf, dtype="<f8", count=cnt,
                                         offset=off).astype(np.float64))
             off += 8 * cnt
+        serde.check_end(buf, off, "kll")
         return cls(k, levels=levels, n=n, flips=flips, vmin=vmin, vmax=vmax)
 
 

@@ -33,6 +33,8 @@ import struct
 
 import numpy as np
 
+from . import serde
+
 MAGIC = b"SK"
 VERSION = 1
 TYPE_MG = 7
@@ -154,6 +156,7 @@ class MG:
         if magic != MAGIC or typ != TYPE_MG:
             raise ValueError("not an MG blob")
         off = struct.calcsize("<2sBBIQQQ")
+        serde.check_end(buf, off + 16 * sz, "mg")
         keys = np.frombuffer(buf, dtype="<i8", count=sz, offset=off)
         counts = np.frombuffer(buf, dtype="<i8", count=sz,
                                offset=off + 8 * sz)

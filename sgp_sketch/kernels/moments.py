@@ -57,6 +57,8 @@ import struct
 
 import numpy as np
 
+from . import serde
+
 MAGIC = b"SK"
 VERSION = 1
 TYPE_MOMENTS = 11
@@ -204,15 +206,17 @@ class Moments:
             raise ValueError("not a Moments blob")
         if ver != VERSION:
             raise ValueError(f"unsupported Moments version {ver}")
-        if not has:
-            return cls()
         off = struct.calcsize("<2sBBQB")
+        if not has:
+            serde.check_end(buf, off, "moments")
+            return cls()
         mn, mx = struct.unpack_from("<qq", buf, off)
         off += 16
         s = []
         for _ in range(_K):
             x, off = _decode_bigint(buf, off)
             s.append(x)
+        serde.check_end(buf, off, "moments")
         return cls(n, mn, mx, s)
 
 

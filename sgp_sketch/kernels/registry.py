@@ -9,36 +9,27 @@ import struct
 from . import (bloom, cms, cs, dd, fd, hll, kll, mg, moments, serde,
                tdigest, theta)
 
-# type byte → (kind, class, header versions its from_bytes reads). The
-# array kernels write serde's sparse payload under its own version byte.
-_TYPES = {
-    hll.TYPE_HLL: ("hll", hll.HLL, {hll.VERSION}),
-    cms.TYPE_CMS: ("cms", cms.CMS, {cms.VERSION, serde.SPARSE_VER}),
-    bloom.TYPE_BLOOM: ("bloom", bloom.Bloom,
-                       {bloom.VERSION, serde.SPARSE_VER}),
-    kll.TYPE_KLL: ("kll", kll.KLL, {kll.VERSION}),
-    tdigest.TYPE_TDIGEST: ("tdigest", tdigest.TDigest, {tdigest.VERSION}),
-    theta.TYPE_THETA: ("theta", theta.Theta, {theta.VERSION}),
-    mg.TYPE_MG: ("mg", mg.MG, {mg.VERSION}),
-    fd.TYPE_FD: ("fd", fd.FD, {fd.VERSION}),
-    cs.TYPE_CS: ("cs", cs.CS, {cs.VERSION, serde.SPARSE_VER}),
-    dd.TYPE_DD: ("dd", dd.DD, {dd.VERSION}),
-    moments.TYPE_MOMENTS: ("moments", moments.Moments, {moments.VERSION}),
+# kind → (type byte, class, empty(**params), header versions its
+# from_bytes reads). The array kernels write serde's sparse payload under
+# its own version byte.
+_KINDS = {
+    "hll": (hll.TYPE_HLL, hll.HLL, hll.empty, {hll.VERSION}),
+    "cms": (cms.TYPE_CMS, cms.CMS, cms.empty, {cms.VERSION, serde.SPARSE_VER}),
+    "bloom": (bloom.TYPE_BLOOM, bloom.Bloom, bloom.empty,
+              {bloom.VERSION, serde.SPARSE_VER}),
+    "kll": (kll.TYPE_KLL, kll.KLL, kll.empty, {kll.VERSION}),
+    "tdigest": (tdigest.TYPE_TDIGEST, tdigest.TDigest, tdigest.empty,
+                {tdigest.VERSION}),
+    "theta": (theta.TYPE_THETA, theta.Theta, theta.empty, {theta.VERSION}),
+    "mg": (mg.TYPE_MG, mg.MG, mg.empty, {mg.VERSION}),
+    "fd": (fd.TYPE_FD, fd.FD, fd.empty, {fd.VERSION}),
+    "cs": (cs.TYPE_CS, cs.CS, cs.empty, {cs.VERSION, serde.SPARSE_VER}),
+    "dd": (dd.TYPE_DD, dd.DD, dd.empty, {dd.VERSION}),
+    "moments": (moments.TYPE_MOMENTS, moments.Moments, moments.empty,
+                {moments.VERSION}),
 }
-
-_FACTORIES = {
-    "hll": hll.empty,
-    "cms": cms.empty,
-    "bloom": bloom.empty,
-    "kll": kll.empty,
-    "tdigest": tdigest.empty,
-    "theta": theta.empty,
-    "mg": mg.empty,
-    "fd": fd.empty,
-    "cs": cs.empty,
-    "dd": dd.empty,
-    "moments": moments.empty,
-}
+_BY_TYPE = {typ: (kind, cls, versions)
+            for kind, (typ, cls, _, versions) in _KINDS.items()}
 
 
 def from_bytes(buf: bytes):
@@ -53,7 +44,7 @@ def from_bytes(buf: bytes):
         raise ValueError("bad sketch magic")
     # look up BEFORE calling so a KeyError raised inside a kernel's
     # from_bytes is never misreported as "unknown sketch type"
-    entry = _TYPES.get(typ)
+    entry = _BY_TYPE.get(typ)
     if entry is None:
         raise ValueError(f"unknown sketch type {typ}")
     kind, cls, versions = entry
@@ -68,7 +59,13 @@ def from_bytes(buf: bytes):
 
 
 def make(kind: str, **params):
-    return _FACTORIES[kind](**params)
+    """Empty state of `kind`. An unknown kind raises ValueError; a param
+    the kind's `empty()` does not take raises TypeError naming it."""
+    entry = _KINDS.get(kind)
+    if entry is None:
+        raise ValueError(f"unknown sketch kind {kind!r} "
+                         f"(known: {', '.join(_KINDS)})")
+    return entry[2](**params)
 
 
 def merge_blobs(blobs) -> bytes:

@@ -36,8 +36,10 @@ def pack_flat(flat: np.ndarray, value_dtype: str) -> tuple[int, bytes]:
 
 
 def unpack_flat(buf: bytes, off: int, ver: int, size: int,
-                value_dtype: str, out_dtype) -> np.ndarray:
-    """Decode a payload written by pack_flat into a fresh 1-D array."""
+                value_dtype: str, out_dtype) -> tuple[np.ndarray, int]:
+    """Decode a payload written by pack_flat into a fresh 1-D array;
+    returns (array, offset just past the payload)."""
+    width = np.dtype(value_dtype).itemsize
     if ver == SPARSE_VER:
         (nnz,) = struct.unpack_from("<q", buf, off)
         off += 8
@@ -46,6 +48,15 @@ def unpack_flat(buf: bytes, off: int, ver: int, size: int,
         vals = np.frombuffer(buf, dtype=value_dtype, count=nnz, offset=off)
         flat = np.zeros(size, dtype=out_dtype)
         flat[idx.astype(np.int64)] = vals
-        return flat
-    return np.frombuffer(buf, dtype=value_dtype, count=size,
-                         offset=off).astype(out_dtype)
+        return flat, off + width * nnz
+    flat = np.frombuffer(buf, dtype=value_dtype, count=size, offset=off)
+    return flat.astype(out_dtype), off + width * size
+
+
+def check_end(buf: bytes, end: int, kind: str) -> None:
+    """A blob's payload must end exactly at len(buf): a count field lowered
+    inside the blob, or bytes appended to it, would otherwise decode to a
+    wrong state."""
+    if end != len(buf):
+        raise ValueError(f"malformed {kind} blob: payload ends at byte "
+                         f"{end}, blob has {len(buf)}")

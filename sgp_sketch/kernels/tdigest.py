@@ -22,6 +22,8 @@ import struct
 
 import numpy as np
 
+from . import serde
+
 MAGIC = b"SK"
 VERSION = 1
 TYPE_TDIGEST = 5
@@ -108,6 +110,7 @@ class TDigest:
         if magic != MAGIC or typ != TYPE_TDIGEST:
             raise ValueError("not a TDigest blob")
         off = struct.calcsize(fmt)
+        serde.check_end(buf, off + 16 * c, "tdigest")
         means = np.frombuffer(buf, dtype="<f8", count=c, offset=off).astype(np.float64)
         off += 8 * c
         weights = np.frombuffer(buf, dtype="<f8", count=c, offset=off).astype(np.float64)

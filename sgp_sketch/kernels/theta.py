@@ -31,6 +31,7 @@ import struct
 
 import numpy as np
 
+from . import serde
 from .hashing import hash64
 
 MAGIC = b"SK"
@@ -152,6 +153,7 @@ class Theta:
         if magic != MAGIC or typ != TYPE_THETA:
             raise ValueError("not a Theta blob")
         off = struct.calcsize("<2sBBIQI")
+        serde.check_end(buf, off + 8 * n, "theta")
         retained = np.frombuffer(buf, dtype="<u8", count=n,
                                  offset=off).astype(np.uint64)
         return cls(k, np.uint64(theta), retained)

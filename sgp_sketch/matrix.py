@@ -15,7 +15,7 @@ compute proportional to data read, state independent of row count.
 from __future__ import annotations
 
 from . import agg
-from .kernels import registry
+from .queries import _blob_udf
 
 
 def fd_agg(df, vec_col: str = "embedding", d: int = 64, ell: int = 16,
@@ -53,22 +53,14 @@ def spectrum_from_blobs(blobs, k: int = 5, group_cols=()):
     the cheap half of `principal_spectrum`, exposed so callers that
     already materialized (or persisted/wrote) the blobs never rerun the
     corpus scan just to read singular values."""
-    import pandas as pd
+    from pyspark.sql import functions as F
 
-    group_cols = list(group_cols)
-    out_schema = agg._schema_prefix(blobs.schema, group_cols) + \
-        "rank int, sing_value double, gram_error_bound double, n_rows long"
+    def ranks(st):
+        return [{"rank": i + 1, "sing_value": round(float(sv), 4),
+                 "gram_error_bound": round(st.shed, 4), "n_rows": st.n_rows}
+                for i, sv in enumerate(st.spectrum(k))]
 
-    def explode(it):
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                st = registry.from_bytes(bytes(r["state"]))
-                for i, sv in enumerate(st.spectrum(k)):
-                    rows.append(tuple(r[c] for c in group_cols)
-                                + (i + 1, round(float(sv), 4),
-                                   round(st.shed, 4), st.n_rows))
-            yield pd.DataFrame(rows, columns=group_cols + [
-                "rank", "sing_value", "gram_error_bound", "n_rows"])
-
-    return blobs.mapInPandas(explode, out_schema)
+    spec = _blob_udf("array<struct<rank:int,sing_value:double,"
+                     "gram_error_bound:double,n_rows:long>>", ranks)
+    return (blobs.select(*group_cols, F.explode(spec("state")).alias("s"))
+            .select(*group_cols, "s.*"))

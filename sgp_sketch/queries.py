@@ -8,10 +8,13 @@ cardinality (HLL), heavy-hitter frequencies (CMS counts over Misra–Gries
 candidates), n_tok quantiles (t-digest / KLL), token membership (Bloom).
 
 Every query builds its blobs through agg (one Arrow scan, one tree
-merge); this module only finalizes them. Finalization (blob → number)
-touches one row per group — tiny — so pandas UDFs over the blob column
-are fine there; the full-data scan path stays in agg.build_partials_multi
-(vectorized numpy over Arrow batches).
+merge); this module only finalizes them. Finalization (blob → answer)
+touches one row per group — tiny — and is written once: `_blob_udf`
+decodes each row's blobs and applies a function of the states (one
+value, a struct, or an array<struct> that F.explode turns into rows),
+and `_blob_pairs` self-joins the blob table on group_a < group_b and
+applies a function of each pair's two states. The full-data scan path
+stays in agg.build_partials_multi (vectorized numpy over Arrow batches).
 """
 
 from __future__ import annotations
@@ -26,33 +29,55 @@ from .kernels.hashing import hash64
 
 # --------------------------------------------------------------- finalizers
 
-def _estimate_udf():
+def _blob_udf(rtype: str, fn):
+    """Scalar pandas UDF over blob columns: each row's blobs are decoded
+    and the row's value is `fn(*states)`. A `struct<…>` rtype takes
+    `fn`'s dicts as a DataFrame; any other type takes them as a Series
+    (`array<struct<…>>` + F.explode is the one-row-per-item shape)."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double")
-    def est(state: pd.Series) -> pd.Series:
-        return state.map(lambda b: float(registry.from_bytes(b).estimate()))
-    return est
+    struct = rtype.startswith("struct<")
+
+    @pandas_udf(rtype)
+    def decode_apply(*blobs: pd.Series) -> pd.Series:
+        out = [fn(*(registry.from_bytes(bytes(b)) for b in row))
+               for row in zip(*blobs)]
+        return pd.DataFrame(out) if struct else pd.Series(out)
+    return decode_apply
+
+
+def _blob_pairs(blobs, group_cols, rtype: str, fn):
+    """Every unordered pair of blob rows → (group_a, group_b, r), r =
+    `fn(state_a, state_b)`. Each row is keyed by its group columns joined
+    with '|', and the KB-sized blob table self-joins on group_a < group_b:
+    G² pair rows spread over the cluster, never collected to the driver."""
+    from pyspark.sql import functions as F
+
+    keyed = blobs.select(
+        F.concat_ws("|", *[F.col(c).cast("string") for c in group_cols])
+        .alias("group"), "state")
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (a.join(b, F.col("a.group") < F.col("b.group"))
+            .select(F.col("a.group").alias("group_a"),
+                    F.col("b.group").alias("group_b"),
+                    _blob_udf(rtype, fn)("a.state", "b.state").alias("r")))
+
+
+def _estimate(st) -> float:
+    return float(st.estimate())
 
 
 def _quantiles_long(blobs, cols, qs):
     """Blob rows → long-form (cols..., q double, value double): one row
     per requested quantile of each row's sketch."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
     qs = list(qs)
-
-    @pandas_udf("array<double>")
-    def quant(state: pd.Series) -> pd.Series:
-        return state.map(lambda b: registry.from_bytes(b).quantiles(qs).tolist())
-
-    wide = blobs.select(*cols, quant("state").alias("vals"))
-    qlit = F.array(*[F.lit(float(q)) for q in qs])
-    return wide.select(
-        *cols,
-        F.explode(F.arrays_zip(qlit.alias("q"), F.col("vals").alias("value")))
-        .alias("z")).select(*cols, "z.q", "z.value")
+    quant = _blob_udf("array<struct<q:double,value:double>>",
+                      lambda st: [{"q": float(q), "value": float(v)}
+                                  for q, v in zip(qs, st.quantiles(qs))])
+    return (blobs.select(*cols, F.explode(quant("state")).alias("z"))
+            .select(*cols, "z.*"))
 
 
 def _with_global_row(blobs, group_cols, fn, name: str,
@@ -92,7 +117,7 @@ def distinct_tokens(df, group_cols=("source",), value_col="tokens",
     is `dropDuplicates().count()` (`/root/reference/scripts/analytics/snap2metis.scala:44`).
     """
     blobs = agg.sketch_agg(df, "hll", value_col, group_cols, {"p": p})
-    return _with_global_row(blobs, group_cols, _estimate_udf(),
+    return _with_global_row(blobs, group_cols, _blob_udf("double", _estimate),
                             "est_distinct", include_global)
 
 
@@ -129,7 +154,7 @@ def distinct_per_key(df, key_cols, value_col="tokens", kind="theta",
     """
     blobs = agg.sketch_agg_bykey(df, kind, value_col, key_cols, params,
                                  num_partitions)
-    est = _estimate_udf()
+    est = _blob_udf("double", _estimate)
     return blobs.select(*key_cols, est("state").alias("est_distinct"))
 
 
@@ -191,7 +216,7 @@ def heavy_hitters(df, k: int = 20, value_col="tokens", group_cols=("source",),
 
 
 def build_membership(df, value_col="tokens", group_cols=("source",),
-                     bits_per_item: int | None = None, n_blocks: int = 1 << 14):
+                     n_blocks: int = 1 << 14):
     """Per-group blocked Bloom filters over all values → blob table."""
     return agg.sketch_agg(df, "bloom", value_col, group_cols,
                           {"n_blocks": n_blocks})
@@ -217,31 +242,16 @@ def vocabulary_overlap(df, group_cols=("source",), value_col="tokens",
     from pyspark.sql import functions as F
 
     blobs = agg.sketch_agg(df, "hll", value_col, group_cols, {"p": p})
-    keyed = blobs.select(
-        F.concat_ws("|", *[F.col(c).cast("string") for c in group_cols])
-        .alias("group"), "state")
-
-    @F.pandas_udf("array<double>")
-    def pair_est(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(sa, sb):
-            a = registry.from_bytes(bytes(ba))
-            b = registry.from_bytes(bytes(bb))
-            out.append([float(a.estimate()), float(b.estimate()),
-                        float(a.merge(b).estimate())])
-        return pd.Series(out)
-
-    a, b = keyed.alias("a"), keyed.alias("b")
-    pairs = (a.join(b, F.col("a.group") < F.col("b.group"))
-             .select(F.col("a.group").alias("group_a"),
-                     F.col("b.group").alias("group_b"),
-                     pair_est(F.col("a.state"), F.col("b.state")).alias("e")))
-    eu = F.col("e")[2]
-    inter = F.greatest(F.lit(0.0), F.col("e")[0] + F.col("e")[1] - eu)
+    pairs = _blob_pairs(
+        blobs, group_cols, "array<double>",
+        lambda a, b: [_estimate(a), _estimate(b), _estimate(a.merge(b))])
+    e = F.col("r")
+    eu = e[2]
+    inter = F.greatest(F.lit(0.0), e[0] + e[1] - eu)
     return pairs.select(
         "group_a", "group_b",
-        F.round(F.col("e")[0], 1).alias("est_a"),
-        F.round(F.col("e")[1], 1).alias("est_b"),
+        F.round(e[0], 1).alias("est_a"),
+        F.round(e[1], 1).alias("est_b"),
         F.round(eu, 1).alias("est_union"),
         F.round(inter, 1).alias("est_overlap"),
         F.round(F.when(eu > 0, inter / eu).otherwise(0.0), 4)
@@ -264,37 +274,20 @@ def vocabulary_overlap_theta(df, group_cols=("source",),
     from pyspark.sql import functions as F
 
     blobs = agg.sketch_agg(df, "theta", value_col, group_cols, {"k": k})
-    keyed = blobs.select(
-        F.concat_ws("|", *[F.col(c).cast("string") for c in group_cols])
-        .alias("group"), "state")
-
-    @F.pandas_udf("array<double>")
-    def pair_est(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(sa, sb):
-            a = registry.from_bytes(bytes(ba))
-            b = registry.from_bytes(bytes(bb))
-            out.append([float(a.estimate()), float(b.estimate()),
-                        float(a.merge(b).estimate()),
-                        float(a.intersect(b).estimate()),
-                        float(a.a_not_b(b).estimate())])
-        return pd.Series(out)
-
-    a, b = keyed.alias("a"), keyed.alias("b")
-    pairs = (a.join(b, F.col("a.group") < F.col("b.group"))
-             .select(F.col("a.group").alias("group_a"),
-                     F.col("b.group").alias("group_b"),
-                     pair_est(F.col("a.state"), F.col("b.state"))
-                     .alias("e")))
-    eu = F.col("e")[2]
+    pairs = _blob_pairs(
+        blobs, group_cols, "array<double>",
+        lambda a, b: [_estimate(a), _estimate(b), _estimate(a.merge(b)),
+                      _estimate(a.intersect(b)), _estimate(a.a_not_b(b))])
+    e = F.col("r")
+    eu = e[2]
     return pairs.select(
         "group_a", "group_b",
-        F.round(F.col("e")[0], 1).alias("est_a"),
-        F.round(F.col("e")[1], 1).alias("est_b"),
+        F.round(e[0], 1).alias("est_a"),
+        F.round(e[1], 1).alias("est_b"),
         F.round(eu, 1).alias("est_union"),
-        F.round(F.col("e")[3], 1).alias("est_inter"),
-        F.round(F.col("e")[4], 1).alias("est_diff_ab"),
-        F.round(F.when(eu > 0, F.col("e")[3] / eu).otherwise(0.0), 4)
+        F.round(e[3], 1).alias("est_inter"),
+        F.round(e[4], 1).alias("est_diff_ab"),
+        F.round(F.when(eu > 0, e[3] / eu).otherwise(0.0), 4)
         .alias("jaccard"))
 
 
@@ -407,32 +400,25 @@ def mg_heavy_hitters(df, k: int = 10, counters: int = 1024,
     Shape: the shared Arrow scan (`agg.sketch_agg`, one pass, zero-copy
     token buffers) builds per-partition MG states; blobs merge tree-wise
     by the PODS'12 summary-merge; the final per-group blob (KB-sized,
-    |groups| rows) is exploded driver-free by one pandas pass.
+    |groups| rows) is exploded driver-free, one row per reported token.
 
     → DataFrame(group_cols..., token long, est_min long, est_max long,
     rank int), rank by (count desc, token asc).
     """
-    group_cols = list(group_cols)
+    from pyspark.sql import functions as F
+
+    def top(st):
+        keys, cnts = st.heavy_hitters()
+        return [{"token": int(keys[i]), "est_min": int(cnts[i]),
+                 "est_max": int(cnts[i]) + st.dec, "rank": i + 1}
+                for i in range(min(int(k), keys.size))]
+
     blobs = agg.sketch_agg(df, "mg", value_col, group_cols,
                            {"k": int(counters)})
-    out_schema = agg._schema_prefix(blobs.schema, group_cols) + \
-        "token long, est_min long, est_max long, rank int"
-
-    def explode(it):
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                st = registry.from_bytes(r["state"])
-                keys, cnts = st.heavy_hitters()
-                for i in range(min(int(k), keys.size)):
-                    rows.append(tuple(r[c] for c in group_cols)
-                                + (int(keys[i]), int(cnts[i]),
-                                   int(cnts[i]) + st.dec, i + 1))
-            yield pd.DataFrame(
-                rows, columns=group_cols + ["token", "est_min",
-                                            "est_max", "rank"])
-
-    return blobs.mapInPandas(explode, out_schema)
+    hh = _blob_udf("array<struct<token:long,est_min:long,est_max:long,"
+                   "rank:int>>", top)
+    return (blobs.select(*group_cols, F.explode(hh("state")).alias("h"))
+            .select(*group_cols, "h.*"))
 
 
 def f2_moment(df, value_col="tokens", group_cols=("source",),
@@ -451,15 +437,9 @@ def f2_moment(df, value_col="tokens", group_cols=("source",),
 
     → DataFrame(group_cols..., est_f2 double).
     """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def f2(state: pd.Series) -> pd.Series:
-        return state.map(
-            lambda b: float(registry.from_bytes(b).f2_estimate()))
-
     blobs = agg.sketch_agg(df, "cs", value_col, group_cols,
                            {"depth": depth, "width": width})
+    f2 = _blob_udf("double", lambda st: float(st.f2_estimate()))
     return _with_global_row(blobs, group_cols, f2, "est_f2",
                             include_global)
 
@@ -479,27 +459,19 @@ def hll_register_table(blobs_df, group_cols=("grp",)):
     (`EdgeCutSGP.java:247-255` writes the raw id→partition map, not a
     summary of it)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<struct<idx:int,rank:int>>")
-    def regs(state: pd.Series) -> pd.Series:
-        out = []
-        for b in state:
-            h = registry.from_bytes(bytes(b))
-            if h.sparse is not None:
-                idx = (h.sparse >> np.uint32(6)).astype(int)
-                rank = (h.sparse & np.uint32(63)).astype(int)
-            else:
-                idx = np.flatnonzero(h.dense)
-                rank = h.dense[idx].astype(int)
-            out.append([{"idx": int(i), "rank": int(r)}
-                        for i, r in zip(idx, rank)])
-        return pd.Series(out)
+    def nonzero(h):
+        if h.sparse is not None:
+            idx = (h.sparse >> np.uint32(6)).astype(int)
+            rank = (h.sparse & np.uint32(63)).astype(int)
+        else:
+            idx = np.flatnonzero(h.dense)
+            rank = h.dense[idx].astype(int)
+        return [{"idx": int(i), "rank": int(r)} for i, r in zip(idx, rank)]
 
-    group_cols = list(group_cols)
+    regs = _blob_udf("array<struct<idx:int,rank:int>>", nonzero)
     return (blobs_df.select(*group_cols, F.explode(regs("state")).alias("r"))
-            .select(*group_cols, F.col("r.idx").alias("idx"),
-                    F.col("r.rank").alias("rank")))
+            .select(*group_cols, "r.*"))
 
 
 def theta_summary_table(blobs_df, group_cols=("grp",)):
@@ -512,21 +484,10 @@ def theta_summary_table(blobs_df, group_cols=("grp",)):
     (kernels/theta.py:_trim keeps the k smallest below the (k+1)-th), so
     an order-statistic window query re-derives them exactly
     (`theta_kmv_replay` oracle)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("struct<n_retained:long,theta_frac:double,est_distinct:double>")
-    def summ(state: pd.Series) -> pd.DataFrame:
-        out = []
-        for b in state:
-            t = registry.from_bytes(bytes(b))
-            out.append({"n_retained": int(t.retained.size),
-                        "theta_frac": float(t._theta_frac()),
-                        "est_distinct": float(t.estimate())})
-        return pd.DataFrame(out, columns=["n_retained", "theta_frac",
-                                          "est_distinct"])
-
-    group_cols = list(group_cols)
+    summ = _blob_udf(
+        "struct<n_retained:long,theta_frac:double,est_distinct:double>",
+        lambda t: {"n_retained": int(t.retained.size),
+                   "theta_frac": float(t._theta_frac()),
+                   "est_distinct": _estimate(t)})
     return (blobs_df.select(*group_cols, summ("state").alias("s"))
-            .select(*group_cols, "s.n_retained", "s.theta_frac",
-                    "s.est_distinct"))
+            .select(*group_cols, "s.*"))

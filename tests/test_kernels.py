@@ -1,5 +1,6 @@
 """Kernel unit tests (pure numpy, no Spark) — SURVEY.md §5.2.1."""
 
+import struct
 import warnings
 
 import numpy as np
@@ -303,8 +304,9 @@ def _one_state(kind):
                                   "theta", "mg", "fd", "cs", "dd",
                                   "moments"])
 def test_damaged_or_version_skewed_blob_raises(kind):
-    """An intact blob round-trips; an unknown header version or a cut
-    blob raises ValueError, never returns a state."""
+    """An intact blob round-trips; an unknown header version, a cut blob,
+    a blob with bytes appended or (hll) a lowered count field raises
+    ValueError, never returns a state."""
     blob = _one_state(kind).to_bytes()
     assert registry.from_bytes(blob).to_bytes() == blob
     skewed = blob[:2] + bytes([99]) + blob[3:]
@@ -313,6 +315,15 @@ def test_damaged_or_version_skewed_blob_raises(kind):
     for cut in (blob[:-1], blob[:8]):
         with pytest.raises(ValueError):
             registry.from_bytes(cut)
+    with pytest.raises(ValueError, match=f"malformed {kind} blob"):
+        registry.from_bytes(blob + b"\x00")
+    if kind == "hll":
+        # sparse p=10 blob: header '<2sBBBBI', code count at byte 6
+        mode, n = struct.unpack_from("<BI", blob, 5)
+        assert mode == 0 and n > 10
+        lowered = blob[:6] + struct.pack("<I", n - 10) + blob[10:]
+        with pytest.raises(ValueError, match="malformed hll blob"):
+            registry.from_bytes(lowered)
 
 
 # ================================================================= theta

@@ -628,3 +628,71 @@ def test_group_without_tokens_emits_no_state(spark, kind):
     got = {r["source"]: r["n_items"]
            for r in agg.sketch_agg(mixed, kind, "tokens").collect()}
     assert got == {"b": 3}
+
+
+def test_bad_spec_raises_on_driver_before_any_job(spark, tokens_sdf):
+    """An unknown kind, a param its kernel does not take and a param value
+    its kernel rejects each raise ValueError naming the spec and the kind
+    when the build is called, before any Spark job runs."""
+    import re
+
+    sc = spark.sparkContext
+    group = "bad_spec"
+    sc.setJobGroup(group, "plan only")
+    try:
+        for kind, params, needle in (("hyperloglog", {}, "hyperloglog"),
+                                     ("hll", {"precision": 12}, "precision"),
+                                     ("hll", {"sparse": []}, "sparse"),
+                                     ("hll", {"p": 30}, "p must be")):
+            specs = {"s1": {"kind": kind, "value_col": "tokens",
+                            "params": params}}
+            with pytest.raises(ValueError, match=re.escape(
+                    f"sketch spec 's1' (kind {kind!r})")) as err:
+                agg.build_partials_multi(tokens_sdf, specs)
+            assert needle in str(err.value)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], jobs
+
+
+def test_finalizer_output_schemas(spark, tokens_sdf):
+    """Exact output types of every blob-to-answer query: a long column
+    silently decoded as a double would pass every value test."""
+    from sgp_sketch.matrix import principal_spectrum
+
+    t = tokens_sdf
+    hll = agg.sketch_agg(t, "hll", "tokens", ("source",), {"p": 10})
+    theta = agg.sketch_agg(t, "theta", "tokens", ("source",), {"k": 64})
+    vec = spark.createDataFrame([(1, [1.0, 2.0, 3.0])],
+                                "h int, vec array<double>")
+    pair = ("group_a:string,group_b:string,est_a:double,est_b:double,"
+            "est_union:double,")
+    quant = "source:string,q:double,value:double"
+    cases = [
+        (queries.distinct_tokens(t, include_global=True),
+         "source:string,est_distinct:double"),
+        (queries.distinct_per_key(t, ["doc_id"]),
+         "doc_id:string,est_distinct:double"),
+        (queries.n_tok_quantiles(t), quant),
+        (queries.quantiles_per_key(t, ["source"], "n_tok"), quant),
+        (queries.f2_moment(t, include_global=True),
+         "source:string,est_f2:double"),
+        (queries.vocabulary_overlap(t),
+         pair + "est_overlap:double,jaccard:double"),
+        (queries.vocabulary_overlap_theta(t),
+         pair + "est_inter:double,est_diff_ab:double,jaccard:double"),
+        (queries.mg_heavy_hitters(t),
+         "source:string,token:bigint,est_min:bigint,est_max:bigint,"
+         "rank:int"),
+        (queries.hll_register_table(hll, ("source",)),
+         "source:string,idx:int,rank:int"),
+        (queries.theta_summary_table(theta, ("source",)),
+         "source:string,n_retained:bigint,theta_frac:double,"
+         "est_distinct:double"),
+        (principal_spectrum(vec, "vec", d=3, ell=2, k=2, group_cols=("h",)),
+         "h:int,rank:int,sing_value:double,gram_error_bound:double,"
+         "n_rows:bigint"),
+    ]
+    for df, want in cases:
+        assert df.schema.simpleString() == f"struct<{want}>"

@@ -104,9 +104,10 @@ def main():
     section("vocabulary_overlap (HLL set algebra, distributed pair join)",
             vocabulary_overlap(doc_tokens_from(docs)),
             "The G² pair table is a join of two KB-sized blob-aggregate\n"
-            "branches (never collected to the driver); the pandas UDF merges\n"
-            "blob pairs row-wise. Input data is scanned once per side of "
-            "the\nself-join — blob rows, not tokens, flow through the join.",
+            "branches (never collected to the driver); one decode_apply\n"
+            "pandas UDF merges blob pairs row-wise. Input data is scanned\n"
+            "once per side of the self-join — blob rows, not tokens, flow\n"
+            "through the join.",
             max_lines=45)
 
     from sgp_sketch.queries import build_sharded_membership
@@ -240,8 +241,9 @@ def main():
             "One MapInArrow scan builds per-partition (ell x d) FD\n"
             "states (SVD shrink inside the scan tasks); the Arrow\n"
             "tree-merge rounds shuffle only KB blob rows, and the final\n"
-            "explode is a mapInPandas over |groups| rows. No d x d Gram,\n"
-            "no vector shuffle, at any row count.", width=320)
+            "explode is one decode_apply pandas UDF over |groups| blob\n"
+            "rows plus a Generate. No d x d Gram, no vector shuffle, at\n"
+            "any row count.", width=320)
     section("bpe_encode (vectorized BPE corpus pass, round 4)",
             e.q_bpe_encode(spark, sf),
             "The corpus side is FileScan → Project(split/transform/\n"
@@ -295,7 +297,7 @@ def main():
     section("per_key_distinct (high-cardinality per-key state build)",
             e.q_per_key_distinct(spark, sf),
             "The OTHER side of the grouping-cardinality tradeoff: ONE\n"
-            "Exchange (hash on user_id) → MapInPandas builds each key's\n"
+            "Exchange (hash on user_id) → MapInArrow builds each key's\n"
             "theta state whole inside its shuffle partition → estimate\n"
             "UDF. Zero merge rounds, zero partial blow-up — the plan a\n"
             "built-in hash aggregate uses, emitting a key-partitioned\n"
