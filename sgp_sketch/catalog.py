@@ -212,9 +212,9 @@ def incremental_sketch_update(spark, path: str, state_blobs, specs: dict,
     """Incremental sketch maintenance on snapshot append: scan ONLY the
     data files `to_version` added since `from_version` (snapshot_new_files
     manifest diff), build partial sketches over that delta, and
-    kernel-merge them into the existing blob state — the table-statistics
-    pattern for an append-only 100-TB corpus, where re-scanning history
-    on every ingest is the thing that cannot happen.
+    kernel-merge them with the existing blob state in one tree merge —
+    the table-statistics pattern for an append-only 100-TB corpus, where
+    re-scanning history on every ingest is the thing that cannot happen.
 
     Kernel associativity is what makes the result correct; for the
     order-invariant kernels (HLL register-max, CMS counter-add, Bloom
@@ -245,9 +245,13 @@ def incremental_sketch_update(spark, path: str, state_blobs, specs: dict,
              .option("basePath", _join(path, "data")).parquet(*new_files))
     if prepare is not None:
         delta = prepare(delta)
-    delta_blobs = agg.multi_sketch_agg(delta, specs, group_cols)
-    return agg.tree_merge(state_blobs.unionByName(delta_blobs),
-                          group_cols=list(group_cols) + ["sketch"])
+    # the delta's unmerged partials join the state in ONE merge: merging
+    # them first (multi_sketch_agg) would shuffle the delta twice
+    partials, _schema = agg.build_partials_multi(delta, specs, group_cols)
+    return agg.tree_merge(
+        state_blobs.unionByName(partials.drop("part_id")),
+        group_cols=list(group_cols) + ["sketch"],
+        n_parts=spark.sparkContext.defaultParallelism)
 
 
 def merge_upsert(base, updates, key):

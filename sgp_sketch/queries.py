@@ -12,9 +12,10 @@ merge); this module only finalizes them. Finalization (blob → answer)
 touches one row per group — tiny — and is written once: `_blob_udf`
 decodes each row's blobs and applies a function of the states (one
 value, a struct, or an array<struct> that F.explode turns into rows),
-and `_blob_pairs` self-joins the blob table on group_a < group_b and
-applies a function of each pair's two states. The full-data scan path
-stays in agg.build_partials_multi (vectorized numpy over Arrow batches).
+and `_blob_pairs` self-joins the blob table on its group key
+(key_a < key_b) and applies a function of each pair's two states. The
+full-data scan path stays in agg.build_partials_multi (vectorized numpy
+over Arrow batches).
 """
 
 from __future__ import annotations
@@ -48,16 +49,20 @@ def _blob_udf(rtype: str, fn):
 
 def _blob_pairs(blobs, group_cols, rtype: str, fn):
     """Every unordered pair of blob rows → (group_a, group_b, r), r =
-    `fn(state_a, state_b)`. Each row is keyed by its group columns joined
-    with '|', and the KB-sized blob table self-joins on group_a < group_b:
-    G² pair rows spread over the cluster, never collected to the driver."""
+    `fn(state_a, state_b)`. The KB-sized blob table self-joins on
+    key_a < key_b, the key being the struct of the string-cast group
+    columns (injective, NULL sorting first): G² pair rows spread over the
+    cluster, never collected to the driver. group_a/group_b label each
+    side with its group columns joined by '|' (NULLs skipped), so a label
+    is ambiguous when a value contains '|' or is NULL; the pair set is
+    not."""
     from pyspark.sql import functions as F
 
-    keyed = blobs.select(
-        F.concat_ws("|", *[F.col(c).cast("string") for c in group_cols])
-        .alias("group"), "state")
+    cols = [F.col(c).cast("string") for c in group_cols]
+    keyed = blobs.select(F.struct(*cols).alias("key"),
+                         F.concat_ws("|", *cols).alias("group"), "state")
     a, b = keyed.alias("a"), keyed.alias("b")
-    return (a.join(b, F.col("a.group") < F.col("b.group"))
+    return (a.join(b, F.col("a.key") < F.col("b.key"))
             .select(F.col("a.group").alias("group_a"),
                     F.col("b.group").alias("group_b"),
                     _blob_udf(rtype, fn)("a.state", "b.state").alias("r")))
@@ -233,8 +238,8 @@ def vocabulary_overlap(df, group_cols=("source",), value_col="tokens",
     → DataFrame(group_a, group_b, est_a, est_b, est_union, est_overlap,
     jaccard) for every unordered group pair.
 
-    Distributed shape: the KB-sized blob table self-joins on
-    `group_a < group_b` (G² *pair rows*, spread over the cluster — never
+    Distributed shape: the KB-sized blob table self-joins on its group
+    key, key_a < key_b (G² *pair rows*, spread over the cluster — never
     collected to the driver) and a pandas UDF merges each pair's two blobs.
     High-cardinality group columns (days, domains) therefore scale like any
     other join, instead of an O(G²) driver loop over collected state.
@@ -267,7 +272,7 @@ def vocabulary_overlap_theta(df, group_cols=("source",),
     error scales with the union size; theta's scales with the sample).
 
     Same distributed shape as vocabulary_overlap: KB-sized blob table
-    self-joined on group_a < group_b, pandas UDF evaluates the set
+    self-joined on key_a < key_b, pandas UDF evaluates the set
     expressions per pair row. → DataFrame(group_a, group_b, est_a, est_b,
     est_union, est_inter, est_diff_ab, jaccard).
     """

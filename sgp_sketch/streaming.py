@@ -7,21 +7,26 @@ EdgeCutSGP.java:211-246`) plus loader-side micro-batching
 (`ADJParser.groovy:107-123`). The property worth preserving at 100 TB is not
 record-at-a-time execution but **associative, mergeable state**: each
 micro-batch produces partial blobs; the running answer is a merge of all
-blobs so far. Two idiomatic Spark surfaces:
+blobs so far. One sketch-state surface keeps that property:
+`foreachBatch` (`stream_sketch_build`): readStream → per-batch partial
+blobs (`build_partials_multi`, no merge, no shuffle) → one parquet dir per
+batch in a state table. The current estimate at any time =
+tree_merge(all blob rows) — the same kernel merge the batch path uses, so
+stream results are byte-comparable to a batch build over the union of
+inputs. The table holds one row per (scan partition × group × spec) of
+every batch until `compact_state` folds it.
 
-  * `foreachBatch` (batch-first, default): readStream → per-batch
-    partial blobs (`build_partials_multi`, no merge, no shuffle) → one
-    parquet dir per batch in a state table. The current estimate at any
-    time = tree_merge(all blob rows) — the same kernel merge the batch
-    path uses, so stream results are byte-comparable to a batch build over
-    the union of inputs. The table holds one row per (scan partition ×
-    group × spec) of every batch until `compact_state` folds it.
-  * `applyInPandasWithState` (custom stateful operator): per-group HLL blob
-    carried in GroupState, updated per micro-batch, emitting a running
-    estimate row. Used where a live per-key running value is wanted instead
-    of a state table.
+Per-key and per-window sketches are the same sink with wider group
+columns: `prepare=` projects e.g. `k = event_type`,
+`w = window(ts, '1 day').start`, `v = user_id`, a spec reads `v`, and
+`group_cols=("k", "w")` keys the blobs; `streamed_estimates(...,
+group_cols=("k", "w"))` returns one merged sketch per (key, window). What
+this does not give: no streaming DataFrame emits a row per micro-batch
+(the answer is read from the state table), and window state is not
+retired at a watermark — after `compact_state` the table keeps one row
+per (key, window, spec).
 
-Both run with availableNow triggers in tests (bounded file streams);
+The sink runs with availableNow triggers in tests (bounded file streams);
 processing-time triggers are a config change. Event-time semantics (the
 reference has none) are covered by `windowed_stream_agg`: watermarked
 tumbling-window aggregation over the events table, state bounded by the
@@ -152,7 +157,8 @@ def streamed_estimates(spark, state_dir: str, group_cols=("source",)):
     (group × sketch), identical to a batch build over the same inputs.
     `batch_id` is recovered as a hive-partition column of the state layout
     (one directory per micro-batch — see stream_sketch_build); compacted
-    snapshots are resolved through the `_compaction.json` pointer."""
+    snapshots are resolved through the highest `_compaction.v<k>.json`
+    marker."""
     return agg.tree_merge(_live_blobs(spark, state_dir).drop("batch_id"),
                           group_cols=tuple(group_cols) + ("sketch",))
 
@@ -269,8 +275,10 @@ def windowed_stream_agg(spark, input_path: str, window: str = "1 day",
     an unbounded stream holds O(windows inside the horizon) state, not
     O(all history) — the property that makes event-time aggregation viable
     on an infinite 100-TB/day feed. `approx_count_distinct` is Spark's
-    built-in HLL++; for mergeable cross-run state use the blob path
-    (stream_sketch_build grouped by the window day) instead.
+    built-in HLL++. For mergeable cross-run state, or any other kernel per
+    window, use the sink recipe in the module docstring: a `prepare` that
+    projects the window start as a group column, then
+    `streamed_estimates(..., group_cols=(..., "w"))`.
     """
     from pyspark.sql import functions as F
 
@@ -281,35 +289,6 @@ def windowed_stream_agg(spark, input_path: str, window: str = "1 day",
             .groupBy(F.window(ts_col, window).alias("win"))
             .agg(F.count("*").alias("n_events"),
                  F.approx_count_distinct(key_col).alias("approx_keys")))
-
-
-def sessionized_stream_agg(spark, input_path: str, gap: str = "30 minutes",
-                           watermark: str = "1 day", ts_col: str = "ts",
-                           key_col: str = "user_id", schema=None,
-                           reader_options: dict | None = None):
-    """Streaming gap-session aggregation: `session_window(ts, gap)` under
-    a watermark — Spark's dynamic-gap session state machine, the
-    streaming twin of temporal.sessionize (same >= gap boundary as the
-    batch session_window; q_session_window_counts's oracle encodes it).
-    Returns the streaming DataFrame (caller attaches sink + trigger;
-    append mode emits a session only once its window can no longer grow,
-    i.e. window end < watermark).
-
-    State is bounded by the watermark horizon: a session closes when the
-    event-time watermark passes its end, so an unbounded stream holds
-    O(open sessions) state, not O(history) — with per-key gap sessions
-    this is the operator that makes clickstream sessionization viable on
-    an infinite feed.
-    """
-    from pyspark.sql import functions as F
-
-    stream = _file_stream(spark, input_path, schema, reader_options)
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (stream.withWatermark(ts_col, watermark)
-            .groupBy(F.col(key_col),
-                     F.session_window(ts_col, gap).alias("win"))
-            .agg(F.count("*").alias("n_events"),
-                 F.sum("value").alias("sum_value")))
 
 
 def dedup_stream_agg(spark, input_path: str, dedup_keys=("user_id", "event_type"),
@@ -387,147 +366,3 @@ def stream_stream_join(spark, input_path: str, left_type: str = "click",
                     "l_id", "r_id",
                     (F.unix_timestamp("r_ts")
                      - F.unix_timestamp("l_ts")).alias("lag_seconds")))
-
-
-def running_distinct_stream(spark, input_path: str, p: int = 12,
-                            group_col: str = "source", schema=None):
-    """Custom stateful operator: per-group HLL state blob carried in
-    GroupState (applyInPandasWithState), emitting a running distinct-token
-    estimate each micro-batch. Returns the streaming DataFrame (caller
-    attaches a sink).
-    """
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    from .kernels import registry
-
-    stream = _file_stream(spark, input_path, schema, None)
-
-    out_schema = f"{group_col} string, est_distinct double, n_batches int"
-    state_schema = "state binary, n_batches int"
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.exists:
-            blob, n_batches = state.get
-            st = registry.from_bytes(bytes(blob))
-        else:
-            st, n_batches = registry.make("hll", p=p), 0
-        for pdf in pdfs:
-            arrs = [np.asarray(t, dtype=np.int64) for t in pdf["tokens"]
-                    if t is not None and len(t)]
-            if arrs:
-                flat = np.concatenate(arrs)
-                st.update(flat.view(np.uint64))
-        n_batches += 1
-        state.update((st.to_bytes(), n_batches))
-        import pandas as pd
-
-        yield pd.DataFrame({group_col: [key[0]],
-                            "est_distinct": [float(st.estimate())],
-                            "n_batches": [n_batches]})
-
-    return (stream.select(group_col, "tokens")
-            .groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
-
-def _interval_ms(spec: str) -> int:
-    """'2 days' / '30 minutes' → milliseconds (the subset of Spark's
-    interval grammar the streaming operators accept)."""
-    qty, unit = spec.strip().split()
-    per = {"second": 1000, "minute": 60000, "hour": 3600000,
-           "day": 86400000, "week": 7 * 86400000}
-    return int(float(qty) * per[unit.rstrip("s")])
-
-
-def windowed_heavy_hitters_stream(spark, input_path: str,
-                                  window: str = "1 day",
-                                  watermark: str = "1 day",
-                                  k: int = 64, topk: int = 5,
-                                  key_col: str = "event_type",
-                                  ts_col: str = "ts",
-                                  val_col: str = "user_id",
-                                  schema=None):
-    """Custom stateful streaming operator: per-(key × event-time window)
-    Misra–Gries state carried in GroupState (applyInPandasWithState),
-    emitting the current top-k values with their [est, est+dec] bracket
-    each micro-batch. State per group is ≤ k (value, count) pairs — the
-    bounded-memory form of streaming GROUP BY value COUNT(*) ORDER BY
-    count DESC LIMIT k, which an exact implementation cannot bound when
-    the value domain is unbounded. An EVENT-time timeout (window end +
-    watermark, watermark-driven) retires a group only once the watermark
-    proves its window can no longer receive rows — a wall-clock timeout
-    would silently reset live state on a paused/backlogged stream and
-    break the est_max bracket. Total state is O(active windows × k),
-    not O(stream lifetime).
-
-    Returns the streaming DataFrame; the caller attaches a sink.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    from .kernels import registry
-    from .kernels.mg import MG
-
-    wm_ms = _interval_ms(watermark)
-
-    stream = _file_stream(spark, input_path, schema, None)
-
-    keyed = (stream
-             .withWatermark(ts_col, watermark)
-             .select(F.col(key_col).alias("k"),
-                     F.window(F.col(ts_col), window).start
-                     .cast("string").alias("w"),
-                     # window end as epoch ms, computed JVM-side so the
-                     # event-time timeout is session-timezone-safe
-                     (F.window(F.col(ts_col), window).end
-                      .cast("long") * 1000).alias("wend_ms"),
-                     F.col(val_col).cast("long").alias("v"),
-                     # the watermarked column itself must survive the
-                     # projection or event-time timeout is rejected
-                     F.col(ts_col)))
-    out_schema = ("k string, w string, rank int, value long, "
-                  "est_min long, est_max long")
-    state_schema = "state binary"
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            st = registry.from_bytes(bytes(state.get[0]))
-        else:
-            st = MG(k=k)
-        wend_ms = None
-        for pdf in pdfs:
-            if wend_ms is None and len(pdf):
-                wend_ms = int(pdf["wend_ms"].iloc[0])
-            vals = pdf["v"].to_numpy()
-            vals = vals[~pd.isna(vals)].astype(np.int64)
-            st.update(vals)
-        state.update((st.to_bytes(),))
-        if wend_ms is not None:
-            # retire once the WATERMARK passes window end + lateness —
-            # never earlier than the current watermark (Spark rejects
-            # timeout timestamps at/behind it)
-            state.setTimeoutTimestamp(
-                max(wend_ms + wm_ms, state.getCurrentWatermarkMs() + 1))
-        keys, cnts = st.heavy_hitters()
-        n = min(topk, keys.size)
-        yield pd.DataFrame({
-            "k": [key[0]] * n, "w": [key[1]] * n,
-            "rank": np.arange(1, n + 1, dtype=np.int32),
-            "value": keys[:n].astype(np.int64),
-            "est_min": cnts[:n].astype(np.int64),
-            "est_max": (cnts[:n] + st.dec).astype(np.int64)})
-
-    return (keyed.groupBy("k", "w")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update",
-                                    GroupStateTimeout.EventTimeTimeout))

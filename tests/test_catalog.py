@@ -138,7 +138,8 @@ def test_load_snapshot_overwrite_invalidates_old(spark, tmp_path):
 def test_incremental_sketch_update_matches_full_rebuild(spark, tmp_path):
     """Append v2, update sketches from the manifest diff only: for the
     order-invariant kernels the merged state is byte-identical to a
-    full rebuild over the v2 snapshot."""
+    full rebuild over the v2 snapshot, and the delta's partials merge
+    with the state in one round."""
     from sgp_sketch import agg
 
     path = str(tmp_path / "inc")
@@ -170,10 +171,17 @@ def test_incremental_sketch_update_matches_full_rebuild(spark, tmp_path):
     # each of these small files is scanned alone whatever the core count
     try:
         spark.conf.set("spark.sql.files.minPartitionNum", "8")
-        state1 = agg.multi_sketch_agg(
-            catalog.load_snapshot(spark, path, version=1), specs)
-        ki = keyed(catalog.incremental_sketch_update(
-            spark, path, state1, specs, from_version=1))
+        # the stored state a real update starts from: its own build's
+        # merge is not part of the update's plan
+        agg.multi_sketch_agg(
+            catalog.load_snapshot(spark, path, version=1), specs) \
+            .write.parquet(str(tmp_path / "state1"))
+        state1 = spark.read.parquet(str(tmp_path / "state1"))
+        inc = catalog.incremental_sketch_update(
+            spark, path, state1, specs, from_version=1)
+        plan = inc._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow merge(") == 1, plan
+        ki = keyed(inc)
         kf = keyed(agg.multi_sketch_agg(
             catalog.load_snapshot(spark, path, version=2), specs))
     finally:

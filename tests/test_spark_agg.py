@@ -225,6 +225,25 @@ def test_vocabulary_overlap_matches_kernel_merge(spark, tokens_sdf):
     assert got == want
 
 
+def test_blob_pairs_keys_two_column_groups_injectively(spark):
+    """Pairs are keyed by the struct of the group columns, not by their
+    '|'-joined label: ('a|b','c') and ('a','b|c') share a label, NULL and
+    '' share one too when joined, yet every one of the 7 groups pairs
+    with each other group exactly once — C(7, 2) = 21 rows."""
+    from sgp_sketch.queries import vocabulary_overlap
+
+    groups = [("a|b", "c"), ("a", "b|c"), (None, "z"), ("", "z"),
+              ("x", "y"), ("x", None), ("y", "x")]
+    df = spark.createDataFrame(
+        [(g1, g2, [i]) for i, (g1, g2) in enumerate(groups)],
+        "g1 string, g2 string, tokens array<bigint>")
+    got = vocabulary_overlap(df, group_cols=("g1", "g2")).collect()
+    assert len(got) == 21
+    # one token per group: each pair's union holds exactly two tokens
+    assert {(r.est_a, r.est_b, r.est_union, r.est_overlap)
+            for r in got} == {(1.0, 1.0, 2.0, 0.0)}
+
+
 def test_heavy_hitters_global(spark, tokens_sdf, tokens_pdf):
     """Ungrouped top-k: the candidate union + merged-CMS ranking must find
     the global exact top-5."""

@@ -1,6 +1,8 @@
-"""Streaming tests: foreachBatch incremental build equals the batch build
-byte-exactly (mergeability IS the streaming property), and the
-applyInPandasWithState running estimator converges to the exact value."""
+"""Streaming tests: the foreachBatch sink's streamed state equals the
+batch build byte-exactly (mergeability IS the streaming property) across
+restarts, replays and compaction; per-window sketches are the same sink
+keyed by the window start; and the watermarked, dedup and stream-stream
+operators equal their batch twins."""
 
 import os
 
@@ -77,31 +79,6 @@ def test_batch_emptied_by_prepare_adds_no_state(spark, tokens_sdf,
     assert blobs(streaming.streamed_estimates(spark, state)) == batch
     assert streaming.compact_state(spark, state)["folded"] == 2
     assert blobs(streaming.streamed_estimates(spark, state)) == batch
-
-
-def test_stateful_running_estimate(spark, stream_input, tokens_pdf, tmp_path):
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt2")
-    sdf = streaming.running_distinct_stream(spark, stream_input, p=12)
-
-    def sink(batch_df, _bid):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (sdf.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", ckpt)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir).toPandas()
-    assert set(got.columns) == {"source", "est_distinct", "n_batches"}
-    # final (max n_batches) estimate per source within HLL bound of exact
-    bound = 3 * 1.04 / np.sqrt(1 << 12)
-    final = got.sort_values("n_batches").groupby("source").tail(1)
-    for src, sub in tokens_pdf.groupby("source"):
-        exact = len(np.unique(np.concatenate(sub["tokens"].to_numpy())))
-        est = float(final.loc[final.source == src, "est_distinct"].iloc[0])
-        assert abs(est - exact) / exact <= bound, (src, est, exact)
 
 
 def test_stream_picks_up_late_files(spark, tokens_sdf, tmp_path):
@@ -237,34 +214,6 @@ def test_compact_state_crash_windows(spark, stream_input, tmp_path):
     assert got == baseline
 
 
-def test_sessionized_stream_agg_matches_batch(spark):
-    """Streaming gap-session windows (session_window under a watermark,
-    availableNow) equal the same session aggregation computed in batch —
-    the dynamic-gap session state machine finalizes to identical
-    sessions."""
-    from pyspark.sql import functions as F
-
-    sf = "/root/testdata/sf0.001"
-    s = streaming.sessionized_stream_agg(
-        spark, sf, gap="30 minutes", watermark="1 day",
-        reader_options={"pathGlobFilter": "events.parquet"})
-    q = (s.writeStream.format("memory").queryName("sess_agg")
-         .outputMode("complete").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {(r["user_id"], r["win"]["start"], r["win"]["end"]):
-           (r["n_events"], round(r["sum_value"], 2))
-           for r in spark.table("sess_agg").collect()}
-    ev = (spark.read.parquet(f"{sf}/events.parquet")
-          .withColumn("ts", F.col("ts").cast("timestamp")))
-    want = {(r["user_id"], r["win"]["start"], r["win"]["end"]):
-            (r["n_events"], round(r["sum_value"], 2))
-            for r in ev.groupBy("user_id", F.session_window("ts", "30 minutes")
-                                .alias("win"))
-            .agg(F.count("*").alias("n_events"),
-                 F.sum("value").alias("sum_value")).collect()}
-    assert got == want and len(got) > 10
-
-
 def test_dedup_stream_within_watermark_matches_batch(spark, tmp_path):
     """dropDuplicatesWithinWatermark over a finite replay must equal the
     batch COUNT(DISTINCT) — within one watermark horizon the bounded-state
@@ -352,15 +301,17 @@ def test_streamed_mg_bracket_matches_exact(spark, stream_input, tokens_pdf,
         assert np.all(est <= counts)
         assert np.all(counts <= est + st.dec)
 
-def test_windowed_heavy_hitters_stream_matches_exact(spark, tmp_path):
-    """Stateful windowed MG over a replayed event stream: with counter
-    capacity >= the per-window value domain no eviction happens, so the
-    final emitted top-k per (type, day) must EQUAL the exact batch
-    top-k, bracket collapsed."""
-    import numpy as np
+def test_windowed_heavy_hitters_sink_matches_exact(spark, tmp_path):
+    """Per-(type × day) Misra–Gries through the sink: `prepare` projects
+    the key, the window start and the value, the state table is keyed by
+    (k, w), and streamed_estimates merges each window's partials. With
+    counter capacity >= the per-window value domain no eviction happens,
+    so each merged MG's top-3 must EQUAL the exact batch top-3, bracket
+    collapsed (dec == 0)."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
-    from sgp_sketch import streaming
+    from sgp_sketch.kernels import registry
 
     rng = np.random.default_rng(7)
     n = 3000
@@ -373,35 +324,36 @@ def test_windowed_heavy_hitters_stream_matches_exact(spark, tmp_path):
     src = str(tmp_path / "hh_events")
     spark.createDataFrame(pdf).repartition(3).write.parquet(src)
 
-    q = (streaming.windowed_heavy_hitters_stream(
-            spark, src, window="1 day", k=256, topk=3)
-         .writeStream.format("memory").queryName("hh_out")
-         .outputMode("update")
-         .trigger(availableNow=True).start())
+    def per_window(df):
+        return df.select(F.col("event_type").alias("k"),
+                         F.window("ts", "1 day").start.alias("w"),
+                         F.col("user_id").alias("v"))
+
+    specs = {"mg": {"kind": "mg", "value_col": "v", "params": {"k": 256}}}
+    state = str(tmp_path / "hh_state")
+    q = streaming.stream_sketch_build(
+        spark, src, state, specs, group_cols=("k", "w"),
+        checkpoint_dir=str(tmp_path / "hh_ckpt"), prepare=per_window,
+        reader_options={"maxFilesPerTrigger": 1})
     q.awaitTermination(120)
-    got = (spark.table("hh_out").toPandas()
-           .sort_values(["k", "w", "rank"])
-           .groupby(["k", "w"]).tail(3))  # last emission per group
-    # exact per (type, day)
-    pdf["day"] = pdf["ts"].dt.floor("D").astype(str).str[:10]
-    for (t, day), sub in pdf.groupby(["event_type", "day"]):
+    assert len([d for d in os.listdir(state)
+                if d.startswith("batch_id=")]) == 3
+    got = {(r["k"], r["w"].strftime("%Y-%m-%d")): registry.from_bytes(
+               bytes(r["state"]))
+           for r in streaming.streamed_estimates(
+               spark, state, group_cols=("k", "w")).collect()}
+    pdf["day"] = pdf["ts"].dt.strftime("%Y-%m-%d")
+    want = pdf.groupby(["event_type", "day"])
+    assert set(got) == set(want.groups)
+    for (t, day), sub in want:
         counts = sub.groupby("user_id").size().reset_index(name="c")
         counts = counts.sort_values(["c", "user_id"],
-                                    ascending=[False, True])
-        want = counts.head(3)
-        g = got[(got.k == t) & (got.w.str.startswith(day))]
-        assert len(g) == min(3, len(counts)), (t, day)
-        assert g["value"].tolist() == want["user_id"].tolist(), (t, day)
-        assert g["est_min"].tolist() == want["c"].tolist(), (t, day)
-        assert (g["est_min"] == g["est_max"]).all()
-
-def test_interval_ms_parses_spark_interval_subset():
-    from sgp_sketch.streaming import _interval_ms
-
-    assert _interval_ms("1 day") == 86400000
-    assert _interval_ms("2 days") == 2 * 86400000
-    assert _interval_ms("30 minutes") == 30 * 60000
-    assert _interval_ms("1 week") == 7 * 86400000
+                                    ascending=[False, True]).head(3)
+        mg = got[(t, day)]
+        assert mg.dec == 0, (t, day)
+        keys, cnts = mg.heavy_hitters()
+        assert keys[:3].tolist() == counts["user_id"].tolist(), (t, day)
+        assert cnts[:3].tolist() == counts["c"].tolist(), (t, day)
 
 
 def test_compact_state_gc_orphan_snapshot_dirs(spark, stream_input, tmp_path):
