@@ -1394,15 +1394,16 @@ def q_partition_introspection(spark, sf_dir):
 
 def q_checkpointed_hll(spark, sf_dir):
     """M4 resumable build through the public checkpoint API: slice-wise
-    build + finalize, estimates per source (byte-equal to a direct build —
-    gated in tests; here the estimate values are the check).
+    build + finalize_multi of one HLL spec, estimates per source
+    (byte-equal to a direct build — gated in tests; here the estimate
+    values are the check).
 
     Cheap by construction: builds straight over the source documents
     parquet via `prepare=` (no staged input copy), checkpoints only the
     KB-sized blob rows, and memoizes the collected result per sf_dir."""
     import shutil
 
-    from sgp_sketch import checkpoint
+    from sgp_sketch import agg, checkpoint
     from sgp_sketch import queries as Q
     from sgp_sketch.testdata import doc_tokens_from
 
@@ -1413,11 +1414,12 @@ def q_checkpointed_hll(spark, sf_dir):
         ensure_py_files(spark)
         work = _scratch(prefix="sgp_ckpt_q_")
         try:
-            checkpoint.build_checkpointed(
-                spark, f"{sf_dir}/documents.parquet", "hll", "tokens",
-                ("source",), {"p": 14}, ckpt_dir=f"{work}/ckpt",
-                files_per_slice=1, prepare=doc_tokens_from)
-            final = checkpoint.finalize(spark, f"{work}/ckpt")
+            checkpoint.build_checkpointed_multi(
+                spark, f"{sf_dir}/documents.parquet",
+                agg.single_spec("hll", "tokens", {"p": 14}), ("source",),
+                ckpt_dir=f"{work}/ckpt", files_per_slice=1,
+                prepare=doc_tokens_from)
+            final = checkpoint.finalize_multi(spark, f"{work}/ckpt")
             est = Q._blob_udf("double", Q._estimate)
             _STATEFUL_Q_CACHE[key] = (
                 final.select("source", est("state").alias("est_distinct"))
@@ -2101,14 +2103,14 @@ def q_kll_compactor_replay(spark, sf_dir):
 def q_checkpoint_resume_replay(spark, sf_dir):
     """Checkpoint RESUME adjudicated: stage documents as 4 parquet files,
     complete ONLY slice 0 through the public API (an interrupted run),
-    then build_checkpointed must SKIP it (lineage match) and finish the
-    rest; finalize() must byte-equal a direct one-shot sketch_agg build
-    on the same input. Output per source: the scanned token count
+    then build_checkpointed_multi must SKIP it (lineage match) and finish
+    the rest; finalize_multi must byte-equal a direct one-shot sketch_agg
+    build on the same input. Output per source: the scanned token count
     (n_items lineage metric — EXACT, the oracle recomputes it as
     SUM(len(string_split))) plus two invariant flags the oracle pins to
     1: resumed-state byte-equality and exactly-one-skipped-slice. This
     upgrades the S4/M4 resumability component (checkpoint.slice_complete,
-    checkpoint.build_checkpointed) from pytest-only to
+    checkpoint.build_checkpointed_multi) from pytest-only to
     driver-adjudicated. Memoized per sf_dir (pure recompute)."""
     import shutil
 
@@ -2128,19 +2130,21 @@ def q_checkpoint_resume_replay(spark, sf_dir):
             checkpoint._fs_mkdirs(spark, f"{ckpt}/slices")
             files = checkpoint.list_input_files(spark, staged)
             slices = checkpoint.plan_slices(files, files_per_slice=1)
+            spec = agg.single_spec("hll", "tokens", {"p": 12})
             # phase 1: an "interrupted" run that finished one slice
-            checkpoint.build_slice(spark, slices[0], "hll", "tokens",
-                                   ("source",), {"p": 12}, ckpt,
-                                   prepare=doc_tokens_from,
-                                   base_path=staged)
+            checkpoint.build_slice_multi(spark, slices[0], spec,
+                                         ("source",), ckpt,
+                                         prepare=doc_tokens_from,
+                                         base_path=staged)
             # phase 2: resume — lineage match must skip slice 0
-            manifest = checkpoint.build_checkpointed(
-                spark, staged, "hll", "tokens", ("source",), {"p": 12},
-                ckpt_dir=ckpt, files_per_slice=1, prepare=doc_tokens_from)
+            manifest = checkpoint.build_checkpointed_multi(
+                spark, staged, spec, ("source",), ckpt_dir=ckpt,
+                files_per_slice=1, prepare=doc_tokens_from)
             skipped_one = int(manifest["skipped"] ==
                               [slices[0]["slice_id"]])
             resumed = {r["source"]: (bytes(r["state"]), int(r["n_items"]))
-                       for r in checkpoint.finalize(spark, ckpt).collect()}
+                       for r in checkpoint.finalize_multi(spark,
+                                                          ckpt).collect()}
             direct = {r["source"]: bytes(r["state"])
                       for r in agg.sketch_agg(
                           doc_tokens_from(spark.read.parquet(staged)),

@@ -50,6 +50,7 @@ def main(argv=None) -> int:
 
     from sgp_sketch import agg, catalog
     from sgp_sketch import queries as Q
+    from sgp_sketch.checkpoint import _fs_exists, _fs_path
     from sgp_sketch.deploy import ensure_py_files
     from sgp_sketch.session import get_spark
 
@@ -69,11 +70,13 @@ def main(argv=None) -> int:
         return doc_tokens_from(df)
 
     blob_dir = os.path.join(args.state, "blobs")
-    try:
+    if _fs_exists(spark, os.path.join(blob_dir, "_SUCCESS")):
         state = spark.read.parquet(blob_dir)
         bootstrapped = False
-    except Exception:
-        # first run: full build over the from-version snapshot
+    else:
+        # first run, or a state torn by a crash mid-swap (no _SUCCESS):
+        # full build over the from-version snapshot. Reading a torn
+        # blobs/ would silently drop the groups it lost.
         state = agg.multi_sketch_agg(
             prepare(catalog.load_snapshot(spark, args.table,
                                           version=args.from_version)),
@@ -88,21 +91,25 @@ def main(argv=None) -> int:
 
     # write-then-swap: `updated` lazily reads the CURRENT blob_dir, so it
     # must fully materialize somewhere else before blob_dir is replaced
-    # (self-overwrite would truncate the input mid-scan); a crash in the
-    # window leaves the old state intact plus a stale .tmp
+    # (self-overwrite would truncate the input mid-scan). The swap is a
+    # delete plus a rename, no second Spark job. A crash before the delete
+    # leaves the old state intact plus a stale .tmp; a crash between the
+    # delete and the rename leaves no blobs/, and the next run
+    # bootstraps. On S3A rename is copy + delete, not atomic: a crash
+    # mid-rename can leave a partial blobs/ that already holds _SUCCESS.
     tmp_dir = blob_dir + ".tmp"
     updated.write.mode("overwrite").parquet(tmp_dir)
-    spark.read.parquet(tmp_dir).write.mode("overwrite").parquet(blob_dir)
-    from sgp_sketch.checkpoint import _fs_path
+    fs, dst = _fs_path(spark, blob_dir)
+    _, src = _fs_path(spark, tmp_dir)
+    fs.delete(dst, True)
+    if not fs.rename(src, dst):
+        raise IOError(f"state swap failed: {tmp_dir} -> {blob_dir}")
 
-    fs, p = _fs_path(spark, tmp_dir)
-    fs.delete(p, True)
-
-    # estimates only for the cardinality sketches — quantile/membership
-    # states answer queries, not a single scalar
+    # estimates only for the kinds whose estimate() is one scalar —
+    # quantile/membership/frequency states answer queries instead
     est = Q._blob_udf("double", Q._estimate)
     blobs = spark.read.parquet(blob_dir)
-    (blobs.filter(blobs.sketch_type.isin(["hll", "cms", "theta"]))
+    (blobs.filter(blobs.sketch_type.isin(["hll", "theta"]))
      .withColumn("estimate", est("state"))
      .drop("state")
      .write.mode("overwrite").parquet(os.path.join(args.state, "estimates")))

@@ -233,14 +233,17 @@ def incremental_sketch_update(spark, path: str, state_blobs, specs: dict,
 
     from . import agg
 
+    meta_dir = _join(path, "metadata")
+    # resolve the version once: the file delta and the schema must come
+    # from the same snapshot even if a commit lands during the update
+    if to_version is None:
+        to_version = int(_fs_read_text(
+            spark, _join(meta_dir, "version-hint.text")).strip())
     new_files = snapshot_new_files(spark, path, from_version, to_version)
     if not new_files:
         return state_blobs
-    meta_dir = _join(path, "metadata")
-    v = to_version if to_version is not None else int(_fs_read_text(
-        spark, _join(meta_dir, "version-hint.text")).strip())
     manifest = json.loads(_fs_read_text(
-        spark, _join(meta_dir, f"v{v}.metadata.json")))
+        spark, _join(meta_dir, f"v{to_version}.metadata.json")))
     delta = (spark.read.schema(StructType.fromJson(manifest["schema"]))
              .option("basePath", _join(path, "data")).parquet(*new_files))
     if prepare is not None:

@@ -8,9 +8,11 @@ file slice**, because in Spark the atomic durability boundary is the job
 commit (output committer), not the task. A build over S slices = S jobs; a
 crash between jobs loses at most one slice's work.
 
-Single-kind builds (`build_checkpointed`, `build_slice`, `finalize`) are
-the `_multi` builds with one spec named after the kind, so both write the
-same layout under `ckpt_dir/`:
+One API: `build_checkpointed_multi` plans the slices, skips each one whose
+lineage matches (`slice_complete`), builds the rest (`build_slice_multi`,
+all specs in one scan), and `finalize_multi` merges the slice blobs. A
+single-kind build is the same call with `agg.single_spec(kind, value_col,
+params)`. The layout under `ckpt_dir/`:
     slices/<slice_id>/           parquet: group_cols…, sketch (spec name),
                                  sketch_type, state, n_items — one blob
                                  row per (group × spec)
@@ -170,12 +172,11 @@ def _lineage_path(ckpt_dir: str, sid: str) -> str:
     return _join(ckpt_dir, "slices", f"{sid}.lineage.json")
 
 
-def slice_complete(spark, ckpt_dir: str, sl: dict,
-                   expect: dict | None = None) -> bool:
+def slice_complete(spark, ckpt_dir: str, sl: dict, expect: dict) -> bool:
     """True iff the slice's checkpoint exists AND was built under the same
     configuration. `expect` maps lineage keys (specs, group_cols) to
-    required values — without it a resumed build with a changed sketch
-    kind/params would silently reuse stale blobs."""
+    required values — a resumed build with a changed sketch kind/params
+    must not reuse stale blobs."""
     lp = _lineage_path(ckpt_dir, sl["slice_id"])
     if not _fs_exists(spark, lp):
         return False
@@ -186,34 +187,12 @@ def slice_complete(spark, ckpt_dir: str, sl: dict,
         # OSError; ANY unreadable/corrupt lineage means "rebuild this
         # slice", never "abort the resumable build"
         return False
-    if any(lin.get(k) != v for k, v in (expect or {}).items()):
+    if any(lin.get(k) != v for k, v in expect.items()):
         return False
     return (lin.get("version") == _LINEAGE_VERSION
             and lin.get("files") == sl["files"]
             and _fs_exists(spark, _join(_slice_dir(ckpt_dir, sl["slice_id"]),
                                         "_SUCCESS")))
-
-
-def build_slice(spark, sl: dict, kind: str, value_col: str, group_cols,
-                params: dict | None, ckpt_dir: str, prepare=None,
-                base_path: str | None = None) -> dict:
-    """`build_slice_multi` with a single spec named after `kind`."""
-    return build_slice_multi(spark, sl, agg.single_spec(kind, value_col,
-                                                        params),
-                             group_cols, ckpt_dir, prepare=prepare,
-                             base_path=base_path)
-
-
-def build_checkpointed(spark, input_path: str, kind: str, value_col: str,
-                       group_cols=("source",), params: dict | None = None,
-                       ckpt_dir: str = "./ckpt", files_per_slice: int = 8,
-                       prepare=None) -> dict:
-    """`build_checkpointed_multi` with a single spec named after `kind`;
-    call `finalize` for the merged per-group blob DataFrame."""
-    return build_checkpointed_multi(
-        spark, input_path, agg.single_spec(kind, value_col, params),
-        group_cols, ckpt_dir=ckpt_dir, files_per_slice=files_per_slice,
-        prepare=prepare)
 
 
 def _spec_record(specs: dict) -> dict:
@@ -325,8 +304,3 @@ def finalize_multi(spark, ckpt_dir: str, group_cols=("source",)):
     return agg.tree_merge(blobs,
                           group_cols=tuple(group_cols) + ("sketch",))
 
-
-def finalize(spark, ckpt_dir: str, group_cols=("source",)):
-    """`finalize_multi` without the `sketch` column: one blob row per
-    group of a single-kind checkpoint."""
-    return finalize_multi(spark, ckpt_dir, group_cols).drop("sketch")

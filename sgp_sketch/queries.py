@@ -298,49 +298,41 @@ def vocabulary_overlap_theta(df, group_cols=("source",),
 
 def build_sharded_membership(df, n_shards: int = 32, value_col: str = "tokens",
                              n_blocks: int = 1 << 10):
-    """Token-sharded Bloom filter table: one blob per shard, shard =
-    `pmod(xxhash64(token), n_shards)` (R1 hash routing). Written
+    """Token-sharded Bloom filter table: one blob per shard, the shard
+    from `routing.route_hash` (R1 hash routing). Written
     `partitionBy("shard")`, a point probe reads exactly one shard directory
     — the reference's partition-aware query routing (R6, README.md:342;
     memcached lookup replaced by storage-level pruning)."""
     from pyspark.sql import functions as F
 
-    # cast to long BEFORE hashing: xxhash64 hashes the binary width, so an
+    from .routing import route_hash
+
+    # cast to long BEFORE routing: the hash reads the binary width, so an
     # int32 token and the same value as int64 route to different shards —
     # probes (always long) must see the same bytes the build saw
-    exploded = df.select(
-        F.explode(value_col).alias("t")).select(
+    tokens = df.select(F.explode(value_col).alias("t")).select(
         F.col("t").cast("long").alias("token"))
-    routed = exploded.withColumn(
-        "shard", F.pmod(F.xxhash64("token"), F.lit(n_shards)).cast("int"))
-    return agg.sketch_agg(routed, "bloom", "token", ("shard",),
-                          {"n_blocks": n_blocks})
+    return build_membership(route_hash(tokens, "token", n_shards), "token",
+                            ("shard",), n_blocks)
 
 
 def probe_sharded_membership(spark, blob_path: str, tokens, n_shards: int):
-    """Point membership probes against a shard-partitioned Bloom table:
-    compute each probe's shard (same JVM xxhash64 as the build), read ONLY
-    those shard partitions (PartitionFilters prune the rest), probe the
-    ≤ |probes| blobs locally. → DataFrame(token long, maybe_present bool)."""
+    """Point membership probes against a shard-partitioned Bloom table
+    built by `build_sharded_membership` with the same `n_shards`: route
+    each probe with the build's `routing.route_hash`, read ONLY those
+    shard partitions (PartitionFilters prune the rest) and probe them
+    with `probe_membership`. → DataFrame(token long, maybe_present bool)."""
     from pyspark.sql import functions as F
 
-    probes = spark.createDataFrame([(int(t),) for t in tokens], "token long")
-    probes = probes.withColumn(
-        "shard", F.pmod(F.xxhash64("token"), F.lit(n_shards)).cast("int"))
-    plocal = probes.collect()
-    shards = sorted({r["shard"] for r in plocal})
+    from .routing import route_hash
+
+    probes = route_hash(spark.createDataFrame(
+        [(int(t),) for t in tokens], "token long"), "token", n_shards)
+    shards = [r["shard"] for r in probes.select("shard").distinct().collect()]
     blobs = (spark.read.parquet(blob_path)
-             .filter(F.col("shard").isin(shards))
-             .select("shard", "state").collect())
-    filters = {r["shard"]: registry.from_bytes(bytes(r["state"]))
-               for r in blobs}
-    out = []
-    for r in plocal:
-        flt = filters.get(r["shard"])
-        tok = np.array([r["token"]], dtype=np.int64)
-        hit = bool(flt.contains(tok.view(np.uint64))[0]) if flt else False
-        out.append((r["token"], hit))
-    return spark.createDataFrame(out, "token long, maybe_present boolean")
+             .filter(F.col("shard").isin(shards)))
+    return (probe_membership(spark, blobs, probes, ("shard",))
+            .select("token", "maybe_present"))
 
 
 def probe_membership(spark, blobs_df, probes, group_cols=("source",)):

@@ -35,7 +35,10 @@ watermark horizon.
 
 from __future__ import annotations
 
+import json
+
 from . import agg
+from .checkpoint import _fs_path, _fs_read_text, _fs_write_text, _join
 
 
 def _file_stream(spark, input_path: str, schema, reader_options):
@@ -102,54 +105,46 @@ def stream_sketch_build(spark, input_path: str, state_dir: str,
 _MARKER_PREFIX = "_compaction.v"
 
 
-def _marker_versions(spark, state_dir: str) -> list[int]:
-    from .checkpoint import _fs_path
-
-    fs, root = _fs_path(spark, state_dir)
-    if not fs.exists(root):
-        return []
-    out = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if (name.startswith(_MARKER_PREFIX) and name.endswith(".json")
-                and not status.isDirectory()):
-            out.append(int(name[len(_MARKER_PREFIX):-len(".json")]))
-    return sorted(out)
-
-
-def _read_marker(spark, state_dir: str):
-    """Highest-version compaction pointer {snapshot: negative id,
-    upto: M}, or None. Markers are versioned files (`_compaction.v3.json`)
+def _state_listing(spark, state_dir: str):
+    """List `state_dir` once → sorted (batch ids, marker versions, live
+    ids). This live-set rule, kept in one place, is what makes
+    compact_state crash-safe at every step: with no marker, the
+    non-negative batch dirs are live (a negative dir is an uncommitted
+    snapshot from a crashed compaction); else the highest-version marker
+    {snapshot: negative id, upto: M} names its snapshot plus every batch
+    id above M. Markers are versioned files (`_compaction.v3.json`)
     committed by rename-into-place, so a reader never sees a partial
     marker and there is never a window with no marker visible — a crashed
     writer just leaves two versions and readers take the max. A
     present-but-unparseable marker raises: silently ignoring it would
     drop the snapshot's data."""
-    import json
-
-    from .checkpoint import _fs_read_text, _join
-
-    versions = _marker_versions(spark, state_dir)
+    fs, root = _fs_path(spark, state_dir)
+    ids, versions = [], []
+    for status in (fs.listStatus(root) if fs.exists(root) else []):
+        name = status.getPath().getName()
+        if status.isDirectory():
+            if name.startswith("batch_id="):
+                ids.append(int(name.split("=", 1)[1]))
+        elif name.startswith(_MARKER_PREFIX) and name.endswith(".json"):
+            versions.append(int(name[len(_MARKER_PREFIX):-len(".json")]))
+    ids.sort()
+    versions.sort()
     if not versions:
-        return None
-    return json.loads(_fs_read_text(
+        return ids, versions, [i for i in ids if i >= 0]
+    marker = json.loads(_fs_read_text(
         spark, _join(state_dir, f"{_MARKER_PREFIX}{versions[-1]}.json")))
+    snap, upto = int(marker["snapshot"]), int(marker["upto"])
+    return ids, versions, [i for i in ids if i == snap or i > upto]
 
 
-def _live_blobs(spark, state_dir: str):
-    """State-table rows that are CURRENT under the compaction protocol:
-    without a marker, only non-negative batch dirs count (a negative dir
-    is an uncommitted snapshot from a crashed compaction); with a marker,
-    the named snapshot plus every batch id above `upto`. This rule is what
-    makes compact_state crash-safe at every step."""
+def _merged(spark, state_dir: str, batch_ids, group_cols):
+    """tree_merge of the state-table rows whose batch dir is in
+    `batch_ids` → one blob row per (group × sketch)."""
     from pyspark.sql import functions as F
 
-    blobs = spark.read.parquet(state_dir)
-    marker = _read_marker(spark, state_dir)
-    if marker is None:
-        return blobs.filter(F.col("batch_id") >= 0)
-    return blobs.filter((F.col("batch_id") == int(marker["snapshot"]))
-                        | (F.col("batch_id") > int(marker["upto"])))
+    blobs = (spark.read.parquet(state_dir)
+             .filter(F.col("batch_id").isin(batch_ids)).drop("batch_id"))
+    return agg.tree_merge(blobs, group_cols=tuple(group_cols) + ("sketch",))
 
 
 def streamed_estimates(spark, state_dir: str, group_cols=("source",)):
@@ -158,9 +153,9 @@ def streamed_estimates(spark, state_dir: str, group_cols=("source",)):
     `batch_id` is recovered as a hive-partition column of the state layout
     (one directory per micro-batch — see stream_sketch_build); compacted
     snapshots are resolved through the highest `_compaction.v<k>.json`
-    marker."""
-    return agg.tree_merge(_live_blobs(spark, state_dir).drop("batch_id"),
-                          group_cols=tuple(group_cols) + ("sketch",))
+    marker (`_state_listing`)."""
+    _, _, live = _state_listing(spark, state_dir)
+    return _merged(spark, state_dir, live, group_cols)
 
 
 def compact_state(spark, state_dir: str, group_cols=("source",)) -> dict:
@@ -169,7 +164,8 @@ def compact_state(spark, state_dir: str, group_cols=("source",)) -> dict:
     per batch forever.
 
     Crash-safe snapshot-pointer commit (every step leaves
-    `streamed_estimates` byte-identical):
+    `streamed_estimates` the same; see below for which kinds stay
+    byte-identical):
 
       1. merge the live set minus the max non-negative batch id (the only
          batch at-least-once replay can re-emit) into a NEW snapshot dir
@@ -183,81 +179,63 @@ def compact_state(spark, state_dir: str, group_cols=("source",)) -> dict:
 
     A crash before 2 leaves an orphan negative dir (ignored, rewritten by
     the next run); after 2, the new snapshot is authoritative and the old
-    dirs are dead. Kernel merge associativity makes the fold byte-exact.
+    dirs are dead. Kernel merge associativity makes the fold byte-exact
+    for kinds whose merge ignores order (hll, cms, bloom, theta, cs,
+    moments); merge-order-dependent kinds (mg, kll, t-digest, fd) merge
+    in a new order after a fold, so their bytes may change within their
+    error bounds. The state dir is listed once (`_state_listing`), before
+    step 1.
 
     Returns {"folded": n_batches_folded, "kept": n_dirs_after, ...}.
     """
-    import json
+    fs, _ = _fs_path(spark, state_dir)
 
-    from pyspark.sql import functions as F
+    def path(name):
+        return _fs_path(spark, _join(state_dir, name))[1]
 
-    from .checkpoint import _fs_path, _fs_read_text, _fs_write_text, _join
-
-    fs, root = _fs_path(spark, state_dir)
-    ids = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("batch_id="):
-            ids.append(int(name.split("=", 1)[1]))
-    marker = _read_marker(spark, state_dir)
-    if marker is None:
-        live = sorted(i for i in ids if i >= 0)
-    else:
-        live = sorted(i for i in ids
-                      if i == int(marker["snapshot"])
-                      or i > int(marker["upto"]))
+    ids, versions, live = _state_listing(spark, state_dir)
     # GC orphan negative dirs up front: a crash between step 1 and step 2
     # leaves an uncommitted snapshot dir; once new batches advance the
     # fold set, later compactions pick a different snap_id and the orphan
     # would otherwise leak forever (rescanned by every state read)
     for i in ids:
         if i < 0 and i not in live:
-            p_fs, p = _fs_path(spark, f"{state_dir}/batch_id={i}")
-            p_fs.delete(p, True)
-    nonneg = [i for i in live if i >= 0]
-    if not nonneg or len(live) <= 2:
+            fs.delete(path(f"batch_id={i}"), True)
+    if len(live) <= 2:
         return {"folded": 0, "kept": len(live)}
-    keep_max = max(nonneg)
-    fold = [i for i in live if i != keep_max]
-    if len(fold) < 2:
-        return {"folded": 0, "kept": len(live)}
-    upto = max(i for i in fold if i >= 0)
+    # at most one live id is negative (the committed snapshot), so with
+    # three or more the two largest are batch ids: keep the max, fold the
+    # rest
+    fold, keep_max = live[:-1], live[-1]
+    upto = fold[-1]
     snap_id = -(upto + 1)
 
-    blobs = (spark.read.parquet(state_dir)
-             .filter(F.col("batch_id").isin(fold)).drop("batch_id"))
-    merged = agg.tree_merge(blobs, group_cols=tuple(group_cols)
-                            + ("sketch",))
-    merged.write.mode("overwrite").parquet(
-        f"{state_dir}/batch_id={snap_id}")                       # step 1
-    versions = _marker_versions(spark, state_dir)
+    _merged(spark, state_dir, fold, group_cols).write.mode(
+        "overwrite").parquet(f"{state_dir}/batch_id={snap_id}")  # step 1
     next_v = (versions[-1] + 1) if versions else 1
-    tmp = _join(state_dir, f"_compaction.tmp.{next_v}")
-    _fs_write_text(spark, tmp, json.dumps({"snapshot": snap_id,
-                                           "upto": upto}))
-    _, tmp_p = _fs_path(spark, tmp)
-    dst = _join(state_dir, f"{_MARKER_PREFIX}{next_v}.json")
-    _, dst_p = _fs_path(spark, dst)
+    tmp, dst = f"_compaction.tmp.{next_v}", f"{_MARKER_PREFIX}{next_v}.json"
+    _fs_write_text(spark, _join(state_dir, tmp),
+                   json.dumps({"snapshot": snap_id, "upto": upto}))
     # Hadoop FileSystem.rename reports most failures by returning false,
     # not raising; the GC below deletes every old marker and all folded
     # dirs, so proceeding past a failed commit would leave NO committed
     # snapshot pointer. Verify the marker is in place AND parses before
     # destroying anything. (On S3A "rename" is copy+delete, not atomic —
-    # the fresh-versioned-name protocol never overwrites, and _read_marker
-    # raises on an unparseable marker rather than adopting it, so a
-    # half-copied object can abort a read but never silently drop state.)
-    if not fs.rename(tmp_p, dst_p):                              # step 2
-        raise IOError(f"compaction marker commit failed: {tmp} -> {dst}")
-    committed = json.loads(_fs_read_text(spark, dst))
+    # the fresh-versioned-name protocol never overwrites, and
+    # _state_listing raises on an unparseable marker rather than adopting
+    # it, so a half-copied object can abort a read but never silently
+    # drop state.)
+    if not fs.rename(path(tmp), path(dst)):                      # step 2
+        raise IOError(f"compaction marker commit failed in {state_dir}: "
+                      f"{tmp} -> {dst}")
+    committed = json.loads(_fs_read_text(spark, _join(state_dir, dst)))
     if int(committed["snapshot"]) != snap_id or int(committed["upto"]) != upto:
-        raise IOError(f"compaction marker verify failed: {dst}: {committed}")
+        raise IOError(f"compaction marker verify failed: {state_dir}/{dst}: "
+                      f"{committed}")
     for v in versions:                                           # step 3
-        p_fs, p = _fs_path(
-            spark, _join(state_dir, f"{_MARKER_PREFIX}{v}.json"))
-        p_fs.delete(p, False)
+        fs.delete(path(f"{_MARKER_PREFIX}{v}.json"), False)
     for b in fold:
-        p_fs, p = _fs_path(spark, f"{state_dir}/batch_id={b}")
-        p_fs.delete(p, True)
+        fs.delete(path(f"batch_id={b}"), True)
     return {"folded": len(fold), "kept": 2, "snapshot_batch_id": snap_id,
             "live_batch_id": keep_max}
 

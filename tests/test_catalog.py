@@ -135,11 +135,13 @@ def test_load_snapshot_overwrite_invalidates_old(spark, tmp_path):
         catalog.load_snapshot(spark, path, version=1).collect()
 
 
-def test_incremental_sketch_update_matches_full_rebuild(spark, tmp_path):
+def test_incremental_sketch_update_matches_full_rebuild(spark, tmp_path,
+                                                        monkeypatch):
     """Append v2, update sketches from the manifest diff only: for the
     order-invariant kernels the merged state is byte-identical to a
     full rebuild over the v2 snapshot, and the delta's partials merge
-    with the state in one round."""
+    with the state in one round. The current version is resolved once,
+    so the file delta and the schema come from one snapshot."""
     from sgp_sketch import agg
 
     path = str(tmp_path / "inc")
@@ -177,8 +179,17 @@ def test_incremental_sketch_update_matches_full_rebuild(spark, tmp_path):
             catalog.load_snapshot(spark, path, version=1), specs) \
             .write.parquet(str(tmp_path / "state1"))
         state1 = spark.read.parquet(str(tmp_path / "state1"))
+        read_text, reads = catalog._fs_read_text, []
+
+        def recording_read(s, p):
+            reads.append(p)
+            return read_text(s, p)
+
+        monkeypatch.setattr(catalog, "_fs_read_text", recording_read)
         inc = catalog.incremental_sketch_update(
             spark, path, state1, specs, from_version=1)
+        monkeypatch.undo()
+        assert sum(p.endswith("version-hint.text") for p in reads) == 1
         plan = inc._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInArrow merge(") == 1, plan
         ki = keyed(inc)

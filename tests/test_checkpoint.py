@@ -10,6 +10,9 @@ import pytest
 
 from sgp_sketch import agg, checkpoint
 
+# a single-kind checkpoint is the one API with a one-spec dict
+HLL12 = agg.single_spec("hll", "tokens", {"p": 12})
+
 
 @pytest.fixture(scope="module")
 def multi_file_input(spark, tokens_sdf, tmp_path_factory):
@@ -20,13 +23,13 @@ def multi_file_input(spark, tokens_sdf, tmp_path_factory):
 
 def test_checkpointed_equals_direct(spark, multi_file_input, tmp_path):
     ckpt = str(tmp_path / "ckpt")
-    manifest = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    manifest = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert manifest["n_slices"] >= 2
     assert not manifest["skipped"]
     final = {r["source"]: bytes(r["state"])
-             for r in checkpoint.finalize(spark, ckpt).collect()}
+             for r in checkpoint.finalize_multi(spark, ckpt).collect()}
     direct = {r["source"]: bytes(r["state"])
               for r in agg.sketch_agg(spark.read.parquet(multi_file_input),
                                       "hll", "tokens", ("source",),
@@ -36,21 +39,21 @@ def test_checkpointed_equals_direct(spark, multi_file_input, tmp_path):
 
 def test_resume_skips_completed_slices(spark, multi_file_input, tmp_path):
     ckpt = str(tmp_path / "ckpt")
-    m1 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m1 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     victim = m1["slice_ids"][1]
     shutil.rmtree(os.path.join(ckpt, "slices", victim))
     os.remove(os.path.join(ckpt, "slices", f"{victim}.lineage.json"))
-    m2 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m2 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert m2["built"] == [victim]
     assert sorted(m2["skipped"]) == sorted(
         s for s in m1["slice_ids"] if s != victim)
     # and the resumed result is still exact
     final = {r["source"]: bytes(r["state"])
-             for r in checkpoint.finalize(spark, ckpt).collect()}
+             for r in checkpoint.finalize_multi(spark, ckpt).collect()}
     direct = {r["source"]: bytes(r["state"])
               for r in agg.sketch_agg(spark.read.parquet(multi_file_input),
                                       "hll", "tokens", ("source",),
@@ -62,21 +65,22 @@ def test_stale_lineage_invalidated(spark, multi_file_input, tmp_path):
     """A lineage whose recorded file list no longer matches the plan must
     not be reused."""
     ckpt = str(tmp_path / "ckpt")
-    checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     # same input replanned with a different slicing → different slice ids →
     # nothing reusable
-    m = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=3)
     assert not m["skipped"]
 
 
 def test_lineage_contents(spark, multi_file_input, tmp_path):
     ckpt = str(tmp_path / "ckpt")
-    m = checkpoint.build_checkpointed(
-        spark, multi_file_input, "kll", "n_tok", ("source",), {},
+    m = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input,
+        agg.single_spec("kll", "n_tok", {}), ("source",),
         ckpt_dir=ckpt, files_per_slice=3)
     sid = m["slice_ids"][0]
     with open(os.path.join(ckpt, "slices", f"{sid}.lineage.json")) as fh:
@@ -92,8 +96,8 @@ def test_version_1_lineage_is_rebuilt(spark, multi_file_input, tmp_path):
     """A slice whose lineage carries an older format version is rebuilt on
     resume, never read under the current format; the rest are skipped."""
     ckpt = str(tmp_path / "ckpt")
-    m1 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m1 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     victim = m1["slice_ids"][0]
     path = os.path.join(ckpt, "slices", f"{victim}.lineage.json")
@@ -102,8 +106,8 @@ def test_version_1_lineage_is_rebuilt(spark, multi_file_input, tmp_path):
     lin["version"] = 1
     with open(path, "w") as fh:
         json.dump(lin, fh)
-    m2 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m2 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert m2["built"] == [victim]
     assert sorted(m2["skipped"]) == sorted(m1["slice_ids"][1:])
@@ -116,16 +120,16 @@ def test_ckpt_dir_uri_scheme(spark, multi_file_input, tmp_path):
     scheme-qualified ckpt_dir (file:///…, and by the same code path s3a://…)
     works end-to-end: build, resume-as-no-op, finalize."""
     ckpt = "file://" + str(tmp_path / "uri_ckpt")
-    m1 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m1 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert m1["built"] and not m1["skipped"]
-    m2 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m2 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert not m2["built"] and sorted(m2["skipped"]) == sorted(m1["built"])
     final = {r["source"]: bytes(r["state"])
-             for r in checkpoint.finalize(spark, ckpt).collect()}
+             for r in checkpoint.finalize_multi(spark, ckpt).collect()}
     direct = {r["source"]: bytes(r["state"])
               for r in agg.sketch_agg(spark.read.parquet(multi_file_input),
                                       "hll", "tokens", ("source",),
@@ -169,17 +173,19 @@ def test_changed_params_invalidate_checkpoint(spark, multi_file_input,
     slice — reusing p=12 blobs for a p=16 build would silently merge
     incompatible states."""
     ckpt = str(tmp_path / "ckpt_cfg")
-    m1 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 12},
+    m1 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert not m1["skipped"]
-    m2 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 16},
+    m2 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input,
+        agg.single_spec("hll", "tokens", {"p": 16}), ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert not m2["skipped"] and len(m2["built"]) == m1["n_slices"]
     # unchanged config still resumes
-    m3 = checkpoint.build_checkpointed(
-        spark, multi_file_input, "hll", "tokens", ("source",), {"p": 16},
+    m3 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input,
+        agg.single_spec("hll", "tokens", {"p": 16}), ("source",),
         ckpt_dir=ckpt, files_per_slice=2)
     assert not m3["built"] and len(m3["skipped"]) == m2["n_slices"]
 

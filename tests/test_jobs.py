@@ -62,7 +62,12 @@ def test_curate_corpus_job(tmp_path):
 
 def test_update_stats_job(spark, tmp_path):
     """Bootstrap at v1, append v2, run the incremental update twice: the
-    second run (no new snapshot) is a no-op fold that preserves state."""
+    second run (no new snapshot) is a no-op fold that preserves state. A
+    CMS spec rides along (its state has no scalar estimate). A third run
+    on a torn state (a source lost, no _SUCCESS) must rebuild it, not
+    read it as complete."""
+    import shutil
+
     from sgp_sketch import catalog
 
     layout = str(tmp_path / "layout")
@@ -74,7 +79,7 @@ def test_update_stats_job(spark, tmp_path):
     out = run_job(
         "update_stats.py", "--table", layout, "--state", state,
         "--from-version", "1", "--sketch", "hll:tokens:p=13",
-        "--master", "local[4]")
+        "--sketch", "cms:tokens:depth=4,width=1024", "--master", "local[4]")
     s1 = json.loads(out.strip().splitlines()[-1])
     assert s1["bootstrapped"] and s1["n_new_files"] >= 1
     est = spark.read.parquet(os.path.join(state, "estimates"))
@@ -85,6 +90,22 @@ def test_update_stats_job(spark, tmp_path):
         "--master", "local[4]")
     s2 = json.loads(out2.strip().splitlines()[-1])
     assert not s2["bootstrapped"] and s2["n_new_files"] == 0
+    # a swap torn by a crash: blobs/ lost one source and its _SUCCESS
+    blobs = os.path.join(state, "blobs")
+    torn = spark.read.parquet(blobs)
+    lost = sorted(r.source for r in torn.select("source").distinct()
+                  .collect())[0]
+    torn.filter(torn.source != lost).write.parquet(str(tmp_path / "torn"))
+    shutil.rmtree(blobs)
+    shutil.move(str(tmp_path / "torn"), blobs)
+    os.remove(os.path.join(blobs, "_SUCCESS"))
+    out3 = run_job(
+        "update_stats.py", "--table", layout, "--state", state,
+        "--from-version", "2", "--sketch", "hll:tokens:p=13",
+        "--master", "local[4]")
+    assert json.loads(out3.strip().splitlines()[-1])["bootstrapped"]
+    est = spark.read.parquet(os.path.join(state, "estimates"))
+    assert est.count() == 20
 
 def test_spectral_report_job(tmp_path):
     out = run_job(

@@ -27,7 +27,9 @@ python tools/check_contract.py --json CONTRACT_LOG_sf0.1.json /root/testdata/sf0
 # cms_heavy_hitters rides along because its MG candidate sets depend on
 # merge order: its exact answer must not. The stateful trio runs the
 # streaming sink, the checkpoint finalize and the catalog merge, whose
-# blob rows (and so merge inputs) change with the partitioning. The pair
+# blob rows (and so merge inputs) change with the partitioning;
+# checkpoint_resume_replay's resumed slices do too, and its pinned
+# invariant flags must not move with them. The pair
 # queries' self-join inputs move with the partitioning too; their exact
 # answers must not.
 SGP_CONTRACT_CORES=3 SGP_CONTRACT_SHUFFLE=5 python tools/check_contract.py \
@@ -36,6 +38,6 @@ SGP_CONTRACT_CORES=3 SGP_CONTRACT_SHUFFLE=5 python tools/check_contract.py \
     regional_revenue cumulative_spend trailing_7day_revenue date_rollup \
     cube_revenue bucketed_join session_stats session_window_counts \
     skew_salted_join quality_score value_histogram cms_heavy_hitters \
-    streamed_hll checkpointed_hll incremental_hll \
+    streamed_hll checkpointed_hll incremental_hll checkpoint_resume_replay \
     vocab_overlap theta_vocab_overlap theta_algebra_replay
 SPARK_GRAFT_BENCH_SCALING=0 python bench.py
