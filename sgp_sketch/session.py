@@ -1,7 +1,8 @@
 """SparkSession builder with the engine's standard configuration.
 
-Local defaults match the sandbox (local[N], 32 cores); on a real cluster the
-same settings apply per-executor and `master` is left to spark-submit.
+Local defaults use every core this process may run on (`local_cores`); on
+a real cluster the same settings apply per-executor and `master` is left to
+spark-submit.
 """
 
 from __future__ import annotations
@@ -9,11 +10,17 @@ from __future__ import annotations
 import os
 
 
+def local_cores() -> int:
+    """SPARK_GRAFT_CPUS when set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "sgp_sketch", master: str | None = None,
               shuffle_partitions: int | None = None, extra_conf: dict | None = None):
     from pyspark.sql import SparkSession
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     b = (SparkSession.builder.appName(app_name).master(master)

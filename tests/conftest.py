@@ -6,19 +6,12 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _cores() -> int:
-    """SPARK_GRAFT_CPUS when set, else the cores this process may run on."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS")
-               or len(os.sched_getaffinity(0)))
-
-
 @pytest.fixture(scope="session")
 def spark():
     from sgp_sketch.session import get_spark
 
-    n = _cores()
-    s = get_spark("sgp_sketch-tests", master=f"local[{n}]",
-                  shuffle_partitions=n)
+    # local[local_cores()] with as many shuffle partitions
+    s = get_spark("sgp_sketch-tests")
     yield s
     s.stop()
 

@@ -33,3 +33,84 @@ def test_package_zip_importable_standalone(tmp_path):
                          timeout=120)
     assert out.returncode == 0, out.stderr
     assert "ZIPOK" in out.stdout
+
+
+def test_unchanged_zip_archive_is_not_reread(tmp_path, monkeypatch):
+    import importlib
+    import zipfile
+    import zipimport
+
+    import sgp_sketch
+
+    wrapped = zipimport.zipimporter.invalidate_caches
+    importlib.reload(sgp_sketch)
+    assert zipimport.zipimporter.invalidate_caches is wrapped
+    archive = str(tmp_path / "mods.zip")
+
+    def write(names):
+        with zipfile.ZipFile(archive, "w") as z:
+            for n in names:
+                z.writestr(f"{n}.py", f"NAME = {n!r}\n")
+
+    write(["m1"])
+    saved_path = list(sys.path)
+    saved_modules = set(sys.modules)
+    saved_cache = dict(sys.path_importer_cache)
+    real, reads = zipimport._read_directory, []
+
+    def counting(path):
+        if path == archive:
+            reads.append(path)
+        return real(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    try:
+        sys.path.insert(0, archive)
+        import m1
+
+        assert m1.NAME == "m1"
+        # the importer's first refresh records the archive's signature
+        importlib.invalidate_caches()
+        del reads[:]
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads == []
+        write(["m1", "m2"])  # a larger archive: the signature changes
+        importlib.invalidate_caches()
+        assert reads == [archive]
+        import m2
+
+        assert m2.NAME == "m2"
+    finally:
+        sys.path[:] = saved_path
+        for name in set(sys.modules) - saved_modules:
+            del sys.modules[name]
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+
+
+def test_python_workers_keep_unchanged_zip_directories(spark):
+    """A task's `invalidate_caches()` re-reads no archive once the library
+    is imported, although each worker imports pyspark from pyspark.zip."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        import sgp_sketch  # noqa: F401
+
+        for _ in batches:
+            pass
+        importlib.invalidate_caches()
+        real, reads = zipimport._read_directory, []
+        zipimport._read_directory = lambda path: reads.append(path) or real(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        yield pa.RecordBatch.from_pydict({"reads": [len(reads)]})
+
+    rows = spark.range(1, numPartitions=1).mapInArrow(
+        probe, "reads long").collect()
+    assert [r.reads for r in rows] == [0]

@@ -67,14 +67,11 @@ def assign_shards_r1(df, n_shards: int = 16, algorithm: str = "ldg",
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from sgp_sketch.routing import assign_shards
     from sgp_sketch.session import get_spark
     from sgp_sketch.testdata import doc_tokens
 
-    spark = get_spark("bisect-router", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    spark = get_spark("bisect-router")
     toks = doc_tokens(spark, sf_dir).cache()
     total = toks.count()
 
