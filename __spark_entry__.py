@@ -2221,7 +2221,7 @@ def q_fennel_route_replay(spark, sf_dir):
     objective |N∩P| - γ·α·size^(γ-1) (EdgeCutSGP.java:182-183), γ=1.5,
     α = (√k·m)/(n·√n) computed from the probe's own (n, m) via the
     identical IEEE expression tree in both engines
-    (routing.fennel_alpha_exact; sqrt is correctly rounded in numpy AND
+    (routing.fennel_alpha; sqrt is correctly rounded in numpy AND
     DuckDB, so scores — and therefore every assignment — hash-match)."""
     return _route_replay_assign(spark, sf_dir, "fennel").orderBy("pos")
 

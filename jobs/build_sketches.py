@@ -45,6 +45,16 @@ def parse_sketch(spec: str) -> tuple[str, dict]:
                                    "params": params}
 
 
+def prepare(df):
+    """Sketch input of a raw table: token tables pass through, documents
+    tables get tokenized on the fly."""
+    if "tokens" in df.columns:
+        return df
+    from sgp_sketch.testdata import doc_tokens_from  # lazy import
+
+    return doc_tokens_from(df)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
@@ -72,14 +82,6 @@ def main(argv=None) -> int:
     spark = get_spark("sgp-build-sketches", master=args.master)
     ensure_py_files(spark)
     t0 = time.perf_counter()
-
-    # documents tables get tokenized on the fly; token tables pass through
-    def prepare(df):
-        if "tokens" in df.columns:
-            return df
-        from sgp_sketch.testdata import doc_tokens_from  # lazy import
-
-        return doc_tokens_from(df)
 
     # ONE scan per slice builds every sketch (multi_sketch_agg): the
     # checkpoint granularity costs a read per slice, not per sketch

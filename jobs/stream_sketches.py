@@ -33,7 +33,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from build_sketches import parse_sketch  # noqa: E402  (same spec grammar)
+from build_sketches import parse_sketch, prepare  # noqa: E402  (one grammar)
 
 
 def main(argv=None) -> int:
@@ -68,12 +68,6 @@ def main(argv=None) -> int:
 
     spark = get_spark("sgp-stream-sketches", master=args.master)
     ensure_py_files(spark)
-
-    def prepare(df):
-        if "tokens" in df.columns:
-            return df
-        from sgp_sketch.testdata import doc_tokens_from
-        return doc_tokens_from(df)
 
     t0 = time.perf_counter()
     q = streaming.stream_sketch_build(

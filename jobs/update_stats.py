@@ -31,7 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from build_sketches import parse_sketch  # noqa: E402  (same CLI grammar)
+from build_sketches import parse_sketch, prepare  # noqa: E402  (one grammar)
 
 
 def main(argv=None) -> int:
@@ -61,13 +61,6 @@ def main(argv=None) -> int:
     spark = get_spark("sgp-update-stats", master=args.master)
     ensure_py_files(spark)
     t0 = time.perf_counter()
-
-    def prepare(df):
-        if "tokens" in df.columns:
-            return df
-        from sgp_sketch.testdata import doc_tokens_from  # lazy import
-
-        return doc_tokens_from(df)
 
     blob_dir = os.path.join(args.state, "blobs")
     if _fs_exists(spark, os.path.join(blob_dir, "_SUCCESS")):

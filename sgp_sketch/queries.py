@@ -418,29 +418,6 @@ def mg_heavy_hitters(df, k: int = 10, counters: int = 1024,
             .select(*group_cols, "h.*"))
 
 
-def f2_moment(df, value_col="tokens", group_cols=("source",),
-              depth: int = 5, width: int = 1 << 13,
-              include_global: bool = False):
-    """Approximate second frequency moment F₂ = Σ f(token)² per group via
-    Count-Sketch/AMS (kernels/cs.py) — self-join size / token-skew mass,
-    the moment none of the other kernels answers. Relative error
-    ≤ √(6/width) w.h.p. (tests + tools/error_report.py gate it).
-
-    Same shape as distinct_tokens: one Arrow scan → per-partition CS
-    states → tree merge of KB blobs → one pandas finalize over |groups|
-    rows. Because CS merge is exact cell-wise addition, the global row
-    (include_global) is derived by merging the per-group blobs — no
-    second scan.
-
-    → DataFrame(group_cols..., est_f2 double).
-    """
-    blobs = agg.sketch_agg(df, "cs", value_col, group_cols,
-                           {"depth": depth, "width": width})
-    f2 = _blob_udf("double", lambda st: float(st.f2_estimate()))
-    return _with_global_row(blobs, group_cols, f2, "est_f2",
-                            include_global)
-
-
 # ------------------------------------------------------- state introspection
 
 def hll_register_table(blobs_df, group_cols=("grp",)):

@@ -19,8 +19,7 @@ import numpy as np
 import pytest
 
 from sgp_sketch.oracle_replay import greedy_route_replay_ctes
-from sgp_sketch.routing import (GreedyShardRouter, fennel_alpha,
-                                fennel_alpha_exact)
+from sgp_sketch.routing import GreedyShardRouter, fennel_alpha
 
 K = 8
 SLACK = 0.3
@@ -40,8 +39,8 @@ def _route_reference(docs, slack=SLACK, algorithm="ldg"):
             for _, t in sdocs]
     n, m = len(sdocs), sum(len(t) for t in toks)
     cap = max(1.0, n / K * (1.0 + slack))
-    router = GreedyShardRouter(K, cap, algorithm, gamma=1.5,
-                               alpha=fennel_alpha_exact(K, m, n), chunk=1)
+    router = GreedyShardRouter(K, cap, algorithm,
+                               alpha=fennel_alpha(K, m, n), chunk=1)
     return sdocs, router.assign_batch(keys, toks), cap, router
 
 
@@ -123,12 +122,6 @@ def test_quality_tail_matches_router_metrics():
     n_cut, max_size = rows[0]
     assert int(n_cut) == router.n_cut
     assert int(max_size) == int(router.sizes.max())
-
-
-def test_fennel_alpha_exact_tracks_formula():
-    for k, m, n in [(8, 51200, 1024), (4, 100, 10), (16, 10**9, 10**6)]:
-        assert fennel_alpha_exact(k, m, n) == pytest.approx(
-            fennel_alpha(k, m, n), rel=1e-12)
 
 
 def test_route_stream_sequential_spark(spark):

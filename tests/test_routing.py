@@ -36,14 +36,19 @@ def _keys(n):
 
 def _sequential_reference(docs, keys, k, capacity, algorithm, gamma=1.5,
                           alpha=1.0):
-    """Direct per-record transliteration of EdgeCutSGP's scoring loop
-    (collect max-score tie list, EdgeCutSGP.java:150-160, then pick
+    """Direct per-record transliteration of EdgeCutSGP's loops: hash is
+    `pmod(hash64(doc_key), k)` (EdgeCutSGP.java:122); LDG/Fennel collect
+    the max-score tie list (EdgeCutSGP.java:150-160), then pick
     `hash64(doc_key) % n_ties` — our deterministic stand-in for its
-    Random.nextInt): the parity oracle for the vectorized router."""
+    Random.nextInt. Also counts cut occurrences: a token whose home shard
+    differs from its doc's (EdgeCutSGP.java:125-130). The parity oracle
+    for the vectorized router."""
     sizes = np.zeros(k, dtype=np.int64)
     token2shard: dict[int, int] = {}
     out = []
+    n_cut = 0
     for toks, key in zip(docs, keys):
+        h = int(hash64(np.array([key], dtype=np.uint64))[0])
         hist = np.zeros(k)
         for t in toks:
             p = token2shard.get(int(t))
@@ -61,29 +66,32 @@ def _sequential_reference(docs, keys, k, capacity, algorithm, gamma=1.5,
                 ties, best_score = [i], s
             elif s == best_score:
                 ties.append(i)
-        if not ties:
+        if algorithm == "hash":
+            best = h % k
+        elif not ties:
             best = int(np.argmin(sizes))
         else:
-            h = int(hash64(np.array([key], dtype=np.uint64))[0])
             best = ties[h % len(ties)]
         sizes[best] += 1
         out.append(best)
+        n_cut += sum(token2shard.get(int(t), best) != best for t in toks)
         for t in toks:
             token2shard.setdefault(int(t), best)  # first writer wins
-    return np.array(out), sizes
+    return np.array(out), sizes, n_cut
 
 
-@pytest.mark.parametrize("algorithm", ["ldg", "fennel"])
+@pytest.mark.parametrize("algorithm", ["hash", "ldg", "fennel"])
 def test_greedy_matches_sequential_reference(algorithm):
     docs = _mini_docs()
     k, cap = 2, 4 * 1.05
     alpha = fennel_alpha(k, sum(len(d) for d in docs), len(docs))
     router = GreedyShardRouter(k, cap, algorithm, alpha=alpha, chunk=1)
     got = router.assign_batch(_keys(len(docs)), docs)
-    want, want_sizes = _sequential_reference(docs, _keys(len(docs)), k, cap,
-                                             algorithm, alpha=alpha)
+    want, want_sizes, want_cut = _sequential_reference(
+        docs, _keys(len(docs)), k, cap, algorithm, alpha=alpha)
     np.testing.assert_array_equal(got, want)
     np.testing.assert_array_equal(router.sizes, want_sizes)
+    assert router.n_cut == want_cut
 
 
 @pytest.mark.parametrize("algorithm", ["ldg", "fennel"])

@@ -350,12 +350,11 @@ def test_distinct_tokens_global_rejects_nonstring_groups(spark):
     from sgp_sketch import queries
 
     df = spark.createDataFrame([(1, [1, 2])], "day int, tokens array<long>")
-    for query in (queries.distinct_tokens, queries.f2_moment):
-        with pytest.raises(TypeError, match="string group columns"):
-            query(df, group_cols=("day",), include_global=True)
-        # non-global path works fine with int group cols
-        assert query(df, group_cols=("day",),
-                     include_global=False).count() == 1
+    with pytest.raises(TypeError, match="string group columns"):
+        queries.distinct_tokens(df, group_cols=("day",), include_global=True)
+    # non-global path works fine with int group cols
+    assert queries.distinct_tokens(df, group_cols=("day",),
+                                   include_global=False).count() == 1
 
 
 def test_heavy_hitters_int32_signed_tokens_int_groups(spark):
@@ -422,25 +421,6 @@ def test_cs_distributed_build_byte_equal_and_f2(spark, tokens_sdf,
         # query through the same stream
         est = sk.estimate_hashes(hash64(top.astype(np.uint64)))
         assert np.all(np.abs(est - true) <= np.sqrt(3 * f2 / sk.width)), src
-
-
-def test_f2_moment_api_with_global(spark, tokens_sdf, tokens_pdf):
-    """Public F2 API: per-source + __all__ rows, each within the AMS
-    bound vs the exact second moment; the global row comes from merging
-    the per-group blobs (no second scan)."""
-    out = queries.f2_moment(tokens_sdf, include_global=True).toPandas()
-    per_source = exact_stats(tokens_pdf)
-    bound = np.sqrt(6 / (1 << 13))
-    for src, flat in per_source.items():
-        _, c = np.unique(flat, return_counts=True)
-        f2 = float((c.astype(np.float64) ** 2).sum())
-        est = float(out.loc[out.source == src, "est_f2"].iloc[0])
-        assert abs(est - f2) <= f2 * bound, src
-    flat = np.concatenate(list(per_source.values()))
-    _, c = np.unique(flat, return_counts=True)
-    f2g = float((c.astype(np.float64) ** 2).sum())
-    estg = float(out.loc[out.source == "__all__", "est_f2"].iloc[0])
-    assert abs(estg - f2g) <= f2g * bound
 
 
 def test_dd_distributed_build_byte_equal_and_relative_error(
@@ -695,8 +675,6 @@ def test_finalizer_output_schemas(spark, tokens_sdf):
          "doc_id:string,est_distinct:double"),
         (queries.n_tok_quantiles(t), quant),
         (queries.quantiles_per_key(t, ["source"], "n_tok"), quant),
-        (queries.f2_moment(t, include_global=True),
-         "source:string,est_f2:double"),
         (queries.vocabulary_overlap(t),
          pair + "est_overlap:double,jaccard:double"),
         (queries.vocabulary_overlap_theta(t),
