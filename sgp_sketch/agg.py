@@ -33,10 +33,23 @@ group's data is small enough that shuffling it raw is the cheaper plan.
 
 All kernels run vectorized numpy over Arrow batches; no per-row Python in the
 scan path (BASELINE.json input_hint).
+
+Worker heap: both Spark task functions (`build_partials_multi`'s scan task
+and `tree_merge`'s round task) start with `gc.freeze()`, moving every object
+alive when the task starts (modules, numpy, pyarrow, the kernels) to the
+collector's permanent generation. PySpark's worker daemon runs
+`gc.collect()` after each task in a reused worker; with that heap frozen
+the collect walks only the task's own objects (10-23 ms → ~20 µs per task
+on a 74k-object worker). The daemon has already collected the previous
+task's cyclic garbage when the next task freezes, so the frozen set holds
+no earlier task's garbage and stays flat from task to task. The freeze is
+in the task functions, not in `_merge_batches`, so a driver-side merge can
+reuse that body without freezing the driver's heap.
 """
 
 from __future__ import annotations
 
+import gc
 import math
 
 import numpy as np
@@ -169,6 +182,7 @@ def tree_merge(partials, out_schema: str | None = None,
             PARTIAL_SCHEMA_TAIL
 
     def merge(batches):
+        gc.freeze()   # worker heap: see the module docstring
         return _merge_batches(batches, group_cols, schema)
 
     def merge_round(df):
@@ -375,6 +389,7 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
     def acc(batches):
         import pyarrow as pa
 
+        gc.freeze()   # worker heap: see the module docstring
         states: dict[tuple, object] = {}   # (gkey-tuple, name) → state
         counts: dict[tuple, int] = {}
 

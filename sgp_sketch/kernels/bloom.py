@@ -145,7 +145,7 @@ class Bloom:
             raise ValueError("not a Bloom blob")
         off = struct.calcsize("<2sBBBIQQ")
         words, end = serde.unpack_flat(buf, off, ver, n_blocks * BLOCK_WORDS,
-                                       "<u8", np.uint64)
+                                       "<u8", np.uint64, "bloom")
         serde.check_end(buf, end, "bloom")
         return cls(n_blocks, k, seed, words=words, n_items=n_items)
 

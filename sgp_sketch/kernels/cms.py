@@ -32,7 +32,6 @@ from . import serde
 from .hashing import hash64
 
 MAGIC = b"SK"
-VERSION = 1
 TYPE_CMS = 2
 
 
@@ -143,12 +142,14 @@ class CMS:
         return self.estimate_hashes(hash64(np.asarray(values), seed=seed))
 
     def to_bytes(self) -> bytes:
-        """Dense (version 1) or sparse COO (version 2) — whichever is
-        smaller. Partial states from small partitions are mostly zeros;
-        sparse encoding cuts the shuffled partial-blob bytes by orders of
-        magnitude at bench scale while the merged/dense case stays compact.
-        The choice is a pure function of the state, so byte-equality
-        properties across build orders are preserved."""
+        """Dense or sparse COO, whichever is smaller, with counters in the
+        narrowest unsigned width that holds them (versions 3/4; versions
+        1/2 when a counter needs 8 bytes; serde.py). Partial states from
+        small partitions are mostly zeros; sparse encoding cuts the
+        shuffled partial-blob bytes by orders of magnitude at bench scale
+        while the merged/dense case stays compact. The choice is a pure
+        function of the state, so byte-equality properties across build
+        orders are preserved."""
         ver, payload = serde.pack_flat(self.table.ravel(), "<i8")
         head = struct.pack("<2sBBBIQQ", MAGIC, ver, TYPE_CMS,
                            self.depth, self.width, self.seed, self.n_items)
@@ -161,7 +162,7 @@ class CMS:
             raise ValueError("not a CMS blob")
         off = struct.calcsize("<2sBBBIQQ")
         flat, end = serde.unpack_flat(buf, off, ver, depth * width, "<i8",
-                                      np.int64)
+                                      np.int64, "cms")
         serde.check_end(buf, end, "cms")
         return cls(depth, width, seed, table=flat.reshape(depth, width),
                    n_items=n_items)

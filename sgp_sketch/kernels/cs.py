@@ -39,7 +39,6 @@ from . import serde
 from .hashing import hash64
 
 MAGIC = b"SK"
-VERSION = 1
 TYPE_CS = 9
 
 
@@ -162,10 +161,11 @@ class CS:
                              / self.width))
 
     def to_bytes(self) -> bytes:
-        """Dense (version 1) or sparse COO (version 2), whichever is
-        smaller — same little-endian discipline as the other kernels;
-        pure function of the state so byte-equality holds across build
-        orders."""
+        """Dense or sparse COO, whichever is smaller, with counters in the
+        narrowest signed (or, with no negative cell, unsigned) width that
+        holds them — versions 3/4, or 1/2 when a counter needs 8 bytes
+        (serde.py); pure function of the state so byte-equality holds
+        across build orders."""
         ver, payload = serde.pack_flat(self.table.ravel(), "<i8")
         head = struct.pack("<2sBBBIQQ", MAGIC, ver, TYPE_CS,
                            self.depth, self.width, self.seed, self.n_items)
@@ -179,7 +179,7 @@ class CS:
             raise ValueError("not a CS blob")
         off = struct.calcsize("<2sBBBIQQ")
         flat, end = serde.unpack_flat(buf, off, ver, depth * width, "<i8",
-                                      np.int64)
+                                      np.int64, "cs")
         serde.check_end(buf, end, "cs")
         return cls(depth, width, seed, table=flat.reshape(depth, width),
                    n_items=n_items)

@@ -10,11 +10,11 @@ from . import (bloom, cms, cs, dd, fd, hll, kll, mg, moments, serde,
                tdigest, theta)
 
 # kind → (type byte, class, empty(**params), header versions its
-# from_bytes reads). The array kernels write serde's sparse payload under
-# its own version byte.
+# from_bytes reads). The array kernels write serde's sparse (and, for the
+# integer tables, narrowed) payloads under their own version bytes.
 _KINDS = {
     "hll": (hll.TYPE_HLL, hll.HLL, hll.empty, {hll.VERSION}),
-    "cms": (cms.TYPE_CMS, cms.CMS, cms.empty, {cms.VERSION, serde.SPARSE_VER}),
+    "cms": (cms.TYPE_CMS, cms.CMS, cms.empty, serde.INT_VERSIONS),
     "bloom": (bloom.TYPE_BLOOM, bloom.Bloom, bloom.empty,
               {bloom.VERSION, serde.SPARSE_VER}),
     "kll": (kll.TYPE_KLL, kll.KLL, kll.empty, {kll.VERSION}),
@@ -23,7 +23,7 @@ _KINDS = {
     "theta": (theta.TYPE_THETA, theta.Theta, theta.empty, {theta.VERSION}),
     "mg": (mg.TYPE_MG, mg.MG, mg.empty, {mg.VERSION}),
     "fd": (fd.TYPE_FD, fd.FD, fd.empty, {fd.VERSION}),
-    "cs": (cs.TYPE_CS, cs.CS, cs.empty, {cs.VERSION, serde.SPARSE_VER}),
+    "cs": (cs.TYPE_CS, cs.CS, cs.empty, serde.INT_VERSIONS),
     "dd": (dd.TYPE_DD, dd.DD, dd.empty, {dd.VERSION}),
     "moments": (moments.TYPE_MOMENTS, moments.Moments, moments.empty,
                 {moments.VERSION}),

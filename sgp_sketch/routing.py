@@ -80,20 +80,19 @@ class GreedyShardRouter:
 
     def _remember(self, flat: np.ndarray, doc_shard: np.ndarray,
                   doc_idx: np.ndarray) -> None:
-        """First-writer-wins token→shard upsert, batch-merged."""
+        """First-writer-wins token→shard upsert: the chunk's unseen tokens
+        are inserted at their sorted positions, with no re-sort of the
+        map."""
         uniq, first = np.unique(flat, return_index=True)
         shard_of = doc_shard[doc_idx[first]]
+        pos = np.searchsorted(self._keys, uniq)
         if self._keys.size:
-            idx = np.searchsorted(self._keys, uniq)
-            idx[idx == self._keys.size] = 0
-            new_mask = self._keys[idx] != uniq
-            uniq, shard_of = uniq[new_mask], shard_of[new_mask]
+            new = self._keys[np.minimum(pos, self._keys.size - 1)] != uniq
+            uniq, shard_of, pos = uniq[new], shard_of[new], pos[new]
         if uniq.size == 0:
             return
-        keys = np.concatenate([self._keys, uniq])
-        shards = np.concatenate([self._shards, shard_of])
-        order = np.argsort(keys, kind="stable")
-        self._keys, self._shards = keys[order], shards[order]
+        self._keys = np.insert(self._keys, pos, uniq)
+        self._shards = np.insert(self._shards, pos, shard_of)
 
     def _score(self, hist: np.ndarray, sizes: np.ndarray) -> np.ndarray:
         """(n_docs × k) score matrix from the neighbor histogram and the

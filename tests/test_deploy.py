@@ -114,3 +114,55 @@ def test_python_workers_keep_unchanged_zip_directories(spark):
     rows = spark.range(1, numPartitions=1).mapInArrow(
         probe, "reads long").collect()
     assert [r.reads for r in rows] == [0]
+
+
+def test_library_tasks_freeze_the_worker_heap(spark, tokens_sdf):
+    """After a build, a reused worker's long-lived heap sits in the
+    collector's permanent generation, so the daemon's per-task
+    `gc.collect()` walks only a task's own objects; the frozen set does
+    not grow from build to build."""
+    import pyarrow as pa
+
+    from sgp_sketch import agg
+
+    specs = {"hll": {"kind": "hll", "value_col": "tokens",
+                     "params": {"p": 10}},
+             "cms": {"kind": "cms", "value_col": "tokens",
+                     "params": {"width": 1 << 10}}}
+
+    def build():
+        agg.multi_sketch_agg(tokens_sdf, specs).collect()
+
+    def probe(batches):
+        import gc
+        import os
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()], "frozen": [gc.get_freeze_count()],
+            "unfrozen": [len(gc.get_objects())]})
+
+    def frozen_by_worker():
+        n = 2 * spark.sparkContext.defaultParallelism
+        rows = spark.range(n, numPartitions=n).mapInArrow(
+            probe, "pid long, frozen long, unfrozen long").collect()
+        frozen = [r for r in rows if r.frozen > 0]
+        assert frozen, rows
+        assert all(r.unfrozen < 1000 for r in frozen), rows
+        return {r.pid: r.frozen for r in frozen}
+
+    for _ in range(3):
+        build()
+    before = frozen_by_worker()
+    builds = 20
+    for _ in range(builds):
+        build()
+    after = frozen_by_worker()
+    common = before.keys() & after.keys()
+    assert common, (before, after)
+    # a worker's first run of a task path can leave a couple of cached
+    # objects that its next task freezes, once; a per-task leak would
+    # freeze more than one object per build
+    assert all(after[p] - before[p] < builds for p in common), \
+        (before, after)

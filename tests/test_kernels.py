@@ -324,6 +324,178 @@ def test_damaged_or_version_skewed_blob_raises(kind):
         lowered = blob[:6] + struct.pack("<I", n - 10) + blob[10:]
         with pytest.raises(ValueError, match="malformed hll blob"):
             registry.from_bytes(lowered)
+    if kind in ("cms", "cs", "bloom"):
+        _check_damaged_sparse_payload(kind)
+
+
+# array kernels' blob header '<2sBBBIQQ': the serde payload starts here
+_ARRAY_HEAD = struct.calcsize("<2sBBBIQQ")
+
+
+def _check_damaged_sparse_payload(kind):
+    """A sparse index past the table, indices out of order, or (cms/cs)
+    an unknown width code raise "malformed <kind> blob", never an
+    IndexError or a wrong state."""
+    from sgp_sketch.kernels import serde
+
+    st = registry.make(kind, **{"cms": {"width": 256}, "cs": {"width": 256},
+                                "bloom": {"n_blocks": 64}}[kind])
+    blob = st.update(np.array([3, 5, 8], dtype=np.uint64
+                              if kind == "bloom" else np.int64)).to_bytes()
+    narrow = blob[2] == serde.NARROW_SPARSE_VER
+    assert narrow or (kind == "bloom" and blob[2] == serde.SPARSE_VER)
+    at = _ARRAY_HEAD + (1 if narrow else 0)       # the '<q' nnz field
+    (nnz,) = struct.unpack_from("<q", blob, at)
+    idx = list(struct.unpack_from(f"<{nnz}I", blob, at + 8))
+    assert nnz >= 2
+
+    def with_idx(new):
+        return (blob[:at + 8] + struct.pack(f"<{nnz}I", *new)
+                + blob[at + 8 + 4 * nnz:])
+
+    assert registry.from_bytes(with_idx(idx)).to_bytes() == blob
+    size = st.table.size if kind != "bloom" else st.words.size
+    for bad in (idx[:-1] + [size], idx[:-1] + [0xFFFFFFF0],
+                [idx[1], idx[0]] + idx[2:], [idx[0], idx[0]] + idx[2:]):
+        with pytest.raises(ValueError, match=f"malformed {kind} blob"):
+            registry.from_bytes(with_idx(bad))
+    too_many = blob[:at] + struct.pack("<q", size + 1) + blob[at + 8:]
+    with pytest.raises(ValueError, match=f"malformed {kind} blob"):
+        registry.from_bytes(too_many)
+    if narrow:
+        coded = blob[:_ARRAY_HEAD] + bytes([99]) + blob[_ARRAY_HEAD + 1:]
+        with pytest.raises(ValueError,
+                           match=f"malformed {kind} blob: unknown width"):
+            registry.from_bytes(coded)
+
+
+# --------------------------------------------------- width-adaptive payloads
+
+def _old_blob(st, sparse: bool) -> bytes:
+    """A cms/cs blob in the version-1 (dense) / version-2 (sparse) wire
+    format, every counter as '<i8': what blobs looked like before the
+    narrow payloads."""
+    typ = st.to_bytes()[3]
+    flat = st.table.ravel()
+    if sparse:
+        nz = np.flatnonzero(flat)
+        payload = (struct.pack("<q", nz.size) + nz.astype("<u4").tobytes()
+                   + flat[nz].astype("<i8").tobytes())
+    else:
+        payload = flat.astype("<i8").tobytes()
+    return struct.pack("<2sBBBIQQ", b"SK", 2 if sparse else 1, typ,
+                       st.depth, st.width, st.seed, st.n_items) + payload
+
+
+# (largest |counter| set, width code expected) at each width boundary;
+# None = needs 8 bytes, so the blob keeps the version-1/2 format
+_UNSIGNED_EDGES = [(255, 0), (256, 1), (65535, 1), (65536, 2),
+                   ((1 << 32) - 1, 2), (1 << 32, None)]
+_SIGNED_EDGES = [(-128, 3), (127, 3), (-129, 4), (-32768, 4), (-32769, 5),
+                 (-(1 << 31), 5), (-(1 << 31) - 1, None),
+                 ((1 << 32), None)]
+
+
+def _table_state(kind, edge, sparse):
+    """cms/cs state whose table holds `edge` (and, for cs with a positive
+    edge, a -1 cell), dense or with two or three nonzero cells."""
+    from sgp_sketch.kernels import cs
+
+    cls = {"cms": cms.CMS, "cs": cs.CS}[kind]
+    table = np.zeros((4, 64), dtype=np.int64)
+    if sparse:
+        table[0, 3], table[2, 40] = 7, edge
+    else:
+        table[:] = np.arange(table.size).reshape(table.shape) % 100 + 1
+        table[3, 63] = edge
+    if kind == "cs" and edge > 0:
+        table[1, 5] = -1
+    return cls(4, 64, 7, table=table, n_items=12345)
+
+
+@pytest.mark.parametrize("sparse", [False, True])
+@pytest.mark.parametrize("kind,edge,code",
+                         [("cms", e, c) for e, c in _UNSIGNED_EDGES]
+                         + [("cs", e, c) for e, c in _SIGNED_EDGES])
+def test_narrow_payload_round_trips_at_every_width(kind, edge, code, sparse):
+    from sgp_sketch.kernels import serde
+
+    st = _table_state(kind, edge, sparse)
+    blob = st.to_bytes()
+    back = registry.from_bytes(blob)
+    np.testing.assert_array_equal(back.table, st.table)
+    assert back.table.dtype == np.int64 and back.n_items == st.n_items
+    if code is None:
+        assert blob[2] == (serde.SPARSE_VER if sparse else serde.DENSE_VER)
+        assert blob == _old_blob(st, sparse)
+        return
+    assert blob[2] == (serde.NARROW_SPARSE_VER if sparse
+                       else serde.NARROW_DENSE_VER)
+    assert blob[_ARRAY_HEAD] == code
+    w = np.dtype(serde.NARROW[code]).itemsize
+    n = 2 + (kind == "cs" and edge > 0) if sparse else st.table.size
+    assert len(blob) == _ARRAY_HEAD + 1 + (8 + (4 + w) * n if sparse
+                                           else w * n)
+
+
+def test_narrow_payload_sparse_choice_uses_real_width():
+    """Sparse wins only when nnz·(4+w) < size·w for the narrowed w: of
+    256 one-byte cells, 40 nonzero go sparse (200 B < 256 B), 60 stay
+    dense (300 B)."""
+    from sgp_sketch.kernels import serde
+
+    for nnz, ver in ((40, serde.NARROW_SPARSE_VER),
+                     (60, serde.NARROW_DENSE_VER)):
+        flat = np.zeros(256, dtype=np.int64)
+        flat[:nnz] = 9
+        assert serde.pack_flat(flat, "<i8")[0] == ver
+    # Bloom's '<u8' words never narrow
+    words = np.zeros(256, dtype=np.uint64)
+    words[:3] = 1
+    assert serde.pack_flat(words, "<u8")[0] == serde.SPARSE_VER
+
+
+@pytest.mark.parametrize("kind", ["cms", "cs"])
+@pytest.mark.parametrize("sparse", [False, True])
+def test_old_wire_format_blobs_still_decode_and_merge(kind, sparse):
+    """Version-1/2 blobs (written before the narrow payloads) decode to the
+    same table as today's blobs, re-encode to today's bytes, and merge
+    with today's blobs to the all-new merge, byte for byte."""
+    a = _table_state(kind, 300, sparse)
+    b = _table_state(kind, 70000, not sparse)
+    old_a = _old_blob(a, sparse)
+    assert old_a != a.to_bytes() and old_a[2] in (1, 2)
+    back = registry.from_bytes(old_a)
+    np.testing.assert_array_equal(back.table, a.table)
+    assert back.to_bytes() == a.to_bytes()
+    new = registry.merge_blobs([a.to_bytes(), b.to_bytes()])
+    assert registry.merge_blobs([old_a, b.to_bytes()]) == new
+    assert registry.merge_blobs([b.to_bytes(), old_a]) == new
+    assert registry.merge_blobs([old_a, _old_blob(b, sparse)]) == new
+
+
+@pytest.mark.parametrize("kind", ["cms", "cs"])
+def test_narrow_payload_equal_bytes_across_build_orders(kind):
+    """Two build orders (chunk order, and merge order of the chunks'
+    states) give one byte string; cms is built with plain updates, whose
+    cells do not depend on order."""
+    vals = RNG.integers(0, 5000, size=20_000)
+    chunks = np.array_split(vals, 5)
+    params = {"width": 1 << 10} | ({"conservative": False}
+                                   if kind == "cms" else {})
+
+    def build(parts):
+        st = registry.make(kind, **params)
+        for p in parts:
+            st.update(p)
+        return st.to_bytes()
+
+    one = build(chunks)
+    assert one == build(chunks[::-1])
+    states = [build([c]) for c in chunks]
+    assert registry.merge_blobs(states) == one
+    assert registry.merge_blobs(states[::-1]) == one
+    assert one[2] in (3, 4)
 
 
 # ================================================================= theta
