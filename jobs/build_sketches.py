@@ -88,7 +88,7 @@ def main(argv=None) -> int:
     manifest = checkpoint.build_checkpointed_multi(
         spark, input_path, specs, group_cols, ckpt_dir=args.ckpt_dir,
         files_per_slice=args.files_per_slice, prepare=prepare)
-    final = checkpoint.finalize_multi(spark, args.ckpt_dir, group_cols)
+    final = checkpoint.finalize_multi(spark, args.ckpt_dir)
     (final.write.mode("overwrite").partitionBy("sketch")
      .parquet(os.path.join(args.output, "sketches")))
 

@@ -83,11 +83,9 @@ def main(argv=None) -> int:
     else:
         q.awaitTermination()
 
-    compacted = (streaming.compact_state(spark, args.state_dir,
-                                         group_cols=group_cols)
+    compacted = (streaming.compact_state(spark, args.state_dir)
                  if args.compact else None)
-    final = streaming.streamed_estimates(spark, args.state_dir,
-                                         group_cols=group_cols)
+    final = streaming.streamed_estimates(spark, args.state_dir)
     n_groups = final.count()
     summary = {"state_dir": args.state_dir, "n_blob_groups": int(n_groups),
                "specs": sorted(specs), "seconds":

@@ -16,8 +16,9 @@ aggregates, made explicit for our binary states — SURVEY.md §2.4):
 bloom, theta, mg, cs) over token lists or integer columns, numeric kinds
 (kll, tdigest, dd, moments) over scalar columns, and Frequent Directions
 over fixed-length vector columns. `tree_merge` is the only blob merge: it
-finishes a build, and it re-aggregates existing blob tables to a coarser
-grouping (per-source → global, streamed batches, checkpoint slices).
+finishes a build, re-aggregates stored blob tables (streamed batches,
+checkpoint slices) to their own grouping, and merges to a coarser one
+(per-source → global).
 
 Why not groupBy(group).applyInPandas over raw rows: that shuffles ALL input
 bytes to as many tasks as there are groups (8 sources ⇒ 8 tasks for 100 TB).
@@ -57,6 +58,8 @@ import numpy as np
 from .kernels import registry
 from .kernels.hashing import hash64
 
+# the blob tail: every column of a blob table after its grouping columns
+BLOB_TAIL = ("sketch_type", "state", "n_items", "part_id")
 PARTIAL_SCHEMA_TAIL = ("sketch_type string, state binary, n_items long, "
                        "part_id long")
 
@@ -71,16 +74,29 @@ def _schema_prefix(schema, cols) -> str:
                    for c in cols)
 
 
-def _group_arrays(schema, cols, values: dict) -> list:
-    """Arrow arrays for the group columns of an output batch, typed as
-    the Spark schema declares them: inference would give int64 for an
-    int32 group column, and Spark's Arrow reader then fails on the width
-    mismatch ("Cannot call getInt") only when a query groups by it."""
+def _blob_batch(groups, acc: dict):
+    """The one blob-row writer: {key: [state, n_items]}, key = (group
+    values…, sketch_type, part_id) → one RecordBatch (group columns…,
+    BLOB_TAIL). Rows are sorted by key, nulls first, the order Spark's
+    sort-based grouping emits: kll, tdigest and mg merges depend on input
+    order, so a later merge of these rows (per-source → global, the next
+    round) only gives the same bytes if each task emits sorted. `groups`
+    (a Spark StructType) types the group columns: inferred, an int32
+    column becomes int64, and Spark's Arrow reader fails on that ("Cannot
+    call getInt") only when a query groups by it."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    return [pa.array(values[c], type=to_arrow_type(schema[c].dataType))
-            for c in cols]
+    order = sorted(acc, key=lambda k: tuple((v is not None, v) for v in k))
+    n = len(groups.fields)
+    arrays = [pa.array([k[i] for k in order], to_arrow_type(f.dataType))
+              for i, f in enumerate(groups.fields)] + [
+        pa.array([k[n] for k in order], pa.string()),
+        pa.array([acc[k][0].to_bytes() for k in order], pa.binary()),
+        pa.array([acc[k][1] for k in order], pa.int64()),
+        pa.array([k[n + 1] for k in order], pa.int64())]
+    return pa.RecordBatch.from_arrays(arrays,
+                                      names=groups.names + list(BLOB_TAIL))
 
 
 def _unique_counts(flat: np.ndarray):
@@ -99,22 +115,13 @@ def _unique_counts(flat: np.ndarray):
     return np.unique(flat, return_counts=True)
 
 
-def _merge_batches(batches, group_cols, schema):
-    """Fold blob rows (group_cols…, sketch_type, state, n_items, part_id)
-    arriving as Arrow batches to one row per distinct (group_cols…,
-    sketch_type, part_id): the tree-merge round body.
-
-    Each row is decoded and merged into its key's state as it arrives
-    (the left fold `registry.merge_blobs` runs), so a task holds one
-    state per key, never every blob. `n_items` sums per key. Output rows
-    come in one batch sorted by key, the order Spark's sort-based grouping
-    emits: kll, tdigest and mg merges depend on input order, so a later
-    merge of these rows (per-source → global, the next round) only sees
-    the same order, and gives the same bytes, if each task emits sorted.
-    `schema` is the input's Spark schema; it types the group columns."""
-    import pyarrow as pa
-
-    keys = group_cols + ["sketch_type", "part_id"]
+def _merge_batches(batches, groups):
+    """The tree-merge round body: fold blob rows arriving as Arrow batches
+    to one row per (group columns…, sketch_type, part_id); `groups` is the
+    StructType of the group columns. Each row merges into its key's state
+    as it arrives (the left fold `registry.merge_blobs` runs), so a task
+    holds one state per key, never every blob; `n_items` sums per key."""
+    keys = groups.names + ["sketch_type", "part_id"]
     acc: dict[tuple, list] = {}   # key → [state, n_items]
     for batch in batches:
         cols = [batch.column(c).to_pylist() for c in keys]
@@ -128,28 +135,23 @@ def _merge_batches(batches, group_cols, schema):
             else:
                 cur[0] = cur[0].merge(st)
                 cur[1] += n
-    if not acc:
-        return
-    # ascending, nulls first, as Spark sorts
-    order = sorted(acc, key=lambda k: tuple((v is not None, v) for v in k))
-    values = {c: [k[i] for k in order] for i, c in enumerate(keys)}
-    arrays = _group_arrays(schema, group_cols, values) + [
-        pa.array(values["sketch_type"], pa.string()),
-        pa.array([acc[k][0].to_bytes() for k in order], pa.binary()),
-        pa.array([acc[k][1] for k in order], pa.int64()),
-        pa.array(values["part_id"], pa.int64())]
-    yield pa.RecordBatch.from_arrays(
-        arrays, names=group_cols + ["sketch_type", "state", "n_items",
-                                    "part_id"])
+    if acc:
+        yield _blob_batch(groups, acc)
 
 
 def tree_merge(partials, out_schema: str | None = None,
-               group_cols=("source",), n_parts: int | None = None):
-    """Merge blob rows (group_cols…, sketch_type, state, n_items[,
-    part_id]) to one row per (group_cols × sketch_type); drops part_id.
+               group_cols=None, n_parts: int | None = None):
+    """Merge blob rows (group columns…, sketch_type, state, n_items[,
+    part_id]) to one row per key; drops part_id.
 
-    The one blob merge: it ends every build, and it re-aggregates existing
-    blob tables to a coarser grouping (e.g. per-source → global).
+    The key is every column but the tail (`BLOB_TAIL`), so a blob table
+    merges back to the grouping it was built with. An explicit
+    `group_cols` merges to a coarser grouping (`()`: global); `sketch`
+    stays in the key whenever the table has it, so no merge folds two
+    specs into one state.
+
+    The one blob merge: it ends every build and re-aggregates stored blob
+    tables (checkpoint slices, stream state, catalog state).
     Associativity of the kernels is exactly what makes that legal — the
     same invariant the reference's `reduceByKey(_ ++ _)` relies on
     (`/root/reference/scripts/analytics/snap2adj.scala:16`). `out_schema`
@@ -160,35 +162,37 @@ def tree_merge(partials, out_schema: str | None = None,
     Each round is one `repartition(*keys)` plus one `mapInArrow` of
     `_merge_batches`: Arrow batches in, one folded state per key, rows
     sorted by key out (that sort keeps order-dependent kinds byte-equal
-    to Spark's sort-based grouping; see `_merge_batches`). No pandas
+    to Spark's sort-based grouping; see `_blob_batch`). No pandas
     frame and no per-group UDF call.
 
     `n_parts` (the partial count upper bound = input partition count)
     sets the round count while the plan is built, without a counting
-    job; omitted, the merge is one round. Intermediate rounds shrink the part_id bucket
+    job; omitted, or over a table without `part_id` (one bucket per key),
+    the merge is one round. Intermediate rounds shrink the part_id bucket
     count by FANIN each; the last round always collapses to part_id=0, so
     the result is exactly one row per key even if `n_parts`
     under-estimated the true partition count."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
-    group_cols = list(group_cols)
-    keys = group_cols + ["sketch_type", "part_id"]
     df = partials
-    if "part_id" not in df.columns:
-        df = df.withColumn("part_id", F.lit(0).cast("long"))
-    schema = df.schema
+    if group_cols is None:
+        group_cols = [c for c in df.columns if c not in BLOB_TAIL]
+    elif "sketch" in df.columns and "sketch" not in group_cols:
+        group_cols = [*group_cols, "sketch"]
+    groups = StructType([df.schema[c] for c in group_cols])
     if out_schema is None:
-        out_schema = _schema_prefix(schema, group_cols) + \
-            PARTIAL_SCHEMA_TAIL
+        out_schema = _schema_prefix(groups, group_cols) + PARTIAL_SCHEMA_TAIL
 
     def merge(batches):
         gc.freeze()   # worker heap: see the module docstring
-        return _merge_batches(batches, group_cols, schema)
+        return _merge_batches(batches, groups)
 
     def merge_round(df):
-        return df.repartition(*keys).mapInArrow(merge, out_schema)
+        return df.repartition(*group_cols, "sketch_type", "part_id") \
+            .mapInArrow(merge, out_schema)
 
-    rounds = (1 if n_parts is None
+    rounds = (1 if n_parts is None or "part_id" not in df.columns
               else max(1, math.ceil(math.log(max(n_parts, 2), FANIN))))
     for _ in range(rounds - 1):
         df = merge_round(df.withColumn(
@@ -369,6 +373,7 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
     as an (n, params["d"]) matrix; its n_items counts vectors.
     """
     from pyspark import TaskContext
+    from pyspark.sql.types import StringType, StructField, StructType
 
     for name, spec in specs.items():
         # specs arrive from outside (jobs/build_sketches.py --sketch): a
@@ -379,9 +384,9 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
             raise ValueError(f"sketch spec {name!r} (kind "
                              f"{spec['kind']!r}): {e}") from None
     group_cols = list(group_cols)
-    in_schema = df.schema
-    out_schema = _schema_prefix(in_schema, group_cols) + \
-        "sketch string, " + PARTIAL_SCHEMA_TAIL
+    groups = StructType([df.schema[c] for c in group_cols]
+                        + [StructField("sketch", StringType())])
+    out_schema = _schema_prefix(groups, groups.names) + PARTIAL_SCHEMA_TAIL
     value_cols = sorted({s["value_col"] for s in specs.values()})
     needed = group_cols + value_cols
     hash_kinds = ("hll", "cms", "bloom", "theta", "mg", "cs")
@@ -390,18 +395,17 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
         import pyarrow as pa
 
         gc.freeze()   # worker heap: see the module docstring
-        states: dict[tuple, object] = {}   # (gkey-tuple, name) → state
-        counts: dict[tuple, int] = {}
+        pid = TaskContext.get().partitionId()
+        states: dict[tuple, list] = {}  # (group…, name, kind, pid) → [st, n]
 
         def state_for(gkey, name):
-            key = (gkey, name)
-            st = states.get(key)
-            if st is None:
-                st = registry.make(specs[name]["kind"],
-                                   **specs[name].get("params") or {})
-                states[key] = st
-                counts[key] = 0
-            return st
+            kind = specs[name]["kind"]
+            key = gkey + (name, kind, pid)
+            cur = states.get(key)
+            if cur is None:
+                cur = states[key] = [registry.make(
+                    kind, **specs[name].get("params") or {}), 0]
+            return cur
 
         for batch in batches:
             codes, mapping = _batch_columns(batch, group_cols)
@@ -448,8 +452,8 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
                                 flat, tg, present)
                     for g, (gcounts, h, n_raw, toks) \
                             in stats_cache[vc].items():
-                        gkey = mapping[g]
-                        st = state_for(gkey, name)
+                        cur = state_for(mapping[g], name)
+                        st = cur[0]
                         if kind in ("cms", "cs"):
                             st.update_hashes(h, counts=gcounts)
                         elif kind == "mg":
@@ -459,7 +463,7 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
                                              n_raw=n_raw)
                         else:  # hll / theta
                             st.update_hashes(h, assume_unique=True)
-                        counts[(gkey, name)] += n_raw
+                        cur[1] += n_raw
                 else:  # numeric kinds: one value (fd: one vector) per row
                     if kind == "fd":
                         vals, keep = _vector_rows(flat, lens,
@@ -473,31 +477,12 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
                             sel = sel[~np.isnan(sel)]
                         if sel.shape[0] == 0:
                             continue
-                        gkey = mapping[g]
-                        state_for(gkey, name).update(sel)
-                        counts[(gkey, name)] += sel.shape[0]
+                        cur = state_for(mapping[g], name)
+                        cur[0].update(sel)
+                        cur[1] += sel.shape[0]
 
-        if not states:
-            return
-        pid = TaskContext.get().partitionId()
-        cols: dict[str, list] = {c: [] for c in group_cols}
-        cols.update(sketch=[], sketch_type=[], state=[], n_items=[])
-        for (gkey, name), st in states.items():
-            for c, v in zip(group_cols, gkey):
-                cols[c].append(v)
-            cols["sketch"].append(name)
-            cols["sketch_type"].append(specs[name]["kind"])
-            cols["state"].append(st.to_bytes())
-            cols["n_items"].append(counts[(gkey, name)])
-        arrays = _group_arrays(in_schema, group_cols, cols) + [
-            pa.array(cols["sketch"], pa.string()),
-            pa.array(cols["sketch_type"], pa.string()),
-            pa.array(cols["state"], pa.binary()),
-            pa.array(cols["n_items"], pa.int64()),
-            pa.array([pid] * len(states), pa.int64())]
-        names = group_cols + ["sketch", "sketch_type", "state", "n_items",
-                              "part_id"]
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        if states:
+            yield _blob_batch(groups, states)
 
     return df.select(*needed).mapInArrow(acc, out_schema), out_schema
 
@@ -510,5 +495,4 @@ def multi_sketch_agg(df, specs: dict, group_cols=("source",),
     if n_parts is None:
         n_parts = df.sparkSession.sparkContext.defaultParallelism
     partials, _schema = build_partials_multi(df, specs, group_cols)
-    return tree_merge(partials, group_cols=list(group_cols) + ["sketch"],
-                      n_parts=n_parts)
+    return tree_merge(partials, n_parts=n_parts)

@@ -155,6 +155,24 @@ def write_layout(df, path: str, mode: str = "overwrite",
     return manifest
 
 
+def _snapshot(spark, path: str, version: int | None = None) -> dict:
+    """Manifest of snapshot `version` (default: the current one, from
+    `version-hint.text`); it records its own "version"."""
+    meta_dir = _join(path, "metadata")
+    if version is None:
+        version = int(_fs_read_text(
+            spark, _join(meta_dir, "version-hint.text")).strip())
+    return json.loads(_fs_read_text(
+        spark, _join(meta_dir, f"v{version}.metadata.json")))
+
+
+def _added_files(path: str, old: dict, new: dict) -> list[str]:
+    """Layout-absolute paths of the data files `new` lists, `old` not."""
+    return sorted(_join(path, p) for p in
+                  {f["path"] for f in new["files"]}
+                  - {f["path"] for f in old["files"]})
+
+
 def load_snapshot(spark, path: str, version: int | None = None):
     """Time-travel read of a layout table: load EXACTLY the parquet files
     the requested snapshot's manifest lists (default: the current version
@@ -172,12 +190,7 @@ def load_snapshot(spark, path: str, version: int | None = None):
     partition columns for partitioned layouts."""
     from pyspark.sql.types import StructType
 
-    meta_dir = _join(path, "metadata")
-    if version is None:
-        version = int(_fs_read_text(
-            spark, _join(meta_dir, "version-hint.text")).strip())
-    manifest = json.loads(_fs_read_text(
-        spark, _join(meta_dir, f"v{version}.metadata.json")))
+    manifest = _snapshot(spark, path, version)
     schema = StructType.fromJson(manifest["schema"])
     files = [_join(path, f["path"]) for f in manifest["files"]]
     if not files:
@@ -192,18 +205,8 @@ def snapshot_new_files(spark, path: str, from_version: int,
     manifest but not by `from_version`'s — the append delta between two
     snapshots (empty when nothing was appended; an overwrite shows up as
     an entirely new file set)."""
-    meta_dir = _join(path, "metadata")
-    if to_version is None:
-        to_version = int(_fs_read_text(
-            spark, _join(meta_dir, "version-hint.text")).strip())
-
-    def _files(v: int) -> set:
-        m = json.loads(_fs_read_text(
-            spark, _join(meta_dir, f"v{v}.metadata.json")))
-        return {f["path"] for f in m["files"]}
-
-    return sorted(_join(path, p)
-                  for p in _files(to_version) - _files(from_version))
+    return _added_files(path, _snapshot(spark, path, from_version),
+                        _snapshot(spark, path, to_version))
 
 
 def incremental_sketch_update(spark, path: str, state_blobs, specs: dict,
@@ -233,28 +236,20 @@ def incremental_sketch_update(spark, path: str, state_blobs, specs: dict,
 
     from . import agg
 
-    meta_dir = _join(path, "metadata")
-    # resolve the version once: the file delta and the schema must come
-    # from the same snapshot even if a commit lands during the update
-    if to_version is None:
-        to_version = int(_fs_read_text(
-            spark, _join(meta_dir, "version-hint.text")).strip())
-    new_files = snapshot_new_files(spark, path, from_version, to_version)
+    # one read of the target manifest serves the file delta and the schema
+    target = _snapshot(spark, path, to_version)
+    new_files = _added_files(path, _snapshot(spark, path, from_version),
+                             target)
     if not new_files:
         return state_blobs
-    manifest = json.loads(_fs_read_text(
-        spark, _join(meta_dir, f"v{to_version}.metadata.json")))
-    delta = (spark.read.schema(StructType.fromJson(manifest["schema"]))
+    delta = (spark.read.schema(StructType.fromJson(target["schema"]))
              .option("basePath", _join(path, "data")).parquet(*new_files))
     if prepare is not None:
         delta = prepare(delta)
     # the delta's unmerged partials join the state in ONE merge: merging
     # them first (multi_sketch_agg) would shuffle the delta twice
     partials, _schema = agg.build_partials_multi(delta, specs, group_cols)
-    return agg.tree_merge(
-        state_blobs.unionByName(partials.drop("part_id")),
-        group_cols=list(group_cols) + ["sketch"],
-        n_parts=spark.sparkContext.defaultParallelism)
+    return agg.tree_merge(state_blobs.unionByName(partials.drop("part_id")))
 
 
 def merge_upsert(base, updates, key):

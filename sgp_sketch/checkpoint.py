@@ -16,12 +16,13 @@ params)`. The layout under `ckpt_dir/`:
     slices/<slice_id>/           parquet: group_cols…, sketch (spec name),
                                  sketch_type, state, n_items — one blob
                                  row per (group × spec)
-    slices/<slice_id>.lineage.json   {version, slice_id, index, files,
+    slices/<slice_id>.lineage.json   {version, slice_id, files,
                                  specs {name: {kind, value_col, params}},
                                  group_cols, groups [{group, sketch,
                                  n_items, state_sha256}], n_items, seconds}
     manifest.json                {version, input_path, specs, group_cols,
-                                 n_slices, built, skipped, slice_ids}
+                                 files_per_slice, n_slices, built,
+                                 skipped, slice_ids}
     metrics.jsonl                one line per built slice (appended):
                                  {slice_id, sketches, n_items, seconds,
                                  n_files}
@@ -152,15 +153,22 @@ def list_input_files(spark, path: str) -> list[str]:
     return sorted(out)
 
 
-def plan_slices(files: list[str], files_per_slice: int = 8) -> list[dict]:
+def plan_slices(files: list[str], files_per_slice: int = 8,
+                previous=()) -> list[dict]:
     """Deterministic slice plan; slice_id = sha of its file list, so a plan
-    change (different files) never silently reuses a stale checkpoint."""
-    slices = []
-    for i in range(0, len(files), files_per_slice):
-        chunk = files[i:i + files_per_slice]
+    change (different files) never silently reuses a stale checkpoint.
+    Each `previous` slice whose files are all still listed is kept; only
+    the files no kept slice covers are chunked, in sorted order, so an
+    append never moves an old slice boundary."""
+    listed = set(files)
+    slices = [{"slice_id": p["slice_id"], "files": p["files"]}
+              for p in previous if listed.issuperset(p["files"])]
+    covered = {f for sl in slices for f in sl["files"]}
+    rest = [f for f in files if f not in covered]
+    for i in range(0, len(rest), files_per_slice):
+        chunk = rest[i:i + files_per_slice]
         sid = hashlib.sha256("\n".join(chunk).encode()).hexdigest()[:16]
-        slices.append({"slice_id": sid, "index": i // files_per_slice,
-                       "files": chunk})
+        slices.append({"slice_id": sid, "files": chunk})
     return slices
 
 
@@ -172,22 +180,36 @@ def _lineage_path(ckpt_dir: str, sid: str) -> str:
     return _join(ckpt_dir, "slices", f"{sid}.lineage.json")
 
 
+def _read_json(spark, path: str) -> dict | None:
+    """Parsed JSON at `path`, or None if missing or unreadable (JVM reads
+    raise Py4JJavaError): a bad lineage or manifest means rebuild, never
+    abort the resumable build."""
+    if not _fs_exists(spark, path):
+        return None
+    try:
+        return json.loads(_fs_read_text(spark, path))
+    except Exception:
+        return None
+
+
+def _previous_slices(spark, ckpt_dir: str, files_per_slice: int) -> list:
+    """The last build's slice lineages if its manifest used the same
+    `files_per_slice`, else [] (a new slice size plans from scratch)."""
+    manifest = _read_json(spark, _join(ckpt_dir, "manifest.json")) or {}
+    if manifest.get("files_per_slice") != files_per_slice:
+        return []
+    lineages = [_read_json(spark, _lineage_path(ckpt_dir, sid))
+                for sid in manifest["slice_ids"]]
+    return [lin for lin in lineages if lin and lin.get("files")]
+
+
 def slice_complete(spark, ckpt_dir: str, sl: dict, expect: dict) -> bool:
     """True iff the slice's checkpoint exists AND was built under the same
     configuration. `expect` maps lineage keys (specs, group_cols) to
     required values — a resumed build with a changed sketch kind/params
     must not reuse stale blobs."""
-    lp = _lineage_path(ckpt_dir, sl["slice_id"])
-    if not _fs_exists(spark, lp):
-        return False
-    try:
-        lin = json.loads(_fs_read_text(spark, lp))
-    except Exception:
-        # FS-gateway reads surface JVM IOExceptions as Py4JJavaError, not
-        # OSError; ANY unreadable/corrupt lineage means "rebuild this
-        # slice", never "abort the resumable build"
-        return False
-    if any(lin.get(k) != v for k, v in expect.items()):
+    lin = _read_json(spark, _lineage_path(ckpt_dir, sl["slice_id"]))
+    if lin is None or any(lin.get(k) != v for k, v in expect.items()):
         return False
     return (lin.get("version") == _LINEAGE_VERSION
             and lin.get("files") == sl["files"]
@@ -236,8 +258,7 @@ def build_slice_multi(spark, sl: dict, specs: dict, group_cols,
         })
     lineage = {
         "version": _LINEAGE_VERSION,
-        "slice_id": sl["slice_id"], "index": sl["index"],
-        "files": sl["files"],
+        "slice_id": sl["slice_id"], "files": sl["files"],
         "specs": _spec_record(specs),
         "group_cols": list(group_cols),
         "groups": sorted(groups, key=lambda g: (
@@ -271,7 +292,8 @@ def build_checkpointed_multi(spark, input_path: str, specs: dict,
     # basePath (hive-partition recovery) is only legal for directory inputs
     fs, p = _fs_path(spark, input_path)
     base = input_path if not fs.isFile(p) else None
-    slices = plan_slices(files, files_per_slice)
+    slices = plan_slices(files, files_per_slice,
+                         _previous_slices(spark, ckpt_dir, files_per_slice))
     expect = {"specs": _spec_record(specs), "group_cols": list(group_cols)}
     skipped, built = [], []
     for sl in slices:
@@ -285,6 +307,7 @@ def build_checkpointed_multi(spark, input_path: str, specs: dict,
         "version": _LINEAGE_VERSION,
         "input_path": input_path,
         **expect,
+        "files_per_slice": files_per_slice,
         "n_slices": len(slices), "built": built, "skipped": skipped,
         "slice_ids": [s["slice_id"] for s in slices],
     }
@@ -293,14 +316,12 @@ def build_checkpointed_multi(spark, input_path: str, specs: dict,
     return manifest
 
 
-def finalize_multi(spark, ckpt_dir: str, group_cols=("source",)):
-    """Merge all slice blobs → one blob row per (group × sketch) (tree of
-    slice states; each slice is itself a tree-merged state, so depth stays
-    O(log))."""
+def finalize_multi(spark, ckpt_dir: str):
+    """Merge all slice blobs → one blob row per (group × sketch) as the
+    slices were grouped (tree of slice states; each slice is itself a
+    tree-merged state, so depth stays O(log))."""
     manifest = json.loads(_fs_read_text(spark, _join(ckpt_dir,
                                                      "manifest.json")))
     dirs = [_slice_dir(ckpt_dir, sid) for sid in manifest["slice_ids"]]
-    blobs = spark.read.parquet(*dirs)
-    return agg.tree_merge(blobs,
-                          group_cols=tuple(group_cols) + ("sketch",))
+    return agg.tree_merge(spark.read.parquet(*dirs))
 

@@ -19,8 +19,8 @@ every batch until `compact_state` folds it.
 Per-key and per-window sketches are the same sink with wider group
 columns: `prepare=` projects e.g. `k = event_type`,
 `w = window(ts, '1 day').start`, `v = user_id`, a spec reads `v`, and
-`group_cols=("k", "w")` keys the blobs; `streamed_estimates(...,
-group_cols=("k", "w"))` returns one merged sketch per (key, window). What
+`group_cols=("k", "w")` keys the blobs; a plain `streamed_estimates(spark,
+state_dir)` returns one merged sketch per (key, window). What
 this does not give: no streaming DataFrame emits a row per micro-batch
 (the answer is read from the state table), and window state is not
 retired at a watermark — after `compact_state` the table keeps one row
@@ -137,17 +137,17 @@ def _state_listing(spark, state_dir: str):
     return ids, versions, [i for i in ids if i == snap or i > upto]
 
 
-def _merged(spark, state_dir: str, batch_ids, group_cols):
+def _merged(spark, state_dir: str, batch_ids):
     """tree_merge of the state-table rows whose batch dir is in
     `batch_ids` → one blob row per (group × sketch)."""
     from pyspark.sql import functions as F
 
     blobs = (spark.read.parquet(state_dir)
              .filter(F.col("batch_id").isin(batch_ids)).drop("batch_id"))
-    return agg.tree_merge(blobs, group_cols=tuple(group_cols) + ("sketch",))
+    return agg.tree_merge(blobs)
 
 
-def streamed_estimates(spark, state_dir: str, group_cols=("source",)):
+def streamed_estimates(spark, state_dir: str):
     """Current merged blobs from the streaming state table — one row per
     (group × sketch), identical to a batch build over the same inputs.
     `batch_id` is recovered as a hive-partition column of the state layout
@@ -155,10 +155,10 @@ def streamed_estimates(spark, state_dir: str, group_cols=("source",)):
     snapshots are resolved through the highest `_compaction.v<k>.json`
     marker (`_state_listing`)."""
     _, _, live = _state_listing(spark, state_dir)
-    return _merged(spark, state_dir, live, group_cols)
+    return _merged(spark, state_dir, live)
 
 
-def compact_state(spark, state_dir: str, group_cols=("source",)) -> dict:
+def compact_state(spark, state_dir: str) -> dict:
     """Fold completed micro-batch blob directories into one snapshot so an
     unbounded stream keeps O(1) state-table size instead of one directory
     per batch forever.
@@ -210,7 +210,7 @@ def compact_state(spark, state_dir: str, group_cols=("source",)) -> dict:
     upto = fold[-1]
     snap_id = -(upto + 1)
 
-    _merged(spark, state_dir, fold, group_cols).write.mode(
+    _merged(spark, state_dir, fold).write.mode(
         "overwrite").parquet(f"{state_dir}/batch_id={snap_id}")  # step 1
     next_v = (versions[-1] + 1) if versions else 1
     tmp, dst = f"_compaction.tmp.{next_v}", f"{_MARKER_PREFIX}{next_v}.json"
@@ -255,8 +255,8 @@ def windowed_stream_agg(spark, input_path: str, window: str = "1 day",
     on an infinite 100-TB/day feed. `approx_count_distinct` is Spark's
     built-in HLL++. For mergeable cross-run state, or any other kernel per
     window, use the sink recipe in the module docstring: a `prepare` that
-    projects the window start as a group column, then
-    `streamed_estimates(..., group_cols=(..., "w"))`.
+    projects the window start as a group column, then a plain
+    `streamed_estimates(spark, state_dir)`.
     """
     from pyspark.sql import functions as F
 

@@ -76,6 +76,36 @@ def test_stale_lineage_invalidated(spark, multi_file_input, tmp_path):
     assert not m["skipped"]
 
 
+def test_resume_after_append_reuses_base_slices(spark, tokens_sdf,
+                                                tmp_path):
+    """A Spark-style append (new job uuid, split indices from 0) puts new
+    files between old ones in sorted order; the resume keeps every base
+    slice and builds one slice of the appended files, and the result is
+    still exact."""
+    path = str(tmp_path / "appended")
+    tokens_sdf.repartition(32).write.parquet(path)
+    ckpt = str(tmp_path / "ckpt")
+    m1 = checkpoint.build_checkpointed_multi(
+        spark, path, HLL12, ("source",), ckpt_dir=ckpt, files_per_slice=8)
+    assert m1["n_slices"] == 4
+    base = checkpoint.list_input_files(spark, path)
+    tokens_sdf.limit(400).repartition(4).write.mode("append").parquet(path)
+    files = checkpoint.list_input_files(spark, path)
+    new = sorted(set(files) - set(base))
+    assert len(new) == 4 and files.index(new[0]) < len(base)  # interleaved
+    m2 = checkpoint.build_checkpointed_multi(
+        spark, path, HLL12, ("source",), ckpt_dir=ckpt, files_per_slice=8)
+    assert len(m2["built"]) == 1
+    assert sorted(m2["skipped"]) == sorted(m1["slice_ids"])
+    final = {r["source"]: bytes(r["state"])
+             for r in checkpoint.finalize_multi(spark, ckpt).collect()}
+    direct = {r["source"]: bytes(r["state"])
+              for r in agg.sketch_agg(spark.read.parquet(path), "hll",
+                                      "tokens", ("source",),
+                                      {"p": 12}).collect()}
+    assert final == direct
+
+
 def test_lineage_contents(spark, multi_file_input, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     m = checkpoint.build_checkpointed_multi(

@@ -102,6 +102,46 @@ def test_tree_merge_to_global_equals_direct_global(spark, tokens_sdf):
     assert bytes(via_merge["state"].iloc[0]) == bytes(direct["state"].iloc[0])
 
 
+def test_coarser_tree_merge_keeps_specs_apart(spark, tokens_sdf,
+                                             tokens_pdf):
+    """A merge to a coarser grouping keeps `sketch` in its key: two kll
+    specs on different columns stay two global rows, each over its own
+    column, never one kll folded from both."""
+    from pyspark.sql import functions as F
+
+    specs = {"kll_tok": {"kind": "kll", "value_col": "n_tok"},
+             "kll_sq": {"kind": "kll", "value_col": "sq"}}
+    per_source = agg.multi_sketch_agg(
+        tokens_sdf.withColumn("sq", F.col("n_tok") * F.col("n_tok")),
+        specs, ("source",))
+    rows = agg.tree_merge(per_source, group_cols=()).collect()
+    assert sorted(r["sketch"] for r in rows) == sorted(specs)
+    n_tok = np.sort(tokens_pdf["n_tok"].to_numpy(float))
+    exact = {"kll_tok": n_tok, "kll_sq": n_tok * n_tok}
+    for r in rows:
+        vals = exact[r["sketch"]]
+        assert r["n_items"] == len(vals)
+        st = registry.from_bytes(bytes(r["state"]))
+        for q, v in zip((0.25, 0.5, 0.75), st.quantiles((0.25, 0.5, 0.75))):
+            rank = np.searchsorted(vals, v, side="right") / len(vals)
+            assert abs(rank - q) <= 0.035, (r["sketch"], q, rank)
+
+
+def test_table_without_part_id_merges_in_one_round(spark, tokens_sdf,
+                                                   tmp_path):
+    """Stored blobs carry no part_id: every row of a key shares one
+    bucket, so a re-merge plans one round whatever `n_parts` says, and
+    gives back the same blobs."""
+    agg.sketch_agg(tokens_sdf, "hll", "tokens", ("source",),
+                   {"p": 12}).write.parquet(str(tmp_path / "blobs"))
+    blobs = spark.read.parquet(str(tmp_path / "blobs"))
+    again = agg.tree_merge(blobs, n_parts=1000)
+    plan = again._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInArrow merge(") == 1, plan
+    assert ({r["source"]: bytes(r["state"]) for r in again.collect()}
+            == {r["source"]: bytes(r["state"]) for r in blobs.collect()})
+
+
 def test_multi_round_tree_merge(spark, tokens_sdf, tokens_pdf):
     """More partials than FANIN: two merge rounds, still one row per
     (source, sketch), and the byte-stable kinds equal the one-round build

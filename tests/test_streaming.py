@@ -48,6 +48,59 @@ def test_foreachbatch_stream_equals_batch(spark, stream_input, tmp_path):
     assert len(spark.read.parquet(state_dir).collect()) == n_before
 
 
+def test_readers_keep_a_multi_column_grouping(spark, tokens_sdf, tmp_path):
+    """States grouped by (source, day) and read back through
+    finalize_multi, streamed_estimates, and compact_state then
+    streamed_estimates give one row per (source, day, sketch), each
+    byte-equal to a direct multi_sketch_agg build: a blob table's own
+    columns name its grouping, so no reader restates it (a restated
+    ("source",) merged the three days into one row per source)."""
+    from pyspark.sql import functions as F
+
+    from sgp_sketch import checkpoint
+
+    # conservative CMS updates depend on which rows share a scan task;
+    # the plain update keeps every kind here independent of partitioning
+    specs = {
+        "hll": {"kind": "hll", "value_col": "tokens", "params": {"p": 12}},
+        "cms": {"kind": "cms", "value_col": "tokens",
+                "params": {"conservative": False}},
+        "bloom": {"kind": "bloom", "value_col": "tokens",
+                  "params": {"n_blocks": 1 << 10}},
+        "theta": {"kind": "theta", "value_col": "tokens"},
+        "cs": {"kind": "cs", "value_col": "tokens",
+               "params": {"depth": 5, "width": 1 << 10}},
+        "moments": {"kind": "moments", "value_col": "n_tok"},
+    }
+    groups = ("source", "day")
+    inp = str(tmp_path / "in")
+    (tokens_sdf.filter(F.col("source").isin("web", "code"))
+     .withColumn("day", (F.crc32("doc_id") % 3).cast("int"))
+     .repartition(4).write.parquet(inp))
+
+    def blobs(df):
+        rows = df.collect()
+        out = {(r["source"], r["day"], r["sketch"]): bytes(r["state"])
+               for r in rows}
+        assert len(out) == len(rows) == 2 * 3 * len(specs)
+        return out
+
+    direct = blobs(agg.multi_sketch_agg(spark.read.parquet(inp), specs,
+                                        groups))
+    ckpt = str(tmp_path / "ckpt")
+    checkpoint.build_checkpointed_multi(spark, inp, specs, groups,
+                                        ckpt_dir=ckpt, files_per_slice=2)
+    assert blobs(checkpoint.finalize_multi(spark, ckpt)) == direct
+    state = str(tmp_path / "state")
+    streaming.stream_sketch_build(
+        spark, inp, state, specs, group_cols=groups,
+        checkpoint_dir=str(tmp_path / "sckpt"),
+        reader_options={"maxFilesPerTrigger": 1}).awaitTermination(120)
+    assert blobs(streaming.streamed_estimates(spark, state)) == direct
+    assert streaming.compact_state(spark, state)["folded"] >= 2
+    assert blobs(streaming.streamed_estimates(spark, state)) == direct
+
+
 def test_batch_emptied_by_prepare_adds_no_state(spark, tokens_sdf,
                                                 tmp_path):
     """A micro-batch that `prepare` empties writes no blob rows: the
@@ -340,8 +393,7 @@ def test_windowed_heavy_hitters_sink_matches_exact(spark, tmp_path):
                 if d.startswith("batch_id=")]) == 3
     got = {(r["k"], r["w"].strftime("%Y-%m-%d")): registry.from_bytes(
                bytes(r["state"]))
-           for r in streaming.streamed_estimates(
-               spark, state, group_cols=("k", "w")).collect()}
+           for r in streaming.streamed_estimates(spark, state).collect()}
     pdf["day"] = pdf["ts"].dt.strftime("%Y-%m-%d")
     want = pdf.groupby(["event_type", "day"])
     assert set(got) == set(want.groups)
