@@ -12,6 +12,18 @@ aggregates, made explicit for our binary states — SURVEY.md §2.4):
          blobs, each task folding its rows into one state per key
        → one row per (group, sketch).
 
+The read takes one of two shapes. A bare parquet scan of `file:` inputs
+(`_file_scan`: the optimized plan is a `LogicalRelation` with no Filter
+or computed Project) is read by the Python tasks themselves:
+`spark.range(0, n, 1, n).mapInArrow(read_files)`, each task reading one
+bin of whole files (`_file_bins`, Spark's split-size rule) with
+`pyarrow.parquet`, partition values parsed from the `k=v` directories.
+The JVM then only plans the build and ships blobs; it neither decodes
+the input nor hands it over as Arrow. Any other input (a filter, a
+`prepare=` projection, a cached or in-memory frame, a stream
+micro-batch) is scanned by Spark and handed to
+`df.select(…).mapInArrow(scan)`. Both task bodies are `_accumulate`.
+
 `build_partials_multi` is the only sketch builder: hash kinds (hll, cms,
 bloom, theta, mg, cs) over token lists or integer columns, numeric kinds
 (kll, tdigest, dd, moments) over scalar columns, and Frequent Directions
@@ -35,17 +47,20 @@ group's data is small enough that shuffling it raw is the cheaper plan.
 All kernels run vectorized numpy over Arrow batches; no per-row Python in the
 scan path (BASELINE.json input_hint).
 
-Worker heap: both Spark task functions (`build_partials_multi`'s scan task
-and `tree_merge`'s round task) start with `gc.freeze()`, moving every object
-alive when the task starts (modules, numpy, pyarrow, the kernels) to the
-collector's permanent generation. PySpark's worker daemon runs
-`gc.collect()` after each task in a reused worker; with that heap frozen
-the collect walks only the task's own objects (10-23 ms → ~20 µs per task
-on a 74k-object worker). The daemon has already collected the previous
-task's cyclic garbage when the next task freezes, so the frozen set holds
-no earlier task's garbage and stays flat from task to task. The freeze is
-in the task functions, not in `_merge_batches`, so a driver-side merge can
-reuse that body without freezing the driver's heap.
+Worker heap: every Spark task function (the scan task, the parquet
+reader task and `tree_merge`'s round task) starts with
+`_freeze_worker_heap()`, moving every object alive when the task starts
+(modules, numpy, pyarrow, the kernels) to the collector's permanent
+generation. PySpark's worker daemon runs `gc.collect()` after each task
+in a reused worker; with that heap frozen the collect walks only the
+task's own objects (10-23 ms → ~20 µs per task on a 74k-object worker).
+The daemon has already collected the previous task's cyclic garbage when
+the next task freezes, so the frozen set holds no earlier task's garbage
+and stays flat from task to task; a worker's first freeze collects once
+before it, so the garbage its imports left is not pinned either. The
+freeze is in the task functions, not in `_merge_batches`, so a
+driver-side merge can reuse that body without freezing the driver's
+heap.
 """
 
 from __future__ import annotations
@@ -185,7 +200,7 @@ def tree_merge(partials, out_schema: str | None = None,
         out_schema = _schema_prefix(groups, group_cols) + PARTIAL_SCHEMA_TAIL
 
     def merge(batches):
-        gc.freeze()   # worker heap: see the module docstring
+        _freeze_worker_heap()
         return _merge_batches(batches, groups)
 
     def merge_round(df):
@@ -359,20 +374,322 @@ def _vector_rows(flat, lens, d: int):
     return m[finite], keep
 
 
-def build_partials_multi(df, specs: dict, group_cols=("source",)):
-    """One scan, many sketches: per (partition × group × spec) partial state.
+_HASH_KINDS = ("hll", "cms", "bloom", "theta", "mg", "cs")
 
-    `specs`: {name: {"kind": str, "value_col": str, "params": dict}}.
-    Returns (DataFrame, out_schema) with columns group..., sketch (spec
-    name), sketch_type, state, n_items, part_id. One mapInArrow pass reads
-    each input row once no matter how many sketches are built — at 100 TB
-    the scan dominates, so N sketches for the price of one. Token arrays
-    stay in Arrow's flat values buffer (zero-copy into numpy: no per-row
-    object allocation), and one packed-key sort per batch serves every hash
-    sketch of a column across all groups. An fd spec reads its list column
-    as an (n, params["d"]) matrix; its n_items counts vectors.
-    """
+
+def _accumulate(batches, specs: dict, groups, pid: int):
+    """The build's task body, shared by the Spark-scan task and the
+    parquet reader task: fold Arrow batches (group columns, value
+    columns) into one state per (group…, spec, partition `pid`) and emit
+    them as one blob batch. `groups` is the StructType of the group
+    columns plus `sketch`."""
+    import pyarrow as pa
+
+    group_cols = groups.names[:-1]
+    value_cols = sorted({s["value_col"] for s in specs.values()})
+    states: dict[tuple, list] = {}  # (group…, name, kind, pid) → [st, n]
+
+    def state_for(gkey, name):
+        kind = specs[name]["kind"]
+        key = gkey + (name, kind, pid)
+        cur = states.get(key)
+        if cur is None:
+            cur = states[key] = [registry.make(
+                kind, **specs[name].get("params") or {}), 0]
+        return cur
+
+    for batch in batches:
+        codes, mapping = _batch_columns(batch, group_cols)
+        present = sorted(mapping)
+        single = len(present) == 1
+        col_cache = {}
+        for vc in value_cols:
+            col = batch.column(vc)
+            if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+                flat, lens = _flatten_list_column(col)
+                # single-group batches (source-partitioned tables) skip
+                # the per-token group-id expansion entirely — half the
+                # memory traffic of the scan hot loop
+                tg = None if single else np.repeat(codes, lens)
+                col_cache[vc] = (flat, tg, lens)
+            else:
+                col_cache[vc] = (col.to_numpy(zero_copy_only=False),
+                                 None if single else codes, None)
+        stats_cache = {}
+        for name, spec in specs.items():
+            vc, kind = spec["value_col"], spec["kind"]
+            flat, tg, lens = col_cache[vc]
+            if kind in _HASH_KINDS:
+                if flat.dtype.kind == "f":
+                    # nullable integer scalar columns arrive as float
+                    # (+NaN) from Arrow: drop nulls, restore int64
+                    mask = ~np.isnan(flat)
+                    flat = flat[mask].astype(np.int64)
+                    if tg is not None:
+                        tg = tg[mask]
+                if vc not in stats_cache:
+                    if single and flat.size == 0:
+                        # no tokens → no state, as in the grouped and
+                        # numeric branches
+                        stats_cache[vc] = {}
+                    elif single:
+                        uniq, ucounts = _unique_counts(flat)
+                        h = hash64(uniq.astype(np.uint64, copy=False))
+                        stats_cache[vc] = {present[0]: (
+                            ucounts, h, int(flat.size),
+                            uniq.astype(np.int64))}
+                    else:
+                        stats_cache[vc] = _grouped_token_stats(
+                            flat, tg, present)
+                for g, (gcounts, h, n_raw, toks) in stats_cache[vc].items():
+                    cur = state_for(mapping[g], name)
+                    st = cur[0]
+                    if kind in ("cms", "cs"):
+                        st.update_hashes(h, counts=gcounts)
+                    elif kind == "mg":
+                        st.update(toks, gcounts)
+                    elif kind == "bloom":
+                        st.update_hashes(h, assume_unique=True, n_raw=n_raw)
+                    else:  # hll / theta
+                        st.update_hashes(h, assume_unique=True)
+                    cur[1] += n_raw
+            else:  # numeric kinds: one value (fd: one vector) per row
+                if kind == "fd":
+                    vals, keep = _vector_rows(flat, lens, spec["params"]["d"])
+                    gids = None if single else codes[keep]
+                else:
+                    vals, gids = flat.astype(np.float64), tg
+                for g in present:
+                    sel = vals if single else vals[gids == g]
+                    if sel.ndim == 1:
+                        sel = sel[~np.isnan(sel)]
+                    if sel.shape[0] == 0:
+                        continue
+                    cur = state_for(mapping[g], name)
+                    cur[0].update(sel)
+                    cur[1] += sel.shape[0]
+
+    if states:
+        yield _blob_batch(groups, states)
+
+
+# Spark types a reader task reads exactly as Spark's Arrow hand-off
+# delivers them; partition values parse from the path for the last set
+_READ_TYPES = ("ByteType", "ShortType", "IntegerType", "LongType",
+               "FloatType", "DoubleType", "BooleanType", "StringType",
+               "BinaryType")
+_PARTITION_TYPES = ("ByteType", "ShortType", "IntegerType", "LongType",
+                    "StringType")
+_INT_RANGE = {"ByteType": 8, "ShortType": 16, "IntegerType": 32,
+              "LongType": 64}
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _readable(dt) -> bool:
+    from pyspark.sql.types import ArrayType
+
+    if isinstance(dt, ArrayType):
+        dt = dt.elementType
+    return type(dt).__name__ in _READ_TYPES
+
+
+def _unescape_path_name(s: str) -> str:
+    """Spark's `ExternalCatalogUtils.unescapePathName`: each `%` plus two
+    characters that Java's `Integer.parseInt(_, 16)` reads as a
+    non-negative code becomes that character."""
+    import re
+
+    out, i = [], 0
+    while i < len(s):
+        code = -1
+        if s[i] == "%" and i + 2 < len(s):
+            hx = s[i + 1:i + 3]
+            if re.fullmatch(r"[+-]?[0-9A-Fa-f]+", hx):
+                code = int(hx, 16)
+        if code >= 0:
+            out.append(chr(code))
+            i += 3
+        else:
+            out.append(s[i])
+            i += 1
+    return "".join(out)
+
+
+def _partition_values(path: str, fields: dict):
+    """{column: typed value} from the trailing `k=v` directories of a
+    file path, as Spark's partition discovery reads them: walking up from
+    the file, stopping at the first directory without `=` once a column
+    was found; `__HIVE_DEFAULT_PARTITION__` is null and `%xx` escapes are
+    decoded. `fields` maps lower-cased partition column names to (name,
+    Spark type). None when a column has no value or its value does not
+    parse as its type (the build then keeps the DataFrame path)."""
+    found: dict = {}
+    for seg in reversed(path.split("/")[:-1]):
+        if "=" not in seg:
+            if found:
+                break
+            continue
+        k, v = seg.split("=", 1)
+        f = fields.get(_unescape_path_name(k).lower())
+        if f is None or f[0] in found:
+            continue
+        if not v:
+            return None
+        v = None if v == _NULL_PARTITION else _unescape_path_name(v)
+        kind = type(f[1]).__name__
+        if v is not None and kind in _INT_RANGE:
+            try:
+                v = int(v.strip())
+            except ValueError:
+                return None
+            half = 1 << _INT_RANGE[kind] - 1
+            if not -half <= v < half:
+                return None
+        found[f[0]] = v
+    return found if len(found) == len(fields) else None
+
+
+def _file_scan(df, needed: list):
+    """The files of a bare parquet scan, for a build that reads them in
+    its own tasks: [(local path, size, {partition column: value})…] in
+    path order, or None when `df.select(*needed)` is anything else.
+
+    It qualifies when its optimized plan is a `LogicalRelation` over
+    parquet (no Filter, no computed Project, no cache, no catalog
+    table), every input file is a `file:` URI, and every needed column
+    is a file or hive partition column of a type the reader task reads
+    as Spark would. Driver metadata only: no Spark job runs."""
+    import os
+    from urllib.parse import unquote, urlsplit
+
+    if df.isStreaming:
+        return None
+    plan = df.select(*needed)._jdf.queryExecution().optimizedPlan()
+    name = plan.getClass().getSimpleName()
+    if name == "Project":
+        exprs = plan.projectList()
+        if any(exprs.apply(i).getClass().getSimpleName()
+               != "AttributeReference" for i in range(exprs.size())):
+            return None
+        plan = plan.child()
+        name = plan.getClass().getSimpleName()
+    if (name != "LogicalRelation" or plan.isStreaming()
+            or not plan.catalogTable().isEmpty()):
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat" or not rel.bucketSpec().isEmpty()):
+        return None
+    if not all(_readable(df.schema[c].dataType) for c in needed):
+        return None
+    fields = {c.lower(): (c, df.schema[c].dataType)
+              for c in rel.partitionSchema().fieldNames() if c in needed}
+    if any(type(t).__name__ not in _PARTITION_TYPES
+           for _, t in fields.values()):
+        return None
+    files = []
+    for uri in sorted(df.inputFiles()):
+        parts = urlsplit(uri)
+        if parts.scheme != "file":
+            return None
+        path = unquote(parts.path)
+        size = os.path.getsize(path)
+        if size == 0:   # Spark lists no zero-length file either
+            continue
+        pvals = _partition_values(path, fields)
+        if pvals is None:
+            return None
+        files.append((path, size, pvals))
+    return files or None
+
+
+def _file_bins(spark, files) -> list:
+    """Spark's split-size rule over whole files (`FilePartition`): split
+    = min(maxPartitionBytes, max(openCostInBytes, total / min partition
+    count)), with total counting openCostInBytes per file and the min
+    partition count `spark.sql.files.minPartitionNum`, else the default
+    parallelism; files, in path order, fill a bin until the next one
+    would pass the split."""
+    from .session import _parse_bytes
+
+    conf = spark.conf
+    max_bytes = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes"))
+    open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes"))
+    min_parts = int(conf.get("spark.sql.files.minPartitionNum", None)
+                    or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+                    or spark.sparkContext.defaultParallelism)
+    total = sum(size + open_cost for _, size, _ in files)
+    split = min(max_bytes, max(open_cost, total // min_parts))
+    bins, cur, filled = [], [], 0
+    for path, size, pvals in files:
+        if cur and filled + size > split:
+            bins.append(cur)
+            cur, filled = [], 0
+        cur.append((path, pvals))
+        filled += size + open_cost
+    bins.append(cur)
+    return bins
+
+
+def _read_parquet(files, cols: list, types: dict, batch_rows: int):
+    """Arrow batches of `cols` from [(path, partition values)…], file by
+    file, `batch_rows` rows at most: a file column resolves by exact
+    name, else by its one case-insensitive match, else reads as nulls
+    (Spark's answer for a file without the column); partition columns
+    are constants; every column is cast to `types` (the Arrow type of
+    its Spark type, as the hand-off would send it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for path, pvals in files:
+        with pq.ParquetFile(path) as pf:
+            names = pf.schema_arrow.names
+            source = {}
+            for c in cols:
+                if c not in pvals:
+                    hits = [c] if c in names else \
+                        [n for n in names if n.lower() == c.lower()]
+                    source[c] = hits[0] if len(hits) == 1 else None
+            read = sorted({s for s in source.values() if s is not None})
+            for batch in pf.iter_batches(batch_size=batch_rows, columns=read,
+                                         use_threads=False):
+                n = batch.num_rows
+                arrays = []
+                for c in cols:
+                    if c in pvals:
+                        arr = pa.repeat(pa.scalar(pvals[c], types[c]), n)
+                    elif source[c] is None:
+                        arr = pa.nulls(n, types[c])
+                    else:
+                        arr = batch.column(source[c])
+                        if not arr.type.equals(types[c]):
+                            arr = arr.cast(types[c])
+                    arrays.append(arr)
+                yield pa.RecordBatch.from_arrays(arrays, names=cols)
+
+
+def _freeze_worker_heap() -> None:
+    """The first call of every Spark task function: move the worker's
+    long-lived heap to the collector's permanent generation (see the
+    module docstring). A worker's first freeze runs one full collect
+    before it, so the cyclic garbage its imports left is freed instead of
+    pinned for the worker's life. The modules the task bodies import
+    lazily load first: imported after the freeze, their ~6k objects would
+    stay in the young generations until the worker's next task."""
+    import pyarrow.compute  # noqa: F401
+    import pyarrow.parquet  # noqa: F401
+
+    if gc.get_freeze_count() == 0:
+        gc.collect()
+    gc.freeze()
+
+
+def _build_partials(df, specs: dict, group_cols):
+    """`build_partials_multi` plus its task count: (DataFrame,
+    out_schema, number of reader tasks or None on the Spark-scan path)."""
     from pyspark import TaskContext
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StringType, StructField, StructType
 
     for name, spec in specs.items():
@@ -387,112 +704,65 @@ def build_partials_multi(df, specs: dict, group_cols=("source",)):
     groups = StructType([df.schema[c] for c in group_cols]
                         + [StructField("sketch", StringType())])
     out_schema = _schema_prefix(groups, groups.names) + PARTIAL_SCHEMA_TAIL
-    value_cols = sorted({s["value_col"] for s in specs.values()})
-    needed = group_cols + value_cols
-    hash_kinds = ("hll", "cms", "bloom", "theta", "mg", "cs")
+    needed = group_cols + sorted({s["value_col"] for s in specs.values()})
 
-    def acc(batches):
-        import pyarrow as pa
+    files = _file_scan(df, needed)
+    if files is None:
+        def scan(batches):
+            _freeze_worker_heap()
+            return _accumulate(batches, specs, groups,
+                               TaskContext.get().partitionId())
 
-        gc.freeze()   # worker heap: see the module docstring
-        pid = TaskContext.get().partitionId()
-        states: dict[tuple, list] = {}  # (group…, name, kind, pid) → [st, n]
+        return (df.select(*needed).mapInArrow(scan, out_schema), out_schema,
+                None)
 
-        def state_for(gkey, name):
-            kind = specs[name]["kind"]
-            key = gkey + (name, kind, pid)
-            cur = states.get(key)
-            if cur is None:
-                cur = states[key] = [registry.make(
-                    kind, **specs[name].get("params") or {}), 0]
-            return cur
+    spark = df.sparkSession
+    bins = _file_bins(spark, files)
+    types = {c: to_arrow_type(df.schema[c].dataType) for c in needed}
+    batch_rows = int(spark.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch"))
 
-        for batch in batches:
-            codes, mapping = _batch_columns(batch, group_cols)
-            present = sorted(mapping)
-            single = len(present) == 1
-            col_cache = {}
-            for vc in value_cols:
-                col = batch.column(vc)
-                if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-                    flat, lens = _flatten_list_column(col)
-                    # single-group batches (source-partitioned tables) skip
-                    # the per-token group-id expansion entirely — half the
-                    # memory traffic of the scan hot loop
-                    tg = None if single else np.repeat(codes, lens)
-                    col_cache[vc] = (flat, tg, lens)
-                else:
-                    col_cache[vc] = (col.to_numpy(zero_copy_only=False),
-                                     None if single else codes, None)
-            stats_cache = {}
-            for name, spec in specs.items():
-                vc, kind = spec["value_col"], spec["kind"]
-                flat, tg, lens = col_cache[vc]
-                if kind in hash_kinds:
-                    if flat.dtype.kind == "f":
-                        # nullable integer scalar columns arrive as float
-                        # (+NaN) from Arrow: drop nulls, restore int64
-                        mask = ~np.isnan(flat)
-                        flat = flat[mask].astype(np.int64)
-                        if tg is not None:
-                            tg = tg[mask]
-                    if vc not in stats_cache:
-                        if single and flat.size == 0:
-                            # no tokens → no state, as in the grouped and
-                            # numeric branches
-                            stats_cache[vc] = {}
-                        elif single:
-                            uniq, ucounts = _unique_counts(flat)
-                            h = hash64(uniq.astype(np.uint64, copy=False))
-                            stats_cache[vc] = {present[0]: (
-                                ucounts, h, int(flat.size),
-                                uniq.astype(np.int64))}
-                        else:
-                            stats_cache[vc] = _grouped_token_stats(
-                                flat, tg, present)
-                    for g, (gcounts, h, n_raw, toks) \
-                            in stats_cache[vc].items():
-                        cur = state_for(mapping[g], name)
-                        st = cur[0]
-                        if kind in ("cms", "cs"):
-                            st.update_hashes(h, counts=gcounts)
-                        elif kind == "mg":
-                            st.update(toks, gcounts)
-                        elif kind == "bloom":
-                            st.update_hashes(h, assume_unique=True,
-                                             n_raw=n_raw)
-                        else:  # hll / theta
-                            st.update_hashes(h, assume_unique=True)
-                        cur[1] += n_raw
-                else:  # numeric kinds: one value (fd: one vector) per row
-                    if kind == "fd":
-                        vals, keep = _vector_rows(flat, lens,
-                                                  spec["params"]["d"])
-                        gids = None if single else codes[keep]
-                    else:
-                        vals, gids = flat.astype(np.float64), tg
-                    for g in present:
-                        sel = vals if single else vals[gids == g]
-                        if sel.ndim == 1:
-                            sel = sel[~np.isnan(sel)]
-                        if sel.shape[0] == 0:
-                            continue
-                        cur = state_for(mapping[g], name)
-                        cur[0].update(sel)
-                        cur[1] += sel.shape[0]
+    def read_files(batches):
+        _freeze_worker_heap()
+        mine = [f for b in batches for i in b.column(0).to_pylist()
+                for f in bins[i]]
+        return _accumulate(_read_parquet(mine, needed, types, batch_rows),
+                           specs, groups, TaskContext.get().partitionId())
 
-        if states:
-            yield _blob_batch(groups, states)
+    n = len(bins)
+    return (spark.range(0, n, 1, n).mapInArrow(read_files, out_schema),
+            out_schema, n)
 
-    return df.select(*needed).mapInArrow(acc, out_schema), out_schema
+
+def build_partials_multi(df, specs: dict, group_cols=("source",)):
+    """One scan, many sketches: per (partition × group × spec) partial state.
+
+    `specs`: {name: {"kind": str, "value_col": str, "params": dict}}.
+    Returns (DataFrame, out_schema) with columns group..., sketch (spec
+    name), sketch_type, state, n_items, part_id. One pass reads each
+    input row once no matter how many sketches are built — at 100 TB the
+    scan dominates, so N sketches for the price of one. Token arrays stay
+    in Arrow's flat values buffer (zero-copy into numpy: no per-row
+    object allocation), and one packed-key sort per batch serves every
+    hash sketch of a column across all groups. An fd spec reads its list
+    column as an (n, params["d"]) matrix; its n_items counts vectors.
+
+    A bare parquet scan of local files (`_file_scan`) is read by the
+    Python tasks themselves, one bin of whole files per task
+    (`_file_bins`); any other input is read by Spark and handed over as
+    Arrow. Both tasks run the one body, `_accumulate`.
+    """
+    partials, out_schema, _n = _build_partials(df, specs, group_cols)
+    return partials, out_schema
 
 
 def multi_sketch_agg(df, specs: dict, group_cols=("source",),
                      n_parts: int | None = None):
     """End-to-end single-scan multi-sketch build: partials → tree merge →
-    one blob row per (group × spec). `n_parts` defaults to the default
-    parallelism: one merge round up to FANIN partitions."""
+    one blob row per (group × spec). `n_parts` defaults to the reader's
+    task count, else the default parallelism: one merge round up to
+    FANIN partitions."""
+    partials, _schema, n_tasks = _build_partials(df, specs, group_cols)
     if n_parts is None:
-        n_parts = df.sparkSession.sparkContext.defaultParallelism
-    partials, _schema = build_partials_multi(df, specs, group_cols)
+        n_parts = n_tasks or df.sparkSession.sparkContext.defaultParallelism
     return tree_merge(partials, n_parts=n_parts)

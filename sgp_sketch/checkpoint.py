@@ -203,12 +203,15 @@ def _previous_slices(spark, ckpt_dir: str, files_per_slice: int) -> list:
     return [lin for lin in lineages if lin and lin.get("files")]
 
 
-def slice_complete(spark, ckpt_dir: str, sl: dict, expect: dict) -> bool:
+def slice_complete(spark, ckpt_dir: str, sl: dict, expect: dict,
+                   lineage: dict | None = None) -> bool:
     """True iff the slice's checkpoint exists AND was built under the same
     configuration. `expect` maps lineage keys (specs, group_cols) to
     required values — a resumed build with a changed sketch kind/params
-    must not reuse stale blobs."""
-    lin = _read_json(spark, _lineage_path(ckpt_dir, sl["slice_id"]))
+    must not reuse stale blobs. `lineage` is the slice's lineage when the
+    caller already read it (the plan did), else it is read here."""
+    lin = lineage or _read_json(spark, _lineage_path(ckpt_dir,
+                                                     sl["slice_id"]))
     if lin is None or any(lin.get(k) != v for k, v in expect.items()):
         return False
     return (lin.get("version") == _LINEAGE_VERSION
@@ -292,12 +295,15 @@ def build_checkpointed_multi(spark, input_path: str, specs: dict,
     # basePath (hive-partition recovery) is only legal for directory inputs
     fs, p = _fs_path(spark, input_path)
     base = input_path if not fs.isFile(p) else None
-    slices = plan_slices(files, files_per_slice,
-                         _previous_slices(spark, ckpt_dir, files_per_slice))
+    previous = _previous_slices(spark, ckpt_dir, files_per_slice)
+    slices = plan_slices(files, files_per_slice, previous)
+    # the plan read each kept slice's lineage: the skip check reuses it
+    planned = {lin["slice_id"]: lin for lin in previous}
     expect = {"specs": _spec_record(specs), "group_cols": list(group_cols)}
     skipped, built = [], []
     for sl in slices:
-        if slice_complete(spark, ckpt_dir, sl, expect=expect):
+        if slice_complete(spark, ckpt_dir, sl, expect=expect,
+                          lineage=planned.get(sl["slice_id"])):
             skipped.append(sl["slice_id"])
             continue
         build_slice_multi(spark, sl, specs, group_cols, ckpt_dir,

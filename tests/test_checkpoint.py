@@ -61,6 +61,30 @@ def test_resume_skips_completed_slices(spark, multi_file_input, tmp_path):
     assert final == direct
 
 
+def test_resume_reads_each_lineage_once(spark, multi_file_input, tmp_path,
+                                        monkeypatch):
+    """A resume plans from the kept slices' lineages and decides their
+    skips from the same reads: N kept slices cost N lineage reads."""
+    ckpt = str(tmp_path / "ckpt")
+    m1 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
+        ckpt_dir=ckpt, files_per_slice=2)
+    real, reads = checkpoint._read_json, []
+
+    def counting(spark, path):
+        reads.append(path)
+        return real(spark, path)
+
+    monkeypatch.setattr(checkpoint, "_read_json", counting)
+    m2 = checkpoint.build_checkpointed_multi(
+        spark, multi_file_input, HLL12, ("source",),
+        ckpt_dir=ckpt, files_per_slice=2)
+    assert m2["built"] == [] and m2["skipped"] == m1["slice_ids"]
+    lineage_reads = [p for p in reads if p.endswith(".lineage.json")]
+    assert len(lineage_reads) == m1["n_slices"] >= 2, reads
+    assert len(set(lineage_reads)) == len(lineage_reads)
+
+
 def test_stale_lineage_invalidated(spark, multi_file_input, tmp_path):
     """A lineage whose recorded file list no longer matches the plan must
     not be reused."""

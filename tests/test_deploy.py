@@ -116,11 +116,13 @@ def test_python_workers_keep_unchanged_zip_directories(spark):
     assert [r.reads for r in rows] == [0]
 
 
-def test_library_tasks_freeze_the_worker_heap(spark, tokens_sdf):
+def test_library_tasks_freeze_the_worker_heap(spark, tokens_sdf, tmp_path):
     """After a build, a reused worker's long-lived heap sits in the
     collector's permanent generation, so the daemon's per-task
     `gc.collect()` walks only a task's own objects; the frozen set does
-    not grow from build to build."""
+    not grow from build to build. Each build runs all three task
+    functions: the Spark-scan task (a cached frame), the parquet reader
+    task (a bare parquet read) and the merge task."""
     import pyarrow as pa
 
     from sgp_sketch import agg
@@ -129,9 +131,16 @@ def test_library_tasks_freeze_the_worker_heap(spark, tokens_sdf):
                      "params": {"p": 10}},
              "cms": {"kind": "cms", "value_col": "tokens",
                      "params": {"width": 1 << 10}}}
+    path = str(tmp_path / "tokens")
+    tokens_sdf.write.parquet(path)
+    files = spark.read.parquet(path)
+    parts, _schema = agg.build_partials_multi(files, specs)
+    assert "FileScan" not in \
+        parts._jdf.queryExecution().executedPlan().toString()
 
     def build():
         agg.multi_sketch_agg(tokens_sdf, specs).collect()
+        agg.multi_sketch_agg(files, specs).collect()
 
     def probe(batches):
         import gc

@@ -240,6 +240,41 @@ def test_heavy_hitters_plan_is_one_merge_and_runs_no_job(spark,
     assert jobs == [], jobs
 
 
+def test_parquet_build_reads_files_in_its_tasks(spark, tokens_sdf,
+                                                tmp_path):
+    """multi_sketch_agg over a bare parquet read: no FileScan (the Python
+    tasks read the files), no Spark job while the plan is built, and one
+    Arrow merge round. A filtered read keeps Spark's scan and its
+    partition pruning."""
+    from pyspark.sql import functions as F
+
+    from sgp_sketch import agg
+
+    path = str(tmp_path / "tokens")
+    tokens_sdf.write.partitionBy("source").parquet(path)
+    df = spark.read.parquet(path)   # schema inference may run a job
+    specs = agg.single_spec("hll", "tokens", {"p": 12})
+    sc = spark.sparkContext
+    group = "parquet_build_plan"
+    sc.setJobGroup(group, "plan only")
+    try:
+        out = agg.multi_sketch_agg(df, specs)
+        plan = _plan(out)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "FileScan" not in plan, plan
+    assert "MapInArrow read_files(" in plan, plan
+    assert jobs == [], jobs
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("MapInArrow merge(") == 1, optimized
+    filtered = _plan(agg.multi_sketch_agg(
+        df.filter(F.col("source") == "web"), specs))
+    scans = [ln for ln in filtered.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1 and "PartitionFilters: [isnotnull(source" \
+        in scans[0], filtered
+
+
 def test_two_hop_seeded_broadcasts_seeds(spark):
     """two_hop_seeded (the reference's per-seed traversal shape,
     PartitioningTwoHopTest.groovy:156): the 5-row seed list must

@@ -733,3 +733,219 @@ def test_finalizer_output_schemas(spark, tokens_sdf):
     ]
     for df, want in cases:
         assert df.schema.simpleString() == f"struct<{want}>"
+
+
+# ---------------------------------------------------------------------------
+# Builds over a bare parquet scan read the files in their own Python tasks
+# (agg._file_scan); a cached frame of the same files takes the Spark-scan
+# path, so the two give the same input rows through the two readers.
+
+READER_SPECS = {
+    "hll": {"kind": "hll", "value_col": "tokens", "params": {"p": 12}},
+    "bloom": {"kind": "bloom", "value_col": "tokens",
+              "params": {"n_blocks": 1 << 10}},
+    "theta": {"kind": "theta", "value_col": "tokens", "params": {"k": 256}},
+    "cs": {"kind": "cs", "value_col": "tokens", "params": {"width": 1 << 10}},
+    "dd": {"kind": "dd", "value_col": "n_tok", "params": {"alpha": 0.01}},
+    "moments": {"kind": "moments", "value_col": "n_tok", "params": {}},
+    "cms": {"kind": "cms", "value_col": "tokens",
+            "params": {"width": 1 << 10}},
+    "mg": {"kind": "mg", "value_col": "tokens", "params": {"k": 64}},
+    "kll": {"kind": "kll", "value_col": "n_tok", "params": {}},
+    "tdigest": {"kind": "tdigest", "value_col": "n_tok", "params": {}},
+    "fd": {"kind": "fd", "value_col": "vec", "params": {"d": 4, "ell": 2}},
+}
+BYTE_EQUAL_KINDS = ("hll", "bloom", "theta", "cs", "dd", "moments")
+
+
+def _vectors(pdf):
+    return np.stack([[len(t), t[0] % 7, t[-1] % 5, 1.0] for t in pdf.tokens]
+                    ).astype(np.float64)
+
+
+def _write_parquet(pdf, path, partition=True, columns=("doc_id", "tokens",
+                                                       "n_tok", "vec")):
+    """`pdf` rows as a pyarrow-written table: per-source directories
+    (`source=<s>/`, 3 files each) or 3 flat files carrying `source`."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def table(sub):
+        cols = {"doc_id": pa.array(sub.doc_id.tolist(), pa.string()),
+                "tokens": pa.array([t.tolist() for t in sub.tokens],
+                                   pa.list_(pa.int32())),
+                "n_tok": pa.array(sub.n_tok.tolist(), pa.int32()),
+                "vec": pa.array(list(_vectors(sub)),
+                                pa.list_(pa.float64()))}
+        out = {c: cols[c] for c in columns}
+        if not partition:
+            out["source"] = pa.array(sub.source.tolist(), pa.string())
+        return pa.table(out)
+
+    groups = pdf.groupby("source") if partition else [(None, pdf)]
+    for src, sub in groups:
+        d = os.path.join(path, f"source={src}") if partition else path
+        os.makedirs(d, exist_ok=True)
+        for i, part in enumerate(np.array_split(np.arange(len(sub)), 3)):
+            pq.write_table(table(sub.iloc[part]),
+                           os.path.join(d, f"part-{i:05d}.parquet"))
+
+
+@pytest.fixture(scope="module")
+def tokens_parquet(tokens_pdf, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("reader") / "tokens")
+    _write_parquet(tokens_pdf, path)
+    return path
+
+
+def _partials_plan(df, specs, group_cols=("source",)):
+    parts, _schema = agg.build_partials_multi(df, specs, group_cols)
+    return parts._jdf.queryExecution().executedPlan().toString()
+
+
+def _by_key(df, group_cols=("source",)):
+    return {tuple(r[c] for c in group_cols) + (r.sketch,):
+            (bytes(r.state), r.n_items) for r in df.collect()}
+
+
+def test_parquet_reader_matches_dataframe_path(spark, tokens_parquet,
+                                               tokens_pdf):
+    """Every kind built by the reader tasks: the order-independent kinds
+    are byte-equal to the Spark-scan build of the same files, the others
+    keep their bounds (cms never under-counts)."""
+    df = spark.read.parquet(tokens_parquet)
+    assert "FileScan" not in _partials_plan(df, READER_SPECS)
+    got = _by_key(agg.multi_sketch_agg(df, READER_SPECS))
+    # cached, the same files (a new read of them too) take the Spark scan
+    cached = spark.read.parquet(tokens_parquet).cache()
+    try:
+        assert "InMemoryTableScan" in _partials_plan(df, READER_SPECS)
+        want = _by_key(agg.multi_sketch_agg(cached, READER_SPECS))
+    finally:
+        cached.unpersist()
+    assert set(got) == set(want) == {(s, n) for s in SOURCES
+                                     for n in READER_SPECS}
+    for (src, name), (blob, n) in got.items():
+        kind = READER_SPECS[name]["kind"]
+        assert n == want[src, name][1], (src, name)
+        if kind in BYTE_EQUAL_KINDS:
+            assert blob == want[src, name][0], (src, name)
+            continue
+        sub = tokens_pdf[tokens_pdf.source == src]
+        flat = np.concatenate(sub.tokens.to_numpy())
+        uniq, counts = np.unique(flat, return_counts=True)
+        st = registry.from_bytes(blob)
+        if kind == "cms":
+            est = st.estimate(uniq)
+            assert (est >= counts).all(), src
+            assert (est - counts).max() <= np.e / (1 << 10) * flat.size
+        elif kind == "mg":
+            est = st.estimate(uniq)
+            assert (est <= counts).all() and \
+                (counts <= est + st.dec).all(), src
+        elif kind in ("kll", "tdigest"):
+            vals = np.sort(sub.n_tok.to_numpy().astype(float))
+            for q, v in zip((0.1, 0.5, 0.9), st.quantiles([0.1, 0.5, 0.9])):
+                rank = np.searchsorted(vals, v, side="right") / vals.size
+                assert abs(rank - q) <= 0.035, (kind, src, q)
+        else:  # fd: ||A'A - B'B||₂ within the tracked shed
+            a = _vectors(sub)
+            gap = np.linalg.norm(a.T @ a - st.gram(), 2)
+            assert gap <= st.error_bound * (1 + 1e-9) + 1e-6, src
+
+
+def test_parquet_reader_partition_values(spark, tmp_path):
+    """Hive partition values as Spark reads them: a null partition, an
+    escaped value, an int-typed column, two levels."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "parts")
+    dirs = {"g=a/d=1": range(0, 40), "g=a%3Db/d=2": range(20, 90),
+            "g=__HIVE_DEFAULT_PARTITION__/d=1": range(50, 60),
+            "g=a/d=07": range(100, 130)}
+    for d, toks in dirs.items():
+        os.makedirs(os.path.join(path, d))
+        pq.write_table(pa.table({"tokens": pa.array(
+            [list(toks)[i::3] for i in range(3)], pa.list_(pa.int64()))}),
+            os.path.join(path, d, "part-0.parquet"))
+    df = spark.read.parquet(path)
+    assert df.schema["d"].dataType.simpleString() == "int"
+    specs = {"hll": READER_SPECS["hll"], "theta": READER_SPECS["theta"]}
+    assert "FileScan" not in _partials_plan(df, specs, ("g", "d"))
+    got = _by_key(agg.multi_sketch_agg(df, specs, ("g", "d")), ("g", "d"))
+    cached = spark.read.parquet(path).cache()
+    try:
+        want = _by_key(agg.multi_sketch_agg(cached, specs, ("g", "d")),
+                       ("g", "d"))
+    finally:
+        cached.unpersist()
+    assert got == want
+    assert {k[:2] for k in got} == {("a", 1), ("a=b", 2), (None, 1),
+                                    ("a", 7)}
+    assert got["a", 7, "theta"][1] == 30
+
+
+def test_parquet_reader_file_edge_cases(spark, tokens_pdf, tmp_path):
+    """`_`- and `.`-prefixed files are not read, an empty file adds
+    nothing, and a file without a value column reads it as nulls, as
+    Spark does."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (ArrayType, IntegerType, StringType,
+                                   StructField, StructType)
+
+    path = str(tmp_path / "edges")
+    half = len(tokens_pdf) // 2
+    _write_parquet(tokens_pdf.iloc[:half], path, partition=False)
+    _write_parquet(tokens_pdf.iloc[half:], str(tmp_path / "no_ntok"),
+                   partition=False, columns=("doc_id", "tokens"))
+    os.rename(str(tmp_path / "no_ntok" / "part-00001.parquet"),
+              os.path.join(path, "part-10000.parquet"))
+    src = os.path.join(path, "part-00000.parquet")
+    for junk in ("_junk.parquet", ".junk.parquet"):
+        pq.write_table(pq.read_table(src), os.path.join(path, junk))
+    pq.write_table(pq.read_table(src).slice(0, 0),
+                   os.path.join(path, "part-20000.parquet"))
+    schema = StructType([
+        StructField("doc_id", StringType()),
+        StructField("tokens", ArrayType(IntegerType())),
+        StructField("n_tok", IntegerType()),
+        StructField("source", StringType())])
+    specs = {n: READER_SPECS[n] for n in ("hll", "bloom", "moments", "dd")}
+    df = spark.read.schema(schema).parquet(path)
+    assert "FileScan" not in _partials_plan(df, specs)
+    got = _by_key(agg.multi_sketch_agg(df, specs))
+    cached = spark.read.schema(schema).parquet(path).cache()
+    try:
+        want = _by_key(agg.multi_sketch_agg(cached, specs))
+        n_null = cached.filter("n_tok IS NULL").count()
+    finally:
+        cached.unpersist()
+    assert got == want
+    assert n_null > 0
+    # every n_tok of the first half, none of the file without the column
+    assert sum(n for (_s, name), (_b, n) in got.items()
+               if name == "moments") == half
+
+
+def test_filtered_and_prepared_inputs_keep_the_dataframe_path(
+        spark, tokens_parquet):
+    """A filter or a computed column (what `prepare=` adds) is Spark's to
+    evaluate: such builds keep the Spark scan, and a filtered build still
+    prunes partitions."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(tokens_parquet)
+    specs = {"hll": READER_SPECS["hll"]}
+    plan = _partials_plan(df.filter(F.col("source") == "web"), specs)
+    assert "FileScan" in plan and "PartitionFilters: [isnotnull(source" \
+        in plan, plan
+    prepared = df.withColumn("toks", F.slice("tokens", 1, 3))
+    plan = _partials_plan(prepared, agg.single_spec("hll", "toks"))
+    assert "FileScan" in plan, plan

@@ -75,11 +75,15 @@ def main():
                      "params": {"p": 12}}}
     section("multi_sketch_agg (the engine's full-scan path)",
             agg.multi_sketch_agg(df, specs, ("source",)),
-            "One MapInArrow scan produces KB-sized partials; every Exchange\n"
-            "after it moves blobs only, never input data. Each O(log P)\n"
-            "tree-merge round is one Exchange plus one `MapInArrow merge`\n"
-            "that folds each key's blobs as they arrive: no Sort, no\n"
-            "pandas.")
+            "No FileScan: over a bare parquet read, `Range` gives one row per\n"
+            "file bin and `MapInArrow read_files` reads each bin with\n"
+            "pyarrow.parquet in its Python task, so the JVM neither decodes\n"
+            "the input nor hands it over as Arrow. The tasks emit KB-sized\n"
+            "partials; every Exchange after them moves blobs only. Each\n"
+            "O(log P) tree-merge round is one Exchange plus one `MapInArrow\n"
+            "merge` that folds each key's blobs as they arrive: no Sort, no\n"
+            "pandas. A filtered or projected input keeps the FileScan (with\n"
+            "its PartitionFilters) and a `MapInArrow scan`.")
 
     from sgp_sketch.routing import assign_shards
     section("assign_shards (R2/R3 greedy routing)",
